@@ -245,19 +245,12 @@ PRIORITY: tuple[str, ...] = (
 # dict's third-element check encodes). Their REGISTERED_IN_ROUND
 # entries (tools/staleness_table.py) label them pending-first-row in
 # the staleness table; THESE entries front them in the ordering.
-# Round 13: the r12 optimization round rewrote the plans of six queries
-# the rotating 50-query oracle window did not sample (VERDICT r12 item
-# 2) — queue them so the r13 window attests the post-rewrite plans with
-# fresh FULL-oracle driver rows.  All nineteen r12 entries were
-# satisfied by green CORRECTNESS_r12 rows and pruned at round-13 start.
-FORCE_RECHECK: dict[str, int] = {
-    "corpus_dedup_rounds": 13,
-    "incremental_lsh_rounds": 13,
-    "pagerank_copurchase": 13,
-    "coorder_part_triangles": 13,
-    "softdedup_weights": 13,
-    "dedup_keep_best": 13,
-}
+# Round 13's six entries (plans the r12 optimization round rewrote
+# outside the rotating oracle window: corpus_dedup_rounds,
+# incremental_lsh_rounds, pagerank_copurchase, coorder_part_triangles,
+# softdedup_weights, dedup_keep_best) were all re-attested green in
+# CORRECTNESS_r13 and pruned at the next round's start.
+FORCE_RECHECK: dict[str, int] = {}
 
 
 def _effective_green(

@@ -7,15 +7,26 @@ from __future__ import annotations
 
 import glob
 import json
+import math
+import struct
+import sys
+from datetime import datetime
 
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from transit_feed_etl_spark.pipeline.geoparquet import (
     finalize_geo_metadata,
     read_wkb_points,
+    wkb_point,
     write_geoparquet,
+)
+from transit_feed_etl_spark.pipeline.gtfs import (
+    VEHICLE_POSITION_SCHEMA,
+    compact_partitions,
+    with_time_partitions,
 )
 
 
@@ -74,6 +85,76 @@ def test_finalize_is_idempotent(positions, tmp_path):
     root = str(tmp_path / "geo2")
     write_geoparquet(positions.coalesce(1), root, mode="overwrite")
     assert finalize_geo_metadata(root) == 0  # already stamped -> no rewrite
+
+
+def test_finalize_skips_stamped_files_from_the_footer(positions, tmp_path, monkeypatch):
+    """The skip is decided from the footer: a stamped file's data is
+    never read, so a sink's per-batch footer pass does not grow with
+    the bytes already in it."""
+    root = str(tmp_path / "geo_skip")
+    write_geoparquet(positions.coalesce(1), root, mode="overwrite")
+
+    def no_table_reads(*_a, **_k):
+        raise AssertionError("read a stamped file's data")
+
+    monkeypatch.setattr(pq, "read_table", no_table_reads)
+    assert finalize_geo_metadata(root) == 0
+
+
+def test_wkb_point_bytes_match_struct_pack(spark):
+    """The JVM WKB expression is byte-identical to the OGC encoding
+    built with struct.pack("<dd"): signed zeros, subnormals, DBL_MAX
+    and infinities keep their exact bits; NaN or a NULL on either side
+    gives a NULL geometry."""
+    edge = [0.0, -0.0, 5e-324, -2.2250738585072014e-308, sys.float_info.max,
+            -sys.float_info.max, math.inf, -math.inf, 40.7, -74.0]
+    rows = [(x, y) for x in edge for y in edge]
+    rows += [(math.nan, 1.0), (1.0, math.nan), (None, 1.0), (1.0, None), (None, None)]
+    df = spark.createDataFrame(rows, "x double, y double")
+    got = df.select("x", "y", wkb_point("x", "y").alias("g")).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        x, y = r["x"], r["y"]
+        if x is None or y is None or math.isnan(x) or math.isnan(y):
+            assert r["g"] is None, (x, y)
+        else:
+            want = b"\x01\x01\x00\x00\x00" + struct.pack("<dd", x, y)
+            assert bytes(r["g"]) == want, (x, y)
+
+
+def test_spark_reads_finalized_partitioned_sink(spark, tmp_path):
+    """Stamping rewrites files in place; the Hadoop checksum files Spark
+    wrote beside them must not survive, or Spark's own reader (and the
+    compaction job on top of it) rejects the sink."""
+    rows = [
+        ("f", datetime(2024, 3, 1, h, m), f"v{h}{m}", 40.0 + m, -74.0 + h,
+         1.0, 0.0, None, None, None, None)
+        for h in (12, 13) for m in range(3)
+    ]
+    df = with_time_partitions(spark.createDataFrame(rows, VEHICLE_POSITION_SCHEMA))
+    root = str(tmp_path / "geo_sink")
+    parts = ("year", "month", "day", "hour")
+    write_geoparquet(df.repartition(2), root, partition_by=parts)
+    write_geoparquet(df.repartition(2), root, partition_by=parts)  # second batch
+    assert glob.glob(root + "/**/*.parquet", recursive=True)
+    assert not glob.glob(root + "/**/.*.parquet.crc", recursive=True)
+
+    back = spark.read.parquet(root)
+    assert back.count() == 2 * len(rows)
+    # the same instants, also to a reader in another session time zone
+    instants = {r[0] for r in df.select(F.unix_micros("ts")).collect()}
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        got = {r[0] for r in spark.read.parquet(root).select(F.unix_micros("ts")).collect()}
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert got == instants
+    assert back.filter("geometry IS NULL").count() == 0
+
+    compact_partitions(spark, root, target_files=1)
+    compacted = spark.read.parquet(root + "_compacted")
+    assert compacted.count() == 2 * len(rows)
 
 
 def test_partitioned_geoparquet_each_file_stamped(spark, tmp_path):

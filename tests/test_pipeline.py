@@ -192,6 +192,53 @@ def test_catalog_roundtrip_and_checks(spark, tmp_path):
     assert [r["vehicle_id"] for r in df.collect()] == ["a"]
 
 
+def test_check_not_empty_matches_the_three_queries(spark, tmp_path):
+    """check_not_empty answers from one catalog read what total_records,
+    recent_records and latest_file answer from three: same values on an
+    empty catalog and on a multi-batch catalog spanning hours."""
+    cat = FileCatalog(spark, str(tmp_path / "catalog"))
+
+    def parity(lookback):
+        got = cat.check_not_empty(lookback)
+        latest = cat.latest_file()
+        assert got["total_records"] == cat.total_records()
+        assert got["recent_records"] == cat.recent_records(lookback)
+        assert got["latest_file"] == (latest["file_path"] if latest else None)
+        return got
+
+    empty = parity(1)
+    assert empty == {
+        "passed": False, "total_records": 0, "recent_records": 0,
+        "latest_file": None, "latest_file_exists": False,
+    }
+
+    # batch 1 spans two hours; batch 3 repeats batch 2's latest ts in
+    # another sink, so only the batch_id tie-break picks the latest file
+    batches = {
+        1: [datetime(2024, 3, 1, 11, 10), datetime(2024, 3, 1, 12, 50)],
+        2: [datetime(2024, 3, 1, 13, 5), datetime(2024, 3, 1, 14, 0)],
+        3: [datetime(2024, 3, 1, 14, 0)],
+    }
+    for batch_id, stamps in batches.items():
+        df = with_time_partitions(
+            spark.createDataFrame(
+                [("f", t, f"v{i}", 40.0 + i, -74.0, None, None, None, None, None, None)
+                 for i, t in enumerate(stamps)],
+                VEHICLE_POSITION_SCHEMA,
+            )
+        )
+        root = str(tmp_path / ("other" if batch_id == 3 else "data"))
+        write_partitioned(df, root)
+        cat.append_batch_partitions(df, batch_id, root)
+        for lookback in (1, 2, 3):
+            got = parity(lookback)
+            assert got["passed"] and got["latest_file_exists"]
+    got = cat.check_not_empty(1)
+    assert got["recent_records"] == 3  # 13:05 and both 14:00 rows
+    assert got["total_records"] == 5
+    assert got["latest_file"].startswith(str(tmp_path / "other"))
+
+
 def test_compaction_bounds_files_per_partition(spark, tmp_path):
     """Small-files compaction (§4 scale requirement): many per-minute
     files collapse to <= target_files per hour partition, preserving

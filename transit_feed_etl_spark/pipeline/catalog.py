@@ -228,18 +228,31 @@ class FileCatalog:
 
     def check_not_empty(self, lookback_hours: int = 1) -> dict:
         """A21: the reference's asset check — total>0, recent>0, latest
-        file exists — returned as a metrics dict (A22 metadata parity)."""
-        total = self.total_records()
-        recent = self.recent_records(lookback_hours)
-        latest = self.latest_file()
-        latest_exists = latest is not None and os.path.exists(
-            _require_local(latest["file_path"])
-        )
+        file exists — returned as a metrics dict (A22 metadata parity).
+        Answers as `total_records` / `recent_records` / `latest_file` do,
+        from one catalog read: one aggregate, then the recent sum with
+        the MAX(ts) anchor as a literal (in microseconds: no tz round trip)."""
+        cat = self.read()
+        head = cat.agg(
+            F.coalesce(F.sum("record_count"), F.lit(0)).alias("total"),
+            F.unix_micros(F.max("ts")).alias("anchor_us"),
+            F.max_by("file_path", F.struct("ts", "batch_id")).alias("latest"),
+        ).collect()[0]
+        total, latest = head["total"], head["latest"]
+        recent = 0
+        if head["anchor_us"] is not None:
+            since = head["anchor_us"] - lookback_hours * 3_600_000_000
+            recent = (
+                cat.filter(F.col("ts") >= F.timestamp_micros(F.lit(since)))
+                .agg(F.coalesce(F.sum("record_count"), F.lit(0)).alias("recent"))
+                .collect()[0]["recent"]
+            )
+        latest_exists = latest is not None and os.path.exists(_require_local(latest))
         return {
             "passed": bool(total > 0 and recent > 0 and latest_exists),
             "total_records": int(total),
             "recent_records": int(recent),
-            "latest_file": latest["file_path"] if latest else None,
+            "latest_file": latest,
             "latest_file_exists": latest_exists,
         }
 

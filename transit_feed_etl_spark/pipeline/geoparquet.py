@@ -7,9 +7,9 @@ attach custom key-value metadata, so the sink here is two-phase:
 
 1. distributed write — `wkb_point` builds the 21-byte WKB point
    encoding (public OGC spec: byte-order 01, geom-type 1, x, y as
-   little-endian doubles) in an Arrow-vectorized pandas UDF; the frame
-   is written as ordinary partitioned parquet;
-2. footer finalize — `finalize_geo_metadata` rewrites each file's
+   little-endian doubles) as a JVM expression, so the write starts no
+   Python worker; the frame is written as ordinary partitioned parquet;
+2. footer finalize — `finalize_geo_metadata` rewrites each new file's
    footer with the GeoParquet 1.0.0 `geo` JSON (geoparquet.org spec):
    primary_column, WKB encoding, Point geometry type, per-file bbox
    computed from that file's own lon/lat stats, CRS PROJJSON for
@@ -18,7 +18,8 @@ attach custom key-value metadata, so the sink here is two-phase:
 The finalize step is a driver-side loop over footer rewrites — the
 same boundary as the reference's per-file catalog INSERT and our
 catalog append: per-minute batches write ONE file (A12), so the loop
-is O(1) per batch; the compaction job bounds total file count.
+rewrites O(1) files per batch and only reads the footers of the rest;
+the compaction job bounds total file count.
 """
 
 from __future__ import annotations
@@ -31,8 +32,6 @@ import struct
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 GEO_VERSION = "1.0.0"
 
@@ -63,26 +62,27 @@ CRS_PROJJSON = {
 }
 
 
-# BinaryType instance (not a "binary" DDL string): string return types
-# are parsed against the active session, which need not exist at import
-@pandas_udf(T.BinaryType())
-def _wkb_point_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    # WKB: 01 (little-endian) + 01000000 (Point) + x + y. NULL when
-    # either coordinate is missing (reference's None-geometry rows,
-    # gtfs_rt_assets.py:124-127).
-    out = []
-    for x, y in zip(lon, lat):
-        if pd.isna(x) or pd.isna(y):
-            out.append(None)
-        else:
-            out.append(b"\x01\x01\x00\x00\x00" + struct.pack("<dd", x, y))
-    return pd.Series(out)
+_WKB_POINT_HEADER = bytes.fromhex("0101000000")  # little-endian, Point
+
+
+def _le_double(x: Column) -> Column:
+    """The 8 little-endian IEEE-754 bytes of a double: its raw bits,
+    byte-swapped, as 16 zero-padded hex digits, unhexed."""
+    bits = F.reflect(F.lit("java.lang.Double"), F.lit("doubleToRawLongBits"), x)
+    swapped = F.reflect(F.lit("java.lang.Long"), F.lit("reverseBytes"), bits.cast("long"))
+    return F.unhex(F.lpad(F.hex(swapped.cast("long")), 16, "0"))
 
 
 def wkb_point(lon: Column | str, lat: Column | str) -> Column:
+    """WKB point: 01 (little-endian) + 01000000 (Point) + x + y. NULL
+    when either coordinate is NULL or NaN (the reference's None-geometry
+    rows, gtfs_rt_assets.py:124-127)."""
     lon = F.col(lon) if isinstance(lon, str) else lon
     lat = F.col(lat) if isinstance(lat, str) else lat
-    return _wkb_point_udf(lon, lat)
+    present = lon.isNotNull() & lat.isNotNull() & ~F.isnan(lon) & ~F.isnan(lat)
+    return F.when(
+        present, F.concat(F.lit(_WKB_POINT_HEADER), _le_double(lon), _le_double(lat))
+    )
 
 
 def geo_metadata(bbox: list[float] | None) -> dict:
@@ -123,20 +123,25 @@ def finalize_geo_metadata(
     root: str, lon_col: str = "longitude", lat_col: str = "latitude"
 ) -> int:
     """Stamp the GeoParquet `geo` metadata onto every parquet file under
-    root that doesn't have it yet; returns the number stamped. Per-file
-    bbox = min/max of that file's own coordinates (the reference's
-    gdf.total_bounds per file, gtfs_rt_assets.py:161-168); all-null
-    files get a bbox-less geo entry (reference's NULL-bbox fallback,
-    gtfs_rt_assets.py:169-170)."""
+    root that doesn't have it yet; returns the number stamped. The skip
+    reads only footers, so files stamped earlier cost one footer read.
+    Per-file bbox = min/max of that file's own coordinates (the
+    reference's gdf.total_bounds per file, gtfs_rt_assets.py:161-168);
+    all-null files get a bbox-less geo entry (reference's NULL-bbox
+    fallback, gtfs_rt_assets.py:169-170).
+
+    Spark must still read a rewritten file: Spark's INT96 timestamps are
+    read as microseconds (pyarrow's nanosecond default is written back
+    as INT64 nanos, which Spark rejects), and the stale `.<name>.crc`
+    checksum Hadoop keeps beside each file and verifies is removed."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     n = 0
     for path in glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True):
-        tbl = pq.read_table(path)
-        meta = dict(tbl.schema.metadata or {})
-        if b"geo" in meta:
+        if b"geo" in (pq.read_metadata(path).metadata or {}):
             continue
+        tbl = pq.read_table(path, coerce_int96_timestamp_unit="us")
         bbox = None
         if lon_col in tbl.column_names and lat_col in tbl.column_names:
             lo, la = tbl[lon_col], tbl[lat_col]
@@ -145,8 +150,13 @@ def finalize_geo_metadata(
                     pc.min(lo).as_py(), pc.min(la).as_py(),
                     pc.max(lo).as_py(), pc.max(la).as_py(),
                 ]
+        meta = dict(tbl.schema.metadata or {})
         meta[b"geo"] = json.dumps(geo_metadata(bbox)).encode()
         pq.write_table(tbl.replace_schema_metadata(meta), path)
+        head, name = os.path.split(path)
+        crc = os.path.join(head, f".{name}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
         n += 1
     return n
 

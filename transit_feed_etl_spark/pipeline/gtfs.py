@@ -151,12 +151,10 @@ def with_geometry(df: DataFrame) -> DataFrame:
     ).withColumn("crs", F.lit(CRS))
 
 
-def validate_positions(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """A8 quarantine pattern: split a batch into (good, quarantined).
-    Quarantine = coordinates present but outside WGS84 bounds. The
-    reference logs-and-drops failing feeds (gtfs_rt_assets.py:85-94);
-    at scale a side table preserves the evidence instead."""
-    bad = (
+def out_of_range() -> Column:
+    """A8 quarantine predicate: coordinates present but outside WGS84
+    bounds. Never NULL (NaN compares above every bound)."""
+    return (
         F.col("latitude").isNotNull()
         & F.col("longitude").isNotNull()
         & (
@@ -164,6 +162,14 @@ def validate_positions(df: DataFrame) -> tuple[DataFrame, DataFrame]:
             | (F.abs(F.col("longitude")) > 180.0)
         )
     )
+
+
+def validate_positions(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """A8 quarantine pattern: split a batch into (good, quarantined) on
+    `out_of_range`. The reference logs-and-drops failing feeds
+    (gtfs_rt_assets.py:85-94); at scale a side table preserves the
+    evidence instead."""
+    bad = out_of_range()
     return df.filter(~bad), df.filter(bad)
 
 

@@ -28,6 +28,7 @@ from transit_feed_etl_spark.pipeline.catalog import FileCatalog
 from transit_feed_etl_spark.pipeline.gtfs import (
     RAW_FEED_SCHEMA,
     flatten_feed,
+    out_of_range,
     validate_positions,
     with_geometry,
     with_time_partitions,
@@ -57,6 +58,11 @@ def make_batch_processor(
 ):
     """foreachBatch sink implementing A8/A10/A12/A14-A16/A21.
 
+    Each batch is flattened once into a cache that the good/bad counts
+    (one aggregate), the quarantine write, the sink write and the
+    catalog append all read. Quarantine comes before the empty-batch
+    guard, so a batch with no valid vehicle still keeps its evidence.
+
     ``geoparquet=True`` adds a WKB `geometry` column before the write
     and stamps the GeoParquet `geo` footer (per-file bbox, EPSG:4326)
     after it — full A12 GeoParquet parity in the live pipeline
@@ -65,15 +71,23 @@ def make_batch_processor(
     metrics = metrics if metrics is not None else IngestMetrics()
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        flat = with_geometry(flatten_feed(batch))
-        good, bad = validate_positions(flat)
-        good = with_time_partitions(good).cache()
+        flat = with_geometry(flatten_feed(batch)).cache()
         try:
-            n = good.count()
+            good, bad = validate_positions(flat)
+            is_bad = out_of_range()
+            counts = flat.agg(
+                F.count_if(~is_bad).alias("good"), F.count_if(is_bad).alias("bad")
+            ).collect()[0]
+            n, n_bad = counts["good"], counts["bad"]
             metrics.batches += 1
+            if n_bad:  # A8 quarantine instead of log-and-drop
+                metrics.quarantined += n_bad
+                if quarantine_root:
+                    bad.write.mode("append").parquet(quarantine_root)
             if n == 0:  # A10 empty-batch guard (gtfs_rt_assets.py:114-116)
                 metrics.empty_batches += 1
                 return
+            good = with_time_partitions(good)
             if geoparquet:
                 from transit_feed_etl_spark.pipeline.geoparquet import (
                     finalize_geo_metadata,
@@ -98,16 +112,10 @@ def make_batch_processor(
             # map correct when a catch-up batch spans hours).
             catalog.append_batch_partitions(good, batch_id, out_root)
             metrics.records += n
-
-            n_bad = bad.count()
-            if n_bad:  # A8 quarantine instead of log-and-drop
-                metrics.quarantined += n_bad
-                if quarantine_root:
-                    bad.write.mode("append").parquet(quarantine_root)
             if run_quality_check:  # A21 asset-check parity
                 metrics.checks.append(catalog.check_not_empty())
         finally:
-            good.unpersist()
+            flat.unpersist()
 
     return process, metrics
 
