@@ -178,3 +178,40 @@ def test_partitioned_geoparquet_each_file_stamped(spark, tmp_path):
     }
     # per-FILE bbox, not dataset bbox
     assert bboxes == {(1.0, 2.0, 1.0, 2.0), (3.0, 4.0, 3.0, 4.0)}
+
+
+def test_compaction_keeps_the_geo_footer(spark, tmp_path):
+    """Compacting a GeoParquet sink gives GeoParquet: every compacted
+    file carries the `geo` footer with its own bbox, and Spark still
+    reads the output. A plain sink compacts to plain parquet."""
+    rows = [
+        ("f", datetime(2024, 3, 1, h, m), f"v{h}{m}", 40.0 + m, -74.0 + h - 12,
+         1.0, 0.0, None, None, None, None)
+        for h in (12, 13) for m in range(4)
+    ]
+    df = with_time_partitions(spark.createDataFrame(rows, VEHICLE_POSITION_SCHEMA))
+    parts = ("year", "month", "day", "hour")
+    root = str(tmp_path / "geo_sink")
+    for m in range(4):  # one small file per minute and hour
+        write_geoparquet(df.filter(F.minute("ts") == m), root, partition_by=parts)
+    compact_partitions(spark, root, target_files=1)
+
+    files = glob.glob(root + "_compacted/**/*.parquet", recursive=True)
+    assert len(files) == 2
+    for f in files:
+        tbl = pq.read_table(f)
+        col = json.loads(tbl.schema.metadata[b"geo"])["columns"]["geometry"]
+        lon, lat = tbl["longitude"].to_pylist(), tbl["latitude"].to_pylist()
+        assert col["bbox"] == [min(lon), min(lat), max(lon), max(lat)]
+        assert len(lon) == 4
+    back = spark.read.parquet(root + "_compacted")
+    assert back.count() == len(rows)
+    assert back.filter("geometry IS NULL").count() == 0
+
+    plain = str(tmp_path / "plain_sink")
+    df.write.partitionBy(*parts).parquet(plain)
+    compact_partitions(spark, plain, target_files=1)
+    assert not any(
+        b"geo" in (pq.read_metadata(f).metadata or {})
+        for f in glob.glob(plain + "_compacted/**/*.parquet", recursive=True)
+    )

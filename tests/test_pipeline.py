@@ -4,7 +4,7 @@ flatten -> sink -> catalog -> quality checks)."""
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timezone
 
 import pytest
 
@@ -399,3 +399,137 @@ def test_existence_probe_rejects_nonlocal_uris(spark, tmp_path):
         cat.missing_files().collect()
     with pytest.raises(Exception, match="non-local URI"):
         cat.check_not_empty()
+
+
+def _us(t: datetime) -> int:
+    """Epoch microseconds of a naive UTC datetime."""
+    return int(t.replace(tzinfo=timezone.utc).timestamp()) * 1_000_000
+
+
+def _driver_row(file_path, t, n, bbox=(-74.0, 40.0, -73.0, 41.0)):
+    return dict(zip(
+        ("file_path", "ts_us", "record_count", "bbox_minx", "bbox_miny", "bbox_maxx", "bbox_maxy"),
+        (file_path, _us(t), n, *bbox),
+    ))
+
+
+def _check_parity(cat, lookbacks=(1, 2, 3)):
+    for lookback in lookbacks:
+        got = cat.check_not_empty(lookback)
+        latest = cat.latest_file()
+        assert got["total_records"] == cat.total_records()
+        assert got["recent_records"] == cat.recent_records(lookback)
+        assert got["latest_file"] == (latest["file_path"] if latest else None)
+
+
+def test_mixed_spark_and_driver_catalog_agree(spark, tmp_path):
+    """A catalog holding files Spark wrote (INT96 ts, the earlier write
+    path) and files `commit_rows` wrote (INT64 UTC microseconds) reads
+    back the same instants in `read()`, and the driver-side check agrees
+    with the three Spark queries on it."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from transit_feed_etl_spark.pipeline.catalog import CATALOG_SCHEMA
+
+    path = str(tmp_path / "catalog")
+    parts = {h: tmp_path / "data" / f"hour={h}" for h in (11, 12, 13)}
+    for p in parts.values():
+        p.mkdir(parents=True)
+    t = lambda h, m: datetime(2024, 3, 1, h, m)  # noqa: E731
+    made = t(14, 0)
+    spark.createDataFrame(
+        [
+            (1, str(parts[11]), t(11, 50), 2, made, -74.0, 40.0, -73.5, 40.5),
+            (2, str(parts[12]), t(12, 30), 3, made, None, None, None, None),
+        ],
+        CATALOG_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(path)
+    (spark_file,) = glob.glob(path + "/*.parquet")
+    ts_col = pq.ParquetFile(spark_file).schema.column(2)
+    assert (ts_col.name, ts_col.physical_type) == ("ts", "INT96")
+
+    cat = FileCatalog(spark, path)
+    # batch 3 ties batch 2's ts: the batch_id tie-break picks hour 13
+    cat.commit_rows(3, [_driver_row(str(parts[13]), t(12, 30), 4)])
+    cat.commit_rows(4, [_driver_row(str(parts[11]), t(11, 0), 1, (None,) * 4)])
+
+    got = sorted(
+        tuple(r)
+        for r in cat.read()
+        .select("batch_id", "file_path", F.unix_micros("ts"), "record_count",
+                "bbox_minx", "bbox_miny", "bbox_maxx", "bbox_maxy")
+        .collect()
+    )
+    assert got == [
+        (1, str(parts[11]), _us(t(11, 50)), 2, -74.0, 40.0, -73.5, 40.5),
+        (2, str(parts[12]), _us(t(12, 30)), 3, None, None, None, None),
+        (3, str(parts[13]), _us(t(12, 30)), 4, -74.0, 40.0, -73.0, 41.0),
+        (4, str(parts[11]), _us(t(11, 0)), 1, None, None, None, None),
+    ]
+    _check_parity(cat)
+    check = cat.check_not_empty(1)
+    assert (check["total_records"], check["recent_records"]) == (10, 9)
+    assert check["latest_file"] == str(parts[13]) and check["passed"]
+
+
+def test_check_reads_only_files_it_has_not_seen(spark, tmp_path, monkeypatch):
+    """Catalog files are immutable, so a check reads each file once per
+    catalog instance: after one commit the next check reads that one
+    file. A fresh instance (a restarted query) reads them all and gives
+    the same answer."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "catalog")
+    data = tmp_path / "data"
+    data.mkdir()
+    cat = FileCatalog(spark, path)
+    for b in range(3):
+        cat.commit_rows(b, [_driver_row(str(data), datetime(2024, 3, 1, 12, b), 1)])
+
+    reads = []
+    real = pq.read_table
+
+    def counting(src, *a, **k):
+        reads.append(src)
+        return real(src, *a, **k)
+
+    monkeypatch.setattr(pq, "read_table", counting)
+
+    def reads_of(check):
+        reads.clear()
+        out = check()
+        return out, len(reads)
+
+    first, n = reads_of(cat.check_not_empty)
+    assert n == 3 and first["total_records"] == 3
+    assert reads_of(cat.check_not_empty) == (first, 0)
+    cat.commit_rows(3, [_driver_row(str(data), datetime(2024, 3, 1, 12, 3), 5)])
+    second, n = reads_of(cat.check_not_empty)
+    assert n == 1 and second["total_records"] == 8 and second["passed"]
+    assert reads_of(FileCatalog(spark, path).check_not_empty) == (second, 4)
+    monkeypatch.undo()
+    _check_parity(cat, (1,))
+
+
+def test_leftover_temp_file_is_ignored(spark, tmp_path):
+    """A commit that died before its rename leaves a hidden temp file;
+    neither `read()` nor the check counts it."""
+    path = tmp_path / "catalog"
+    data = tmp_path / "data"
+    data.mkdir()
+    cat = FileCatalog(spark, str(path))
+    cat.commit_rows(0, [_driver_row(str(data), datetime(2024, 3, 1, 12, 0), 2)])
+    (committed,) = path.iterdir()
+    # a whole file under the temp name, and a torn one
+    (path / f".{committed.name}.tmp").write_bytes(committed.read_bytes())
+    (path / ".part-00001-torn.parquet.tmp").write_bytes(committed.read_bytes()[:20])
+
+    assert cat.read().count() == 1
+    assert cat.check_not_empty()["total_records"] == 2
+    assert FileCatalog(spark, str(path)).check_not_empty()["total_records"] == 2
+    _check_parity(cat, (1,))
+
+    committed.unlink()  # only temp files left: an empty catalog
+    assert cat.read().count() == 0
+    assert not cat.check_not_empty()["passed"]

@@ -123,11 +123,14 @@ def test_all_bad_batch_is_still_quarantined(spark, tmp_path):
     assert [r["vehicle_id"] for r in quar] == ["bad"]
 
 
-# Spark jobs one GeoParquet tick with a quarantined row launches:
-# flatten cache + good/bad counts, quarantine write, sink write, catalog
-# append, quality check. Measured in fresh sessions at local[1], local[4]
-# and local[8]; the same at each, so the budget carries no margin.
-TICK_JOB_BUDGET = 12
+# Spark jobs one GeoParquet tick with a quarantined row launches: the
+# per-hour good/bad aggregate (3: the flatten cache, the shuffle map
+# stage, the collect), the quarantine write (1) and the sink write (2:
+# its repartition's map stage, the write). The catalog commit and the
+# quality check run on the driver and launch none. Measured in fresh
+# sessions at local[1], local[4] and local[8]; the same at each, so the
+# budget carries no margin.
+TICK_JOB_BUDGET = 6
 
 
 def test_ingest_tick_job_count_stays_on_budget(spark, tmp_path):
@@ -162,6 +165,134 @@ def test_ingest_tick_job_count_stays_on_budget(spark, tmp_path):
     assert (metrics.records, metrics.quarantined) == (4, 2)
     assert all(c["passed"] for c in metrics.checks)
     assert jobs == [TICK_JOB_BUDGET] * 2, jobs
+
+
+def _multi_feed_batch(spark, tmp_path, name, feeds):
+    """One raw batch holding several spool files: (fetch ts, entities)."""
+    from transit_feed_etl_spark.pipeline.gtfs import RAW_FEED_SCHEMA
+
+    d = tmp_path / name
+    d.mkdir()
+    for i, (ts_iso, entities) in enumerate(feeds):
+        _spool_file(d / f"f{i}.json", "mta", ts_iso, entities)
+    return spark.read.schema(RAW_FEED_SCHEMA).json(str(d))
+
+
+def test_tick_catalog_rows_equal_append_batch_partitions(spark, tmp_path):
+    """The tick takes its catalog rows from its per-hour good/bad
+    aggregate; they equal the rows `append_batch_partitions` writes for
+    the batch's good rows. The batch spans two hours, and a third hour
+    holding only out-of-range rows gets no catalog row."""
+    from transit_feed_etl_spark.pipeline.catalog import FileCatalog
+    from transit_feed_etl_spark.pipeline.gtfs import (
+        flatten_feed,
+        validate_positions,
+        with_geometry,
+        with_time_partitions,
+    )
+    from transit_feed_etl_spark.streaming.ingest import make_batch_processor
+
+    batch = _multi_feed_batch(spark, tmp_path, "b", [
+        ("2024-03-01T11:59:00", [
+            _vehicle_entity("v1", 40.7, -74.0),
+            _vehicle_entity("v2", 40.6, -73.8),
+            _vehicle_entity("bad1", 99.0, -500.0),
+        ]),
+        ("2024-03-01T12:00:30", [
+            _vehicle_entity("v3", 40.9, -73.5),
+            _vehicle_entity("v4", None, None),  # valid, no position
+        ]),
+        ("2024-03-01T13:10:00", [_vehicle_entity("bad2", 95.0, -74.0)]),
+    ])
+    out = str(tmp_path / "out")
+    tick_cat = FileCatalog(spark, str(tmp_path / "tick_catalog"))
+    process, metrics = make_batch_processor(out, tick_cat, str(tmp_path / "quarantine"))
+    process(batch, 7)
+    assert (metrics.records, metrics.quarantined) == (4, 2)
+
+    ref_cat = FileCatalog(spark, str(tmp_path / "ref_catalog"))
+    good = validate_positions(with_geometry(flatten_feed(batch)))[0]
+    ref_cat.append_batch_partitions(with_time_partitions(good), 7, out)
+
+    def rows(cat):
+        return sorted(
+            tuple(r)
+            for r in cat.read()
+            .select("batch_id", "file_path", F.unix_micros("ts"), "record_count",
+                    "bbox_minx", "bbox_miny", "bbox_maxx", "bbox_maxy")
+            .collect()
+        )
+
+    got = rows(tick_cat)
+    assert got == rows(ref_cat)
+    hour = lambda h: f"{out}/year=2024/month=3/day=1/hour={h}"  # noqa: E731
+    us = lambda iso: int(datetime.fromisoformat(iso + "+00:00").timestamp()) * 10**6  # noqa: E731
+    assert got == [
+        (7, hour(11), us("2024-03-01T11:59:00"), 2, -74.0, 40.6, -73.8, 40.7),
+        (7, hour(12), us("2024-03-01T12:00:30"), 2, -73.5, 40.9, -73.5, 40.9),
+    ]
+
+
+def test_tick_footer_pass_skips_untouched_hours(spark, tmp_path, monkeypatch):
+    """A GeoParquet tick stamps footers only in the hour partitions it
+    wrote: a finalized file in another hour is not opened again, and
+    neither is a file a crashed batch left unstamped until a replay
+    writes that hour again."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from transit_feed_etl_spark.pipeline.catalog import FileCatalog
+    from transit_feed_etl_spark.pipeline.geoparquet import wkb_point
+    from transit_feed_etl_spark.pipeline.gtfs import (
+        flatten_feed,
+        with_time_partitions,
+        write_partitioned,
+    )
+    from transit_feed_etl_spark.streaming.ingest import make_batch_processor
+
+    out = str(tmp_path / "out")
+    catalog = FileCatalog(spark, str(tmp_path / "catalog"))
+    process, _ = make_batch_processor(out, catalog, geoparquet=True)
+    hour = lambda h: f"{out}/year=2024/month=3/day=1/hour={h}"  # noqa: E731
+
+    def stamped(h):
+        return [
+            b"geo" in (pq.read_metadata(f).metadata or {})
+            for f in sorted(glob.glob(hour(h) + "/*.parquet"))
+        ]
+
+    def tick(k, ts_iso):
+        return _feed_batch(spark, tmp_path, f"b{k}", ts_iso, [_vehicle_entity(f"v{k}", 40.7, -74.0)])
+
+    process(tick(0, "2024-03-01T12:00:00"), 0)
+    # a batch that crashed between its sink write and its footer pass
+    crashed = tick(1, "2024-03-01T14:00:00")
+    write_partitioned(
+        with_time_partitions(flatten_feed(crashed)).withColumn(
+            "geometry", wkb_point("longitude", "latitude")
+        ),
+        out,
+    )
+    assert (stamped(12), stamped(14)) == ([True], [False])
+
+    opened = []
+    for name in ("read_metadata", "read_table"):
+        real = getattr(pq, name)
+
+        def spy(src, *a, _real=real, **k):
+            if str(src).startswith(out):
+                opened.append(str(src))
+            return _real(src, *a, **k)
+
+        monkeypatch.setattr(pq, name, spy)
+    process(tick(2, "2024-03-01T13:00:00"), 2)
+    assert opened and all(p.startswith(hour(13) + "/") for p in opened), opened
+    monkeypatch.undo()
+    assert (stamped(12), stamped(13), stamped(14)) == ([True], [True], [False])
+
+    process(crashed, 1)  # the replay
+    assert stamped(14) == [True, True]
 
 
 def test_ingest_cadence_processing_time_trigger(spark, tmp_path):

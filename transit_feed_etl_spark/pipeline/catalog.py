@@ -1,7 +1,17 @@
 """File-metadata catalog (SURVEY.md §2 A13-A21): the Spark equivalent of
 the reference's SQLite `geoparquet_files` table (reference
-gtfs_rt_assets.py:146-190) — one metadata row per written batch with
-record count and bounding box, kept as an append-only parquet table.
+gtfs_rt_assets.py:146-190) — one metadata row per written file or hour
+partition with record count, latest `ts` and bounding box, kept as an
+append-only directory of small parquet files.
+
+Like the reference's INSERT, a batch's rows are committed from the
+driver (`FileCatalog.commit_rows`): pyarrow writes one file under a
+hidden temp name and renames it into place, so no Spark job runs and
+a reader sees all of a commit or none of it. The quality check
+(`check_not_empty`) also runs on the driver: catalog files are
+immutable, so an instance reads each file once and a live tick's check
+reads only the file the last commit added. The catalog stays a plain
+parquet table that `read()` hands to Spark for the other queries.
 
 The bbox columns act as a coarse spatial zone map: `prune_files` turns a
 query bbox into the subset of file paths whose bbox intersects it, and
@@ -16,19 +26,24 @@ from __future__ import annotations
 
 import os
 import re
-from dataclasses import dataclass
+import uuid
+from dataclasses import dataclass, field
+from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # Schemes the os.path existence probes can answer truthfully.  On a
 # cluster whose catalog stores s3://... or hdfs://... URIs, a local
 # os.path.exists silently returns False for EVERY file, so
 # missing_files/check_not_empty would report the whole catalog missing
-# instead of failing (VERDICT r4 "What's wrong" #2).  Fail loudly and
-# point at the fix; routing through the Hadoop FileSystem API is the
-# cluster-side extension seam.
+# instead of failing.  Fail loudly and point at the fix; routing through
+# the Hadoop FileSystem API is the cluster-side extension seam.
 _LOCAL_SCHEME_RE = re.compile(r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://")
 
 
@@ -39,7 +54,7 @@ def _require_local(path: str) -> str:
     path portion so os.path works (Hadoop/Spark emit percent-encoded
     URIs for paths with spaces or special chars: ``file:///a%20b`` must
     stat ``/a b``, not the encoded string, or the file silently reads as
-    missing — ADVICE r5); anything else (s3://, hdfs://, abfss://,
+    missing); anything else (s3://, hdfs://, abfss://,
     gs://, ...) cannot be stat'ed with os.path and must not silently
     read as 'missing'.
     """
@@ -87,47 +102,107 @@ CATALOG_SCHEMA = T.StructType(
 )
 
 
+_ARROW_SCHEMA = to_arrow_schema(CATALOG_SCHEMA)  # timestamps: us, UTC
+# what check_not_empty reads of each file; Spark's INT96 and pyarrow's
+# UTC INT64 timestamps both cast to epoch microseconds
+_CHECK_SCHEMA = pa.schema(
+    [("ts", pa.int64()), ("batch_id", pa.int64()),
+     ("record_count", pa.int64()), ("file_path", pa.string())]
+)
+
+
+def catalog_aggs(keep: Column | None = None) -> list[Column]:
+    """A14-A16 aggregates of one catalog row over the rows `keep` selects
+    (all rows when None): record count, bbox (MIN/MAX over lon/lat —
+    gdf.total_bounds parity, reference gtfs_rt_assets.py:161-168; NULL
+    when no valid geometry, :169-170) and the latest `ts` as exact
+    microseconds since the epoch (`ts_us`)."""
+    keep = F.lit(True) if keep is None else keep
+
+    def kept(c: str) -> Column:
+        return F.when(keep, F.col(c))
+
+    return [
+        F.count_if(keep).alias("record_count"),
+        F.min(kept("longitude")).alias("bbox_minx"),
+        F.min(kept("latitude")).alias("bbox_miny"),
+        F.max(kept("longitude")).alias("bbox_maxx"),
+        F.max(kept("latitude")).alias("bbox_maxy"),
+        F.unix_micros(F.max(kept("ts"))).alias("ts_us"),
+    ]
+
+
+def partition_rows(out_root: str, groups) -> list[dict]:
+    """Catalog rows of the hour groups (rows of `catalog_aggs` grouped by
+    year/month/day/hour) that hold records; each row's file_path is its
+    hour partition's directory under `out_root`."""
+    return [
+        {
+            **g.asDict(),
+            "file_path": f"{out_root}/year={g['year']}/month={g['month']}"
+            f"/day={g['day']}/hour={g['hour']}",
+        }
+        for g in groups
+        if g["record_count"]
+    ]
+
+
 @dataclass
 class FileCatalog:
     spark: SparkSession
     path: str
+    # check columns of each catalog file read so far:
+    # path -> ((size, mtime_ns), table)
+    _seen: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
-    def _exists(self) -> bool:
-        return os.path.exists(self.path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(self.path) for f in fs
-        )
+    def _files(self) -> list[os.DirEntry]:
+        """The committed catalog files. Hidden and `_`-prefixed names
+        (temp files, Spark's `_SUCCESS`) are skipped, as Spark skips them."""
+        if not os.path.isdir(self.path):
+            return []
+        return [
+            e
+            for e in os.scandir(self.path)
+            if e.name.endswith(".parquet") and not e.name.startswith((".", "_"))
+        ]
 
     def read(self) -> DataFrame:
         """A13: the catalog table (empty frame with the DDL schema when
         nothing has been written — CREATE TABLE IF NOT EXISTS parity)."""
-        if self._exists():
+        if self._files():
             return self.spark.read.schema(CATALOG_SCHEMA).parquet(self.path)
         return self.spark.createDataFrame([], CATALOG_SCHEMA)
 
-    def append_batch(self, batch: DataFrame, batch_id: int, file_path: str) -> None:
-        """A14+A15+A16: compute the batch's bbox (MIN/MAX over lon/lat —
-        gdf.total_bounds parity, reference gtfs_rt_assets.py:161-168;
-        NULL bbox when no valid geometry, :169-170) + record count, and
-        append one metadata row. One tiny aggregate job per batch."""
-        row = batch.agg(
-            F.count(F.lit(1)).alias("record_count"),
-            F.min("longitude").alias("bbox_minx"),
-            F.min("latitude").alias("bbox_miny"),
-            F.max("longitude").alias("bbox_maxx"),
-            F.max("latitude").alias("bbox_maxy"),
-            F.max("ts").alias("ts"),
-        ).select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            F.lit(file_path).alias("file_path"),
-            F.coalesce(F.col("ts"), F.current_timestamp()).alias("ts"),
-            F.col("record_count").cast("long"),
-            F.current_timestamp().alias("created_at"),
-            "bbox_minx",
-            "bbox_miny",
-            "bbox_maxx",
-            "bbox_maxy",
+    def commit_rows(self, batch_id: int, rows: list[dict]) -> None:
+        """Append a batch's catalog rows as one parquet file, written on the
+        driver with pyarrow: no Spark job. Each row maps `file_path`,
+        `record_count`, the four `bbox_*` values and `ts_us`, the latest
+        `ts` in microseconds (NULL: the commit time, as is `created_at`).
+        The file is written under a hidden temp name, which every reader
+        skips, and renamed into place, so readers see all of it or none."""
+        if not rows:
+            return
+        now = datetime.now(timezone.utc)
+        table = pa.Table.from_pylist(
+            [
+                {**r, "batch_id": batch_id, "created_at": now,
+                 "ts": now if r["ts_us"] is None else r["ts_us"]}
+                for r in rows
+            ],
+            schema=_ARROW_SCHEMA,
         )
-        row.write.mode("append").parquet(self.path)
+        os.makedirs(self.path, exist_ok=True)
+        name = f"part-{int(batch_id):05d}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.path, name))
+
+    def append_batch(self, batch: DataFrame, batch_id: int, file_path: str) -> None:
+        """A14+A15+A16: one catalog row for a written file — the batch's
+        record count, bbox and latest `ts` — computed with one collect
+        and committed from the driver."""
+        row = batch.agg(*catalog_aggs()).collect()[0]
+        self.commit_rows(batch_id, [{**row.asDict(), "file_path": file_path}])
 
     def append_batch_partitions(
         self, batch: DataFrame, batch_id: int, out_root: str
@@ -135,38 +210,12 @@ class FileCatalog:
         """Per-partition catalog rows: one metadata row per hour
         partition the batch touched (a micro-batch can span hours when
         catching up — a single whole-batch row would leave earlier
-        partitions invisible to the bbox zone map). One aggregate job,
-        grouped on the partition columns."""
-        part_path = F.format_string(
-            f"{out_root}/year=%d/month=%d/day=%d/hour=%d",
-            F.col("year"),
-            F.col("month"),
-            F.col("day"),
-            F.col("hour"),
-        )
-        rows = (
-            batch.groupBy("year", "month", "day", "hour")
-            .agg(
-                F.count(F.lit(1)).alias("record_count"),
-                F.min("longitude").alias("bbox_minx"),
-                F.min("latitude").alias("bbox_miny"),
-                F.max("longitude").alias("bbox_maxx"),
-                F.max("latitude").alias("bbox_maxy"),
-                F.max("ts").alias("ts"),
-            )
-            .select(
-                F.lit(batch_id).cast("long").alias("batch_id"),
-                part_path.alias("file_path"),
-                F.col("ts"),
-                F.col("record_count").cast("long"),
-                F.current_timestamp().alias("created_at"),
-                "bbox_minx",
-                "bbox_miny",
-                "bbox_maxx",
-                "bbox_maxy",
-            )
-        )
-        rows.write.mode("append").parquet(self.path)
+        partitions invisible to the bbox zone map). One collect of an
+        aggregate grouped on the partition columns, committed from the
+        driver. The ingest tick computes the same rows inside its own
+        good/bad aggregate instead."""
+        groups = batch.groupBy("year", "month", "day", "hour").agg(*catalog_aggs()).collect()
+        self.commit_rows(batch_id, partition_rows(out_root, groups))
 
     # ---- quality-check queries (A17-A21, reference gtfs_rt_assets.py:200-245)
 
@@ -205,9 +254,9 @@ class FileCatalog:
         """Distributed existence probe: each task stats ITS partition's
         paths (shared storage — local fs here, HDFS/S3 mounts on a
         cluster). The file list never collects to the driver, so the
-        probe scales with executors, not driver heap (VERDICT r2 item 7:
-        a minutely-file catalog is ~10^5-10^6 rows/year — fine to
-        collect today, but the anti-join form needs no such bound)."""
+        probe scales with executors, not driver heap: a minutely-file
+        catalog is ~10^5-10^6 rows/year, and the anti-join form needs
+        no bound on it."""
 
         def probe(batches):
             for pdf in batches:
@@ -226,27 +275,42 @@ class FileCatalog:
         fs = self._existing_paths(cat.select("file_path").distinct())
         return cat.join(fs, "file_path", "left_anti")
 
+    def _check_table(self):
+        """The catalog's (ts in microseconds, batch_id, record_count,
+        file_path) columns, read with pyarrow, or None for an empty
+        catalog. Catalog files are immutable: each is read once per
+        instance and re-read only if its size or mtime changes."""
+        seen = {}
+        for e in self._files():
+            st = e.stat()
+            key = (st.st_size, st.st_mtime_ns)
+            hit = self._seen.get(e.path)
+            if hit is None or hit[0] != key:
+                t = pq.read_table(
+                    e.path, columns=_CHECK_SCHEMA.names, coerce_int96_timestamp_unit="us"
+                )
+                hit = (key, t.cast(_CHECK_SCHEMA))
+            seen[e.path] = hit
+        self._seen = seen
+        return pa.concat_tables([t for _, t in seen.values()]) if seen else None
+
     def check_not_empty(self, lookback_hours: int = 1) -> dict:
         """A21: the reference's asset check — total>0, recent>0, latest
         file exists — returned as a metrics dict (A22 metadata parity).
         Answers as `total_records` / `recent_records` / `latest_file` do,
-        from one catalog read: one aggregate, then the recent sum with
-        the MAX(ts) anchor as a literal (in microseconds: no tz round trip)."""
-        cat = self.read()
-        head = cat.agg(
-            F.coalesce(F.sum("record_count"), F.lit(0)).alias("total"),
-            F.unix_micros(F.max("ts")).alias("anchor_us"),
-            F.max_by("file_path", F.struct("ts", "batch_id")).alias("latest"),
-        ).collect()[0]
-        total, latest = head["total"], head["latest"]
-        recent = 0
-        if head["anchor_us"] is not None:
-            since = head["anchor_us"] - lookback_hours * 3_600_000_000
-            recent = (
-                cat.filter(F.col("ts") >= F.timestamp_micros(F.lit(since)))
-                .agg(F.coalesce(F.sum("record_count"), F.lit(0)).alias("recent"))
-                .collect()[0]["recent"]
-            )
+        on the driver with no Spark job, reading only catalog files this
+        instance has not read before."""
+        t = self._check_table()
+        total = recent = 0
+        latest = None
+        if t is not None and t.num_rows:
+            total = pc.sum(t["record_count"]).as_py() or 0
+            anchor = pc.max(t["ts"]).as_py()
+            since = anchor - lookback_hours * 3_600_000_000
+            recent = pc.sum(t.filter(pc.field("ts") >= since)["record_count"]).as_py() or 0
+            latest = t.sort_by([("ts", "descending"), ("batch_id", "descending")])[
+                "file_path"
+            ][0].as_py()
         latest_exists = latest is not None and os.path.exists(_require_local(latest))
         return {
             "passed": bool(total > 0 and recent > 0 and latest_exists),

@@ -17,9 +17,10 @@ attach custom key-value metadata, so the sink here is two-phase:
 
 The finalize step is a driver-side loop over footer rewrites — the
 same boundary as the reference's per-file catalog INSERT and our
-catalog append: per-minute batches write ONE file (A12), so the loop
-rewrites O(1) files per batch and only reads the footers of the rest;
-the compaction job bounds total file count.
+catalog commit: per-minute batches write ONE file per hour (A12), and
+the ingest tick finalizes only the hour partitions it wrote, so the
+loop rewrites O(1) files per batch and reads the footers of the few
+files already in those hours.
 """
 
 from __future__ import annotations

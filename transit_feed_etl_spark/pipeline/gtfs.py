@@ -22,6 +22,9 @@ descriptor is needed; `from_protobuf` is an optional adapter, see
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -216,14 +219,25 @@ def compact_partitions(spark, root: str, target_files: int = 1) -> None:
     bound is <=, not ==: hash-partitioning on (hour cols, salt) can land
     two distinct salts of one hour in the same shuffle partition, whose
     writer then emits a single merged file — fine for compaction, whose
-    contract is an upper bound on file count, not an exact fan-out."""
+    contract is an upper bound on file count, not an exact fan-out.
+
+    A GeoParquet source (its files carry the `geo` footer) stays
+    GeoParquet: each compacted file is stamped with its own footer."""
+    import pyarrow.parquet as pq
+
+    from transit_feed_etl_spark.pipeline.geoparquet import finalize_geo_metadata
+
     df = spark.read.parquet(root)
     salt = F.pmod(F.xxhash64("ts", "vehicle_id"), F.lit(target_files))
+    out = root + "_compacted"
     (
         df.withColumn("_salt", salt)
         .repartition("year", "month", "day", "hour", "_salt")
         .drop("_salt")
         .write.mode("overwrite")
         .partitionBy("year", "month", "day", "hour")
-        .parquet(root + "_compacted")
+        .parquet(out)
     )
+    src = next(glob.iglob(os.path.join(root, "**", "*.parquet"), recursive=True), None)
+    if src and b"geo" in (pq.read_metadata(src).metadata or {}):
+        finalize_geo_metadata(out)

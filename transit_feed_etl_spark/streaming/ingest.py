@@ -2,8 +2,14 @@
 (A23, reference gtfs_rt_assets.py:248-257) as ONE streaming query:
 
   spool dir (fetched feed files) -> flatten -> validate/quarantine ->
-  partitioned parquet sink + catalog append + quality check, all inside
-  foreachBatch (exactly-once per micro-batch).
+  partitioned parquet sink + catalog commit + quality check, all inside
+  foreachBatch.
+
+Delivery is at-least-once: the checkpoint keeps a restarted query from
+reading a spool file twice, but Spark may replay a micro-batch whose
+processing did not finish, and a replay appends its rows again. Making
+the tick idempotent (stage the batch's files, commit keyed by
+`batch_id`, skip a batch already committed) is an open item.
 
 The reference's process-per-run orchestration (Dagster DefaultRunLauncher,
 dagster.yaml:24-26) becomes driver->executor task dispatch; the IO-manager
@@ -24,7 +30,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transit_feed_etl_spark.pipeline.catalog import FileCatalog
+from transit_feed_etl_spark.pipeline.catalog import (
+    FileCatalog,
+    catalog_aggs,
+    partition_rows,
+)
 from transit_feed_etl_spark.pipeline.gtfs import (
     RAW_FEED_SCHEMA,
     flatten_feed,
@@ -58,16 +68,21 @@ def make_batch_processor(
 ):
     """foreachBatch sink implementing A8/A10/A12/A14-A16/A21.
 
-    Each batch is flattened once into a cache that the good/bad counts
-    (one aggregate), the quarantine write, the sink write and the
-    catalog append all read. Quarantine comes before the empty-batch
-    guard, so a batch with no valid vehicle still keeps its evidence.
+    Each batch is flattened once into a cache. One aggregate over it,
+    grouped by hour partition, gives each hour's good and bad counts
+    and, over the good rows, the hour's catalog row (count, bbox,
+    latest ts). The quarantine write and the sink write read the cache;
+    the catalog row is committed and the quality check runs on the
+    driver, so the sink write is the batch's last Spark job. Quarantine
+    comes before the empty-batch guard, so a batch with no valid
+    vehicle still keeps its evidence.
 
     ``geoparquet=True`` adds a WKB `geometry` column before the write
     and stamps the GeoParquet `geo` footer (per-file bbox, EPSG:4326)
-    after it — full A12 GeoParquet parity in the live pipeline
-    (reference gtfs_rt_assets.py:122-141), at the same per-batch
-    boundary as the catalog append."""
+    after it, on the hour partitions the batch wrote — full A12
+    GeoParquet parity in the live pipeline (reference
+    gtfs_rt_assets.py:122-141). A replayed batch rewrites the same
+    hours, so a file a crash left unstamped is stamped then."""
     metrics = metrics if metrics is not None else IngestMetrics()
 
     def process(batch: DataFrame, batch_id: int) -> None:
@@ -75,10 +90,14 @@ def make_batch_processor(
         try:
             good, bad = validate_positions(flat)
             is_bad = out_of_range()
-            counts = flat.agg(
-                F.count_if(~is_bad).alias("good"), F.count_if(is_bad).alias("bad")
-            ).collect()[0]
-            n, n_bad = counts["good"], counts["bad"]
+            hours = (
+                with_time_partitions(flat)
+                .groupBy("year", "month", "day", "hour")
+                .agg(F.count_if(is_bad).alias("bad"), *catalog_aggs(~is_bad))
+                .collect()
+            )
+            n = sum(h["record_count"] for h in hours)
+            n_bad = sum(h["bad"] for h in hours)
             metrics.batches += 1
             if n_bad:  # A8 quarantine instead of log-and-drop
                 metrics.quarantined += n_bad
@@ -87,6 +106,11 @@ def make_batch_processor(
             if n == 0:  # A10 empty-batch guard (gtfs_rt_assets.py:114-116)
                 metrics.empty_batches += 1
                 return
+            # One catalog row per hour partition the batch wrote (the
+            # reference's one-file-per-run template adapted to a
+            # partitioned layout; per-partition rows keep the bbox zone
+            # map correct when a catch-up batch spans hours).
+            rows = partition_rows(out_root, hours)
             good = with_time_partitions(good)
             if geoparquet:
                 from transit_feed_etl_spark.pipeline.geoparquet import (
@@ -103,14 +127,11 @@ def make_batch_processor(
                     ),
                     out_root,
                 )
-                finalize_geo_metadata(out_root)
+                for r in rows:
+                    finalize_geo_metadata(r["file_path"])
             else:
                 write_partitioned(good, out_root)
-            # One catalog row per hour partition the batch touched (the
-            # reference's one-file-per-run template adapted to a
-            # partitioned layout; per-partition rows keep the bbox zone
-            # map correct when a catch-up batch spans hours).
-            catalog.append_batch_partitions(good, batch_id, out_root)
+            catalog.commit_rows(batch_id, rows)
             metrics.records += n
             if run_quality_check:  # A21 asset-check parity
                 metrics.checks.append(catalog.check_not_empty())
