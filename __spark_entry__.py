@@ -250,7 +250,17 @@ PRIORITY: tuple[str, ...] = (
 # incremental_lsh_rounds, pagerank_copurchase, coorder_part_triangles,
 # softdedup_weights, dedup_keep_best) were all re-attested green in
 # CORRECTNESS_r13 and pruned at the next round's start.
-FORCE_RECHECK: dict[str, int] = {}
+# The six queries below had their plans rewritten in round 13, after
+# their last green rows (r12; r11 for pca_top_component); each needs a
+# fresh full-oracle row from round 14.
+FORCE_RECHECK: dict[str, int] = {
+    "incremental_semdedup_rounds": 14,
+    "ivf_kmeans_topk": 14,
+    "pca_top_component": 14,
+    "pq_adc_rerank_topk": 14,
+    "semdedup_prune": 14,
+    "semdedup_prune_sampled": 14,
+}
 
 
 def _effective_green(

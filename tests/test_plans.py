@@ -888,7 +888,7 @@ def test_pq_lloyd_training_is_broadcast_plus_partial_aggs(spark):
     cent = subs.filter(F.col("vec_id") < S._PQ_K).select(
         "m", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
     )
-    asg = S._pq_nearest_code(subs, cent, keep=("sv",)).select(
+    asg = S._pq_nearest_code(subs, S._pq_cand_map(cent), keep=("sv",)).select(
         "m", F.col("code").alias("cid"), "sv"
     )
     new_cv = asg.groupBy("m", "cid").agg(

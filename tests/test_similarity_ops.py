@@ -125,6 +125,7 @@ def test_kmeans_centroids_converge_to_cluster_means(spark, clustered):
     members' mean than the raw seed points do (objective decreases)."""
     from transit_feed_etl_spark.caching import release_caches
     from transit_feed_etl_spark.queries.similarity import (
+        _explode_cands,
         _ivf_assign,
         kmeans_train,
     )
@@ -135,7 +136,7 @@ def test_kmeans_centroids_converge_to_cluster_means(spark, clustered):
         asg = _ivf_assign(df, cent, nprobe=1)
         return (
             asg.join(df, "vec_id")
-            .join(cent, "cid")
+            .join(_explode_cands(cent), "cid")
             .select(
                 F.aggregate(
                     F.zip_with("v", "cv", lambda x, y: x * y),
@@ -161,6 +162,53 @@ def test_kmeans_centroids_converge_to_cluster_means(spark, clustered):
     after = mean_member_cosine(kmeans_train(df, iters=3))
     release_caches()
     assert after > before + 0.05, (before, after)
+
+
+def test_kmeans_train_returns_the_one_row_quantizer(spark, clustered):
+    """`kmeans_train` returns the quantizer as ONE row: `cands`, a
+    cid-ASC array of (cid, cv, cnrm) structs with cnrm = l2_norm(cv) —
+    the form `_assign1`, `_ivf_assign` and `hier_assign` take. With
+    iters=0 its (cid, cv) table is exactly the seeds, under each seed
+    rule: the n_cells lowest ids, ids below `seed_below`, and an
+    explicit `seeds` frame."""
+    from transit_feed_etl_spark.operators import vectors as V
+    from transit_feed_etl_spark.queries.similarity import (
+        _explode_cands,
+        kmeans_train,
+    )
+
+    df, _ = clustered
+    trained = kmeans_train(df, iters=2)
+    assert trained.columns == ["cands"]
+    rows = trained.collect()
+    assert len(rows) == 1
+    cids = [c["cid"] for c in rows[0]["cands"]]
+    assert cids == sorted(cids) and len(cids) == 16
+    norm_ok = (
+        trained.select(F.explode("cands").alias("c"))
+        .select((F.col("c.cnrm") == V.l2_norm(F.col("c.cv"))).alias("ok"))
+        .collect()
+    )
+    assert len(norm_ok) == 16 and all(r["ok"] for r in norm_ok)
+
+    def as_seeds(frame):
+        return frame.select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
+
+    def table(frame):
+        return sorted((r["cid"], tuple(r["cv"])) for r in frame.collect())
+
+    samp = df.filter(F.col("vec_id") % 4 == 0)
+    explicit = as_seeds(df.filter(F.col("vec_id").between(100, 107)))
+    for got, want in (
+        (kmeans_train(df, iters=0), as_seeds(df.filter(F.col("vec_id") < 16))),
+        (
+            kmeans_train(samp, iters=0, n_cells=16, seed_below=64),
+            as_seeds(samp.filter(F.col("vec_id") < 64)),
+        ),
+        (kmeans_train(df, iters=0, n_cells=8, seeds=explicit), explicit),
+    ):
+        assert got.columns == ["cands"] and got.count() == 1
+        assert table(_explode_cands(got)) == table(want)
 
 
 def test_hier_routing_mostly_agrees_with_flat_argmax(spark, clustered):
@@ -204,6 +252,7 @@ def test_hier_routing_deep_hierarchy_covers_corpus(spark, clustered):
 
     from transit_feed_etl_spark.caching import release_caches
     from transit_feed_etl_spark.queries.similarity import (
+        _explode_cands,
         hier_assign,
         kmeans_train,
     )
@@ -211,7 +260,7 @@ def test_hier_routing_deep_hierarchy_covers_corpus(spark, clustered):
     df, _ = clustered
     samp = df.filter(F.col("vec_id") % 4 == 0)
     cent = kmeans_train(samp, iters=1, n_cells=64, seed_below=256).persist()
-    cids = {r["cid"] for r in cent.select("cid").collect()}
+    cids = {r["cid"] for r in _explode_cands(cent).select("cid").collect()}
     routed = hier_assign(df, cent, n_cells=64, branch=4).collect()
     release_caches()
     cent.unpersist()

@@ -857,6 +857,40 @@ def test_semdedup_batch_retry_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(store).count() == n_store
 
 
+def test_ensure_centroids_reread_routes_like_the_trained_quantizer(
+    spark, tmp_path
+):
+    """The centroid store round-trips the quantizer: the first call
+    trains it and writes its (cid, cv) table, a restart re-reads that
+    table, and both calls return the same one-row form (`kmeans_train`'s
+    `cands`), which routes every vector to the same cell."""
+    from transit_feed_etl_spark.queries.similarity import _assign1
+    from transit_feed_etl_spark.streaming.semdedup import ensure_centroids
+
+    bases = ([1.0, 0.0, 0.2, 0.0], [0.0, 1.0, 0.0, 0.2], [0.3, 0.3, 1.0, 0.0])
+
+    def vec(i: int) -> list[float]:
+        base = bases[i % 3]
+        return [round(base[d % 4] + 0.01 * ((i * 7 + d) % 11), 6) for d in range(64)]
+
+    v = spark.createDataFrame(
+        [(i, vec(i)) for i in range(30)], "vec_id long, v array<double>"
+    )
+    path = str(tmp_path / "centroids")
+    trained = ensure_centroids(spark, path, v, n_cells=4)
+    reread = ensure_centroids(spark, path, v, n_cells=4)
+    assert spark.read.parquet(path).count() == 4
+    for q in (trained, reread):
+        assert q.columns == ["cands"] and q.count() == 1
+
+    def cells(q):
+        return {r["vec_id"]: r["cell"] for r in _assign1(v, q).collect()}
+
+    got = cells(trained)
+    assert len(got) == 30 and len(set(got.values())) > 1
+    assert cells(reread) == got
+
+
 def test_corpus_dedup_batch_retry_is_idempotent(spark, tmp_path):
     """Retry of a corpus-dedup batch whose digest write landed must
     re-emit the SAME fresh rows (a plain append store would anti-join

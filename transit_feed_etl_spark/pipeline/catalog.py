@@ -387,12 +387,15 @@ class FileCatalog:
         sit in the same directory tree. Returns None for an empty
         snapshot.
 
-        Caveat (documented limitation): `compact_partitions` rewrites
-        files IN PLACE, which invalidates older snapshots' manifests —
-        a compaction-aware catalog needs add/remove actions per batch
-        (the Delta/Iceberg log structure). This catalog is append-only;
-        time travel is exact for append-only ingest, which is the
-        reference pipeline's actual write pattern."""
+        Caveat (documented limitation): the catalog is append-only and
+        knows nothing of compaction. `compact_partitions` writes its
+        output to a `root + "_compacted"` sibling directory and never
+        touches the catalog, so snapshots keep reading the original
+        small files; compaction committed through the catalog, with
+        add/remove actions per batch (the Delta/Iceberg log structure),
+        is ROADMAP direction 4. Time travel is exact for append-only
+        ingest, which is the reference pipeline's actual write
+        pattern."""
         files = [
             p
             for p in self.files_as_of(as_of_batch_id)

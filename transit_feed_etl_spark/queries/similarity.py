@@ -8,10 +8,10 @@ internal comparisons): FLOOR(x * 10^d) / 10^d is pure IEEE ops on the
 same double in both engines and can never disagree, whereas
 ROUND(double, d) is implemented differently (Spark: BigDecimal on the
 binary expansion, HALF_UP; DuckDB: nearest on x * 10^d) and measurably
-diverges near half boundaries — probed r12: 42/5000 near-boundary
+diverges near half boundaries — probed: 42/5000 near-boundary
 doubles disagree at 6dp, 573/10000 6dp-grid values disagree at 4dp,
 0/5000 under FLOOR (the same transcendental half-boundary hazard class
-registry.py documents; VERDICT r11 item 4). Ranking orders by
+registry.py documents). Ranking orders by
 (floored score DESC, neighbor id ASC) so ranks are stable across
 engines.
 
@@ -150,16 +150,15 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the synthetic testdata embeddings are near-orthogonal random vectors
 # (max pairwise cosine: 0.479 at sf0.001, 0.513 at sf0.01, 0.601 at
 # sf0.1), so a 0.8 cut returns the empty set at every SF and the driver
-# CORRECTNESS row degenerates to a vacuous 0 == 0 compare (VERDICT r4
-# "What's wrong" #1).  0.4 yields a non-trivial result everywhere
-# while exercising the identical thresholded pair-scan operator.
-# Cross-engine stability after the r12 ROUND->FLOOR repin: FLOOR
-# eliminates the rounding-IMPLEMENTATION divergence (Spark and DuckDB
-# can disagree when ROUNDing even the SAME double near a half
-# boundary); the residual hazard is only the gram kernel's ~1e-15
+# CORRECTNESS row degenerates to a vacuous 0 == 0 compare.  0.4 yields
+# a non-trivial result everywhere while exercising the identical
+# thresholded pair-scan operator.
+# Cross-engine stability of the FLOORed score: FLOOR eliminates the
+# rounding-IMPLEMENTATION divergence (Spark and DuckDB can disagree
+# when ROUNDing even the SAME double near a half boundary); the
+# residual hazard is only the gram kernel's ~1e-15
 # BLAS-vs-sequential-fold noise landing within ~1e-15 of a 1e-4 grid
-# point — the same corpus-measured residual class the old HALF_UP
-# boundary-distance audit covered, now against the .0000 grid.
+# point.
 _NEARDUP_COS_TH = 0.4
 # The clusters twin uses a slightly higher cut: at 0.4 the sf0.1 pair
 # graph grows a 75-node giant component whose all-reachable-pairs
@@ -198,7 +197,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-join baseline was itself 23.6s before per-vector norm
     precomputation) — then RESCORES the surviving candidates with the
     exact sequential fold JVM-side. The kernel's BLAS summation order
-    differs from the fold by ~1e-15; under the r12 FLOOR repin that
+    differs from the fold by ~1e-15; under FLOOR truncation that
     noise is visible precisely at on-grid scores (an exact duplicate's
     cos sits AT 1.0, where truncating 1.0-1ulp yields 0.9999), so the
     emitted score must come from the same IEEE expression tree the
@@ -611,12 +610,13 @@ def _kmeans_oracle(iters: int = _KM_ITERS, cells: int = _KM_CELLS) -> str:
 
 
 def _cand_array(cent: DataFrame) -> DataFrame:
-    """One-row frame: the centroid table collapsed into a cid-ASC-sorted
-    array of (cid, cv, cnrm) structs — the broadcast side of the
-    map-side argmax (`_fold_argmax_cell`). Centroid norms are
-    precomputed once here instead of per (row, candidate) pair; the
-    floored cosine each candidate produces is IEEE-identical either way
-    (same doubles, same multiply)."""
+    """The quantizer's one-row form from a (cid, cv) centroid table: a
+    cid-ASC-sorted array `cands` of (cid, cv, cnrm) structs — the layout
+    `kmeans_train` returns and the broadcast side of the map-side argmax
+    (`_fold_argmax_cell`). Centroid norms are precomputed once here
+    instead of per (row, candidate) pair; the floored cosine each
+    candidate produces is IEEE-identical either way (same doubles, same
+    multiply)."""
     return cent.agg(
         F.array_sort(
             F.collect_list(
@@ -630,6 +630,13 @@ def _cand_array(cent: DataFrame) -> DataFrame:
     )
 
 
+def _explode_cands(cands: DataFrame) -> DataFrame:
+    """(cid, cv) table view of a one-row `_cand_array`-layout frame."""
+    return cands.select(F.explode("cands").alias("c")).select(
+        F.col("c.cid").alias("cid"), F.col("c.cv").alias("cv")
+    )
+
+
 def _fold_argmax_cell(cands, v, nrm):
     """Per-row argmax over a broadcast candidate array sorted cid ASC:
     a strictly-greater fold keeps the FIRST best, reproducing the
@@ -638,7 +645,7 @@ def _fold_argmax_cell(cands, v, nrm):
     join-the-vectors-back. -2.0 sits below every real floored cosine
     (>= -1.0), so the first candidate always beats the init.
 
-    Input contract (ADVICE r12): scores must be non-NaN — i.e. vectors
+    Input contract: scores must be non-NaN — i.e. vectors
     and candidates carry finite components and nonzero norms, the
     module-docstring embedding precondition that
     tests/test_vector_edge_parity.py pins (zero-norm inputs fail fast
@@ -661,13 +668,17 @@ def _fold_argmax_cell(cands, v, nrm):
     return F.aggregate(cands, init, step)["cid"]
 
 
-def _assign1_cands(v: DataFrame, cands: DataFrame) -> DataFrame:
-    """`_assign1` over an already-assembled one-row candidate array
-    (`_cand_array` layout). Callers that hold the trained quantizer in
-    that layout — `_kmeans_train_cands` output is exactly it — skip the
-    explode -> re-aggregate -> re-broadcast roundtrip `_assign1` would
-    pay to rebuild the array from the (cid, cv) table (r13, guide
-    §1.2-1: don't recompute what the producer already materialized)."""
+def _assign1(v: DataFrame, cands: DataFrame) -> DataFrame:
+    """(vec_id, v, cell): nearest centroid by (floored cosine DESC, cid
+    ASC) as ONE map-side fold per row over the broadcast one-row
+    quantizer `cands` (`kmeans_train`'s output). Value-equivalent to
+    `_ivf_assign(v, cands, nprobe=1)` (same cosine expression, same
+    tie-break), but the corpus row never moves: the window shape
+    shuffles an n x cells (vec_id, cid, cos) frame and then joins the
+    vectors back on vec_id — a join that plans as a vector-width corpus
+    exchange once the corpus outgrows the broadcast threshold.
+    Consumers that need the vector after assignment read it off this
+    frame instead of re-joining."""
     return (
         v.crossJoin(F.broadcast(cands))
         .withColumn("nrm", V.l2_norm(F.col("v")))
@@ -681,94 +692,42 @@ def _assign1_cands(v: DataFrame, cands: DataFrame) -> DataFrame:
     )
 
 
-def _assign1(v: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, v, cell): nearest centroid by (floored cosine DESC, cid
-    ASC) as ONE map-side fold per row over the broadcast centroid
-    array. Value-equivalent to `_ivf_assign(v, cent, nprobe=1)` (same
-    cosine expression, same tie-break), but the corpus row never moves:
-    the window shape shuffled an n x cells (vec_id, cid, cos) frame and
-    then joined the vectors back on vec_id — a join that plans as a
-    vector-width corpus exchange once the corpus outgrows the broadcast
-    threshold (VERDICT r8 item 4). Consumers that need the vector after
-    assignment read it off this frame instead of re-joining."""
-    return _assign1_cands(v, _cand_array(cent))
-
-
 def kmeans_train(
     v: DataFrame,
     iters: int,
     n_cells: int = _KM_CELLS,
-    dim: int = EMB_DIM,
     seed_below: int | None = None,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
-    """Deterministic Lloyd training over an embedding frame (vec_id, v):
-    seeds = the points with vec_id < seed_below (default n_cells — the
-    n_cells lowest-id vectors of a dense id space; sample-trained
-    callers pass n_cells * mod to pick n_cells seeds out of a modular
-    sample; hierarchy levels pass an explicit (cid, cv) `seeds` frame),
-    `iters` iterations, returns (cid, cv). iters=0 returns the raw
-    seeds (the untrained quantizer).
+    """Deterministic Lloyd training over an embedding frame (vec_id, v),
+    returning the quantizer as ONE row: `cands`, a cid-ASC array of
+    (cid, cv, cnrm) structs (`_cand_array`'s layout). Seeds are the
+    points with vec_id < seed_below (default n_cells — the n_cells
+    lowest-id vectors of a dense id space; sample-trained callers pass
+    n_cells * mod to pick n_cells seeds out of a modular sample;
+    hierarchy levels pass an explicit (cid, cv) `seeds` frame), then
+    `iters` Lloyd rounds; iters=0 returns the raw seeds (the untrained
+    quantizer). Consumers that need a (cid, cv) table take
+    `_explode_cands` of the result.
 
-    Leaf contract (ADVICE r12): the iters >= 1 output is a narrow
-    projection over an eagerly-materialized localCheckpoint — callers
-    may fan out over it without a persist (re-references re-scan the
-    checkpointed row, never re-run training). The iters = 0 output is
-    the LAZY seed frame with no checkpoint; a caller that fans out over
-    an untrained quantizer must materialize it itself (production call
-    sites all pass iters >= 1; only tests use iters = 0).
+    Leaf contract: after iters >= 1 the row is an eagerly-materialized
+    localCheckpoint — callers may fan out over it without a persist
+    (re-references re-scan the checkpointed row, never re-run
+    training). The iters = 0 row is LAZY, with no checkpoint; a caller
+    that fans out over an untrained quantizer must materialize it
+    itself (production call sites all pass iters >= 1).
 
-    Scale design: each iteration is (a) a per-row fold over the
-    broadcast centroid array (`_assign1`) — the corpus NEVER shuffles:
-    not the vectors (the old shape re-joined them on vec_id, which
-    plans as a vector-width corpus exchange past the broadcast
-    threshold, VERDICT r8 item 4), and not even the narrow
-    (vec_id, cid, cos) window frame the previous argmax moved — and
-    (b) a (cell, dim)-keyed partial aggregate whose shuffle carries
-    n_cells x dim decimal sums per partition, not vectors. Iterations
-    are a driver-side loop over DataFrames (k-means|| would drop in for
-    larger k); the centroids stay a DataFrame — nothing collects.
-    Centroid means use order-independent DECIMAL sums so the training
-    run is bit-identical to the unrolled-SQL oracle in _kmeans_oracle —
-    the training itself is differential-tested, which a literals-folded
-    oracle could not do."""
-    if iters == 0:
-        return (
-            seeds
-            if seeds is not None
-            else v.filter(
-                F.col("vec_id") < (n_cells if seed_below is None else seed_below)
-            ).select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-        )
-    return _explode_cands(
-        _kmeans_train_cands(v, iters, n_cells, dim, seed_below, seeds)
-    )
-
-
-def _explode_cands(cands: DataFrame) -> DataFrame:
-    """(cid, cv) table view of a one-row `_cand_array`-layout frame."""
-    return cands.select(F.explode("cands").alias("c")).select(
-        F.col("c.cid").alias("cid"), F.col("c.cv").alias("cv")
-    )
-
-
-def _kmeans_train_cands(
-    v: DataFrame,
-    iters: int,
-    n_cells: int = _KM_CELLS,
-    dim: int = EMB_DIM,
-    seed_below: int | None = None,
-    seeds: DataFrame | None = None,
-) -> DataFrame:
-    """`kmeans_train`'s loop core, returning the trained quantizer in
-    its NATIVE layout — the one-row cid-ASC candidate array the r12
-    Lloyd rewrite keeps as loop state (each element (cid, cv, cnrm),
-    localCheckpointed each round). Consumers that broadcast the
-    quantizer for fold assignment (`_assign1_cands`, the `hier_assign`
-    routing tree/top) take this frame directly; going through
-    `kmeans_train`'s exploded (cid, cv) view costs an explode scan plus
-    a `_cand_array` re-aggregation and re-broadcast per consumer for a
-    value-identical array (r13, guide §1.2-1). Requires iters >= 1."""
+    Scale design: each round is (a) a per-row fold over the broadcast
+    candidate array — the corpus NEVER shuffles, neither the vectors
+    nor a (vec_id, cid, cos) window frame — and (b) a (cid)-keyed
+    partial aggregate whose shuffle carries n_cells x dim decimal sums
+    per partition, not vectors. Rounds are a driver-side loop over
+    DataFrames (k-means|| would drop in for larger k); the quantizer
+    stays a DataFrame — nothing collects. Centroid means use
+    order-independent DECIMAL sums so the training run is bit-identical
+    to the unrolled-SQL oracle in _kmeans_oracle — the training itself
+    is differential-tested, which a literals-folded oracle could not
+    do."""
     cent = (
         seeds
         if seeds is not None
@@ -779,63 +738,41 @@ def _kmeans_train_cands(
     # The 2 x dim aggregate/mean Column lists are loop-invariant
     # (unbound expressions) — build them ONCE. Constructing ~130 Column
     # objects is ~260 py4j round-trips plus analyzer passes over the
-    # wide agg per iteration; hoisting them measured ~0.2-0.3 s per
-    # Lloyd round of pure driver time at sf0.1 (guide §1.2 step 2:
-    # per-task work includes the driver's per-iteration plan work in an
-    # iterative operator).
+    # wide agg per round, measured at ~0.2-0.3 s of driver time per
+    # Lloyd round at sf0.1.
     sum_cols = [
         F.sum(F.element_at("v", i).cast("decimal(25,15)")).alias(f"s{i}")
-        for i in range(1, dim + 1)
+        for i in range(1, EMB_DIM + 1)
     ]
     mean_arr = F.array(
         *[
             F.col(f"s{i}").cast("double") / F.col("cnt")
-            for i in range(1, dim + 1)
+            for i in range(1, EMB_DIM + 1)
         ]
     ).alias("cv_new")
-    # r12 iteration shape: the loop state is the ONE-ROW cid-ASC
-    # candidate array (`_cand_array`'s layout), not the cells-row
-    # centroid table. Each round is then a single eager action
-    # (localCheckpoint of one row) covering: broadcast of the previous
-    # row, the per-row assignment fold, the wide (cid)-keyed partial
-    # aggregate, a map_from_entries reduction, and an in-array
-    # transform that applies the new means with the empty-cell
-    # fallback. The r9-r11 shape paid, per round, a separate
-    # _cand_array broadcast-build job (re-aggregating the centroid
-    # table it had just checkpointed) plus a cells-row fallback JOIN
-    # inside the checkpoint job (guide §2.4 — both removable outright).
-    # Value-identical: same fold argmax (same floored cosine, same
-    # first-strictly-greater = cid-ASC tie), same order-independent
-    # DECIMAL(25,15) sums and sum::double / cnt division, same
-    # keep-previous fallback (try_element_at misses -> coalesce), and
-    # the array stays cid-ASC because transform preserves positions and
-    # no cid is ever added or removed. Eager per-round checkpoint for
-    # the same reason as r9: flat plans, no 2^iters seed-subtree
-    # nesting (components/pagerank/BPE/perceptron pattern).
+    # The loop state is the one-row candidate array itself. Each round
+    # is a single eager action (localCheckpoint of one row) covering the
+    # broadcast of the previous row, the per-row assignment fold, the
+    # wide (cid)-keyed partial aggregate, a map_from_entries reduction,
+    # and an in-array transform that applies the new means; a centroid
+    # whose cell emptied keeps its previous vector (try_element_at
+    # misses -> coalesce), as the oracle's LEFT JOIN + COALESCE does.
+    # The array stays cid-ASC because transform preserves positions and
+    # no cid is ever added or removed. The per-round checkpoint keeps
+    # plans flat instead of nesting the seed subtree 2^iters deep.
     cands = _cand_array(cent)
     per_cell_means = F.map_from_entries(
         F.collect_list(F.struct(F.col("cid"), F.col("cv_new")))
     ).alias("mm")
     for _ in range(iters):
-        asg = (
-            v.crossJoin(F.broadcast(cands))
-            .withColumn("nrm", V.l2_norm(F.col("v")))
-            .select(
-                _fold_argmax_cell(
-                    F.col("cands"), F.col("v"), F.col("nrm")
-                ).alias("cid"),
-                "v",
-            )
-        )
-        # Per-dim means as ONE wide (cid)-keyed aggregate — dim decimal
-        # sums + a count per cell in a single shuffle — instead of the
-        # old (cid, dim) explode + collect_list/array_sort re-assembly
-        # (two shuffles per Lloyd round; at bench sizes stage overhead
-        # dominated the arithmetic). Value-identical: each dim's mean is
-        # the same SUM(CAST(val AS DECIMAL(25,15)))::double / count the
-        # oracle computes, and array(i=1..dim) preserves dim order.
+        # Per-dim means as ONE wide (cid)-keyed aggregate: dim decimal
+        # sums + a count per cell in a single shuffle. Each dim's mean
+        # is the same SUM(CAST(val AS DECIMAL(25,15)))::double / count
+        # the oracle computes, and array(i=1..dim) preserves dim order.
         new_map = (
-            asg.groupBy("cid")
+            _assign1(v, cands)
+            .select(F.col("cell").alias("cid"), "v")
+            .groupBy("cid")
             .agg(F.count(F.lit(1)).alias("cnt"), *sum_cols)
             .select("cid", mean_arr)
             .agg(per_cell_means)
@@ -857,13 +794,15 @@ def _kmeans_train_cands(
     return cands
 
 
-def _ivf_assign(v: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
-    """(vec_id, cid, rn): each vector's nprobe nearest centroids by
-    floored cosine, ties broken on cid ASC (both engines identical)."""
+def _ivf_assign(v: DataFrame, cands: DataFrame, nprobe: int) -> DataFrame:
+    """(vec_id, cid, rn): each vector's nprobe nearest centroids of the
+    one-row quantizer `cands` by floored cosine, ties broken on cid ASC
+    (both engines identical). The window ranks (vector, centroid) rows,
+    so the quantizer is exploded into its (cid, cv) table here."""
     cos_c = _f6(V.cosine(F.col("v"), F.col("cv")))
     wa = W.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cid").asc())
     return (
-        v.join(F.broadcast(cent))
+        v.join(F.broadcast(_explode_cands(cands)))
         .select("vec_id", "cid", cos_c.alias("cos_c"))
         .withColumn("rn", F.row_number().over(wa))
         .filter(F.col("rn") <= nprobe)
@@ -872,13 +811,14 @@ def _ivf_assign(v: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
 
 
 def ivf_search_topk(
-    v: DataFrame, cent: DataFrame, n_queries: int = 10, nprobe: int = 2, k: int = 5
+    v: DataFrame, cands: DataFrame, n_queries: int = 10, nprobe: int = 2, k: int = 5
 ) -> DataFrame:
-    """Cell-pruned top-k search against a trained (or seed) centroid
-    frame: assign every vector to its cell, probe each query's nprobe
-    nearest cells, score candidates exactly, rank. At 100 TB the cell id
-    is the partition key — candidate scoring is a cell-local join."""
-    final_asg = persist_tracked(_ivf_assign(v, cent, nprobe=nprobe))
+    """Cell-pruned top-k search against a `kmeans_train` quantizer
+    (trained or seed): assign every vector to its cell, probe each
+    query's nprobe nearest cells, score candidates exactly, rank. At
+    100 TB the cell id is the partition key — candidate scoring is a
+    cell-local join."""
+    final_asg = persist_tracked(_ivf_assign(v, cands, nprobe=nprobe))
     cells = final_asg.filter(F.col("rn") == 1).select(
         F.col("vec_id").alias("member_id"), F.col("cid").alias("cell")
     )
@@ -922,12 +862,8 @@ def ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw seeds."""
     emb = table_par(spark, sf_dir, "embeddings")
     v = persist_tracked(emb.select("vec_id", V.as_double("embedding").alias("v")))
-    # kmeans_train's last Lloyd round already ends in an eager
-    # localCheckpoint (a materialized cells-row leaf) -- wrapping it in
-    # persist_tracked added an InMemoryRelation layer and one more
-    # materialization pass over data that is already at rest (r12)
-    cent = kmeans_train(v, iters=_KM_ITERS)
-    return ivf_search_topk(v, cent)
+    # no persist: the trained quantizer is a checkpointed one-row leaf
+    return ivf_search_topk(v, kmeans_train(v, iters=_KM_ITERS))
 
 
 @register(
@@ -1100,54 +1036,21 @@ def _fold_argmin_code(cands, sv):
     return F.aggregate(cands, init, step)["cid"]
 
 
-def _pq_nearest_code_map(
+def _pq_nearest_code(
     subs: DataFrame, cmap: DataFrame, keep: tuple[str, ...] = ()
 ) -> DataFrame:
-    """`_pq_nearest_code` over an already-assembled one-row codeword
-    map (`_pq_cand_map` layout) — the broadcast side comes straight
-    from the trainer's checkpointed loop state instead of a per-call
-    re-aggregation of the exploded codebook (r13, guide §1.2-1)."""
+    """(m, vec_id, *keep, code): each subvector's nearest codeword in
+    ITS subspace by floored squared-L2, ties on cid ASC. One map-side
+    fold per row over the broadcast one-row codeword map `cmap`
+    (`_pq_cand_map`'s layout, which `_pq_lloyd` returns) — the
+    `_assign1` shape: no window, no exchange. `keep` lets the trainer
+    ride `sv` through assignment instead of joining it back."""
     code = _fold_argmin_code(
         F.element_at(F.col("_cmap"), F.col("m")), F.col("sv")
     )
     return subs.crossJoin(F.broadcast(cmap)).select(
         "m", "vec_id", *keep, code.alias("code")
     )
-
-
-def _pq_nearest_code(
-    subs: DataFrame, cb: DataFrame, keep: tuple[str, ...] = ()
-) -> DataFrame:
-    """(m, vec_id, *keep, code): each subvector's nearest codeword in
-    ITS subspace by floored squared-L2, ties on cid ASC. One map-side
-    fold per row over the broadcast per-subspace codeword map — the
-    `_assign1` shape: the r11 form (broadcast join to K rows/vector +
-    a (m, vec_id)-keyed row_number exchange) moved an n x M x K frame
-    through a window sort per call; the fold moves nothing (r12, guide
-    §2.4 — the window exchange was removable outright). `keep` lets the
-    trainer ride `sv` through assignment instead of joining it back."""
-    return _pq_nearest_code_map(subs, _pq_cand_map(cb), keep)
-
-
-def _pq_lloyd(subs: DataFrame, iters: int = _PQ_ITERS, k: int = _PQ_K) -> DataFrame:
-    """Deterministic Lloyd over ALL subspaces at once — one frame
-    (m, vec_id, sv), one corpus pass per iteration instead of M: seeds
-    are the k lowest-id subvectors per subspace, assignment by rounded
-    squared-L2 (cid ASC ties), means through order-independent
-    DECIMAL(25,15) sums — the same training contract as `kmeans_train`,
-    restated for L2 on 16-dim slices so the unrolled-SQL oracle
-    hash-matches the trained codebooks themselves, not just the final
-    search. Returns (m, cid, cv).
-
-    r12 shape (the `kmeans_train` optimizations ported to the PQ
-    trainer, guide §2.3/§2.4): assignment is the map-side fold (no
-    window exchange, no join-the-subvectors-back — `sv` rides the
-    assignment row), the per-dim means are ONE wide (m, cid)-keyed
-    aggregate (dsub decimal sums + a count in a single partial-agg
-    shuffle, replacing the dims-anchor explode + two groupBys), and
-    each round localCheckpoints the loop state so the iteration plans
-    stay flat instead of nesting 2x per round."""
-    return _explode_cmap(_pq_lloyd_cmap(subs, iters, k))
 
 
 def _explode_cmap(cmap: DataFrame) -> DataFrame:
@@ -1159,26 +1062,30 @@ def _explode_cmap(cmap: DataFrame) -> DataFrame:
     )
 
 
-def _pq_lloyd_cmap(
-    subs: DataFrame, iters: int = _PQ_ITERS, k: int = _PQ_K
-) -> DataFrame:
-    """`_pq_lloyd`'s loop core with the codeword MAP as the loop state
-    (r13 — the `_kmeans_train_cands` construction restated per
-    subspace): each round is one eager action covering the broadcast of
-    the previous one-row map, the per-row assignment fold, the wide
-    (m, cid)-keyed partial aggregate, a map_from_entries reduction
-    keyed on (m, cid) structs, and an in-map transform applying the new
-    means with the empty-cell fallback. The r12 shape re-aggregated the
-    exploded M x K codebook table into the broadcast map once per round
-    (`_pq_cand_map` inside `_pq_nearest_code`) and joined the new means
-    back into the table — both removable outright (guide §2.4).
-    Value-identical: same floored-L2/cid-ASC assignment fold, same
-    order-independent DECIMAL(25,15) per-dim sums and
-    sum::double / count division; the try_element_at miss -> coalesce
-    fallback reproduces the old LEFT JOIN + COALESCE per (m, cid); each
-    subspace's array stays cid-ASC because transform preserves
-    positions and no codeword is ever added or removed."""
-    cent = subs.filter(F.col("vec_id") < k).select(
+def _pq_lloyd(subs: DataFrame) -> DataFrame:
+    """Deterministic Lloyd over ALL subspaces at once — one frame
+    (m, vec_id, sv), one corpus pass per round instead of M: seeds are
+    the _PQ_K lowest-id subvectors per subspace, then _PQ_ITERS rounds
+    of assignment by floored squared-L2 (cid ASC ties) and means
+    through order-independent DECIMAL(25,15) sums — the same training
+    contract as `kmeans_train`, restated for L2 on 16-dim slices so the
+    unrolled-SQL oracle hash-matches the trained codebooks themselves,
+    not just the final search. Returns the codebooks as ONE row:
+    `_cmap`, m -> cid-ASC array of (cid, cv) (`_pq_cand_map`'s layout);
+    `_explode_cmap` gives the (m, cid, cv) table.
+
+    Each round is one eager action (localCheckpoint of the one-row map)
+    covering the broadcast of the previous map, the per-row assignment
+    fold (`sv` rides the assignment row, nothing is joined back), the
+    wide (m, cid)-keyed partial aggregate (dsub decimal sums + a count
+    in a single shuffle), a map_from_entries reduction keyed on
+    (m, cid) structs, and an in-map transform applying the new means.
+    A codeword whose cell emptied keeps its previous vector
+    (try_element_at miss -> coalesce), as the oracle's LEFT JOIN +
+    COALESCE does; each subspace's array stays cid-ASC because
+    transform preserves positions and no codeword is ever added or
+    removed."""
+    cent = subs.filter(F.col("vec_id") < _PQ_K).select(
         "m", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
     )
     sum_cols = [
@@ -1200,8 +1107,8 @@ def _pq_lloyd_cmap(
         )
     ).alias("mm")
     cmap = _pq_cand_map(cent)
-    for _ in range(iters):
-        asg = _pq_nearest_code_map(subs, cmap, keep=("sv",)).select(
+    for _ in range(_PQ_ITERS):
+        asg = _pq_nearest_code(subs, cmap, keep=("sv",)).select(
             "m", F.col("code").alias("cid"), "sv"
         )
         mm = (
@@ -1359,8 +1266,8 @@ def pq_adc_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered query is the cascade, not the raw code ranking.
 
     Scale design: codebooks are M x K rows — broadcast; encoding is a
-    broadcast join + per-vector argmin (narrow K-rows-per-vector
-    exchange, the `_ivf_assign` shape); the search scan reads only the
+    per-vector argmin fold over the broadcast one-row codeword map (no
+    exchange, the `_assign1` shape); the search scan reads only the
     M-small-int code columns (4 bytes/vector vs 256 for float32 — the
     64x scan-volume reduction that makes the exhaustive ADC pass
     feasible at 100 TB), joins the broadcast 10 x M x K LUT map-side,
@@ -1382,14 +1289,11 @@ def pq_adc_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     subs = persist_tracked(_pq_subvectors(v))
-    # the trained codebook's native layout IS the encoding broadcast:
-    # encoding folds over the checkpointed loop state directly, and the
-    # LUT build reads the exploded view of the same one-row leaf — the
-    # r12 shape persisted the exploded table and re-aggregated it into
-    # the broadcast map for encoding (r13, guide §1.2-1)
-    cmap = _pq_lloyd_cmap(subs)
+    # encoding folds over the trained one-row map; the LUT build reads
+    # the exploded view of the same checkpointed leaf
+    cmap = _pq_lloyd(subs)
     cb = _explode_cmap(cmap)
-    codes = _pq_nearest_code_map(subs, cmap)
+    codes = _pq_nearest_code(subs, cmap)
     luts = (
         subs.filter(F.col("vec_id") < 10)
         .join(F.broadcast(cb), "m")
@@ -2287,13 +2191,12 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id")
         .agg(F.sum(F.col("pd").cast("decimal(25,15)")).cast("double").alias("s"))
     )
-    # Single-pass two-sided extreme selection (r13, guide §1.2-1 —
-    # VERDICT r12 item 5): the r12 shape ran the max and min frontiers
-    # as two independent TakeOrdered scans that each re-ran the
-    # projection pass (measured: two ~1.1-1.2 s 32-task jobs, zero
-    # exchange reuse between the branches even at runtime), and the r12
-    # localCheckpoint attempt was measured a wash (3.00 -> 3.25 s) and
-    # reverted. This shape evaluates the projection ONCE: a
+    # Single-pass two-sided extreme selection: two independent
+    # TakeOrdered scans for the max and min frontiers would each re-run
+    # the projection pass (measured: two ~1.1-1.2 s 32-task jobs, zero
+    # exchange reuse between the branches even at runtime), and a
+    # localCheckpoint of the projection measured a wash (3.00 -> 3.25 s).
+    # This shape evaluates the projection ONCE: a
     # per-partition pre-selection keeps each partition's 5 best rows
     # under BOTH total orders (two row_number windows sharing one
     # narrow (vec_id, pc1_e6, pid) exchange — any global-top-5 row is
@@ -2427,14 +2330,8 @@ def semdedup_pairs(
     unrolled oracle stays tractable; tools/scale_probe.py calls this
     directly with cells grown proportionally to the corpus (the
     production sizing rule, SCALE.md)."""
-    # no persist: the trained quantizer is already a checkpointed leaf
-    # (r12); assignment folds over its NATIVE one-row array, skipping
-    # the explode -> _cand_array re-agg -> re-broadcast roundtrip the
-    # (cid, cv) view would pay (r13, guide §1.2-1)
-    if iters:
-        cells = _assign1_cands(v, _kmeans_train_cands(v, iters, n_cells=n_cells))
-    else:
-        cells = _assign1(v, kmeans_train(v, iters=0, n_cells=n_cells))
+    # no persist: the trained quantizer is a checkpointed one-row leaf
+    cells = _assign1(v, kmeans_train(v, iters, n_cells=n_cells))
     return _semdedup_prune_from_cells(v, cells, tau)
 
 
@@ -2457,8 +2354,8 @@ def _semdedup_prune_from_cells(
     # arrays once (the dot) instead of three times (dot + both norms).
     # PERSISTED: m feeds BOTH sides of the pair join, so without it the
     # whole assignment subtree runs twice — cheap for the flat argmax,
-    # but the hierarchical routing chain doubled wall time when
-    # recomputed (measured 11.6 s -> 6.2 s at sf0.1 on the r8 shape).
+    # but a recomputed hierarchical routing chain measured 11.6 s
+    # against 6.2 s persisted at sf0.1.
     merged = cells if "v" in cells.columns else cells.join(v, "vec_id")
     m = persist_tracked(merged.withColumn("nrm", V.l2_norm(F.col("v"))))
     a = m.select(
@@ -2605,14 +2502,14 @@ def semdedup_prune_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pruned vec_id, cell, keeper, dooming similarity); the cell
     boundaries differ because the quantizer is the approximate one.
 
-    Scale rationale (closes the SCALE.md note on `semdedup_prune
-    [cells=16k]` and VERDICT r8 item 3): with cells ∝ corpus n,
-    FULL-corpus Lloyd training is iters × n × cells ∝ n² — the measured
-    1.28→1.83 rising per-doubling ratio. Sample training costs
-    iters × S × cells ∝ n (S fixed), and hierarchical assignment
-    replaces the n × cells flat argmax with n × branch × log_branch
-    cells ∝ n·log n — the r8 two-level shape's measured n^1.5 term
-    (4.5× at the x32 last doubling) came from its fixed depth. At the
+    Scale rationale (the SCALE.md note on `semdedup_prune
+    [cells=16k]`): with cells ∝ corpus n, FULL-corpus Lloyd training is
+    iters × n × cells ∝ n² — the measured 1.28→1.83 rising
+    per-doubling ratio. Sample training costs iters × S × cells ∝ n
+    (S fixed), and hierarchical assignment replaces the n × cells flat
+    argmax with n × branch × log_branch cells ∝ n·log n — a fixed-depth
+    two-level quantizer measured an n^1.5 term (4.5× at the x32 last
+    doubling). At the
     registered sizing (cells=16, branch=4) the hierarchy is exactly one
     4-super level, so the unrolled two-level oracle is unchanged: the
     ENTIRE pipeline (sample, both Lloyd chains, routing, pair scan)
@@ -2639,74 +2536,55 @@ def semdedup_pairs_sampled(
     cells grown ∝ corpus (the sizing rule whose full-train cost curve
     this construction flattens, SCALE.md) and the hierarchy deepens
     automatically, keeping per-vector assignment work O(branch ·
-    log_branch cells) instead of the r8 two-level shape's
+    log_branch cells) instead of a fixed two-level quantizer's
     O(n_super + cells/n_super) = O(√cells)."""
     samp = v.filter(F.col("vec_id") % sample_mod == 0)
-    # no persist: the trained quantizer is already a checkpointed leaf
-    # (r12); its native one-row array rides along so the hierarchy build
-    # never re-aggregates it (r13)
-    cands = (
-        _kmeans_train_cands(
-            samp,
-            iters,
-            n_cells=n_cells,
-            seed_below=n_cells * sample_mod,
-            seeds=seeds,
-        )
-        if iters
-        else None
+    # no persist: the trained quantizer is a checkpointed one-row leaf
+    cands = kmeans_train(
+        samp,
+        iters,
+        n_cells=n_cells,
+        seed_below=n_cells * sample_mod,
+        seeds=seeds,
     )
-    cent = (
-        _explode_cands(cands)
-        if cands is not None
-        else kmeans_train(
-            samp,
-            iters=0,
-            n_cells=n_cells,
-            seed_below=n_cells * sample_mod,
-            seeds=seeds,
-        )
-    )
-    cells = hier_assign(
-        v, cent, n_cells=n_cells, branch=branch, cent_cands=cands
-    )
+    cells = hier_assign(v, cands, n_cells=n_cells, branch=branch)
     return _semdedup_prune_from_cells(v, cells, tau)
 
 
 def hier_assign(
     v: DataFrame,
-    cent: DataFrame,
+    cands: DataFrame,
     n_cells: int,
     branch: int = _SD_BRANCH,
-    cent_cands: DataFrame | None = None,
 ) -> DataFrame:
-    """(vec_id, cell, v) via a hierarchical coarse quantizer: build
-    levels above the centroid table bottom-up (each level = 1 Lloyd
-    iteration over the level below, ceil(size/branch) seeds = its
-    lowest-cid nodes) until a level fits in `branch` nodes, then route
-    each vector top-down — argmax-cosine over the ≤branch top nodes,
-    then over the chosen node's children at each level, down to its
-    cell. At branch=4, cells=16 this is exactly one 4-super level: the
-    r8 two-level shape the registered oracle unrolls, value-identical.
+    """(vec_id, cell, v) via a hierarchical coarse quantizer over the
+    one-row quantizer `cands` (`kmeans_train`'s output): build levels
+    above it bottom-up (each level = 1 Lloyd iteration over the level
+    below, ceil(size/branch) seeds = its lowest-cid nodes) until a level
+    fits in `branch` nodes, then route each vector top-down —
+    argmax-cosine over the ≤branch top nodes, then over the chosen
+    node's children at each level, down to its cell. At branch=4,
+    cells=16 this is exactly one 4-super level: the two-level shape the
+    registered oracle unrolls, value-identical.
 
-    Scale design (VERDICT r8 items 3+4):
+    Scale design:
     - per-vector assignment work is O(branch · log_branch cells) — the
       depth grows with cells (∝ corpus under the SemDeDup sizing rule)
-      while each level scores only ~branch candidates, so the r8
-      measured n^1.5 assignment term flattens to n·log n;
+      while each level scores only ~branch candidates, so a fixed-depth
+      quantizer's measured n^1.5 assignment term flattens to n·log n;
     - the corpus NEVER shuffles during assignment AND never enters a
       join: the whole descent is ONE projection — the complete routing
       tree ((level, parent) -> sorted child-candidate array) is folded
       into a single broadcast map row, and each vector walks it with a
       nested per-row argmax fold, top node first, then map-lookup of
-      the chosen node's children at each level. The first r9 shape
-      (one broadcast-hint hash join per level) was measured 6x slower
-      than the FLAT assigner at probe sizes: every level added a join
-      boundary, a fresh broadcast subtree, and a whole-stage-codegen
-      recompile, and that per-plan constant dominated the (tiny) fold
-      work — the tree-map walk compiles once and pipelines in the scan
-      stage (tests/test_exchange_audit.py pins the no-corpus-shuffle
-      claim under autoBroadcastJoinThreshold=-1);
+      the chosen node's children at each level. One broadcast-hint hash
+      join per level measured 6x slower than the FLAT assigner at probe
+      sizes: every level added a join boundary, a fresh broadcast
+      subtree, and a whole-stage-codegen recompile, and that per-plan
+      constant dominated the (tiny) fold work — the tree-map walk
+      compiles once and pipelines in the scan stage
+      (tests/test_exchange_audit.py pins the no-corpus-shuffle claim
+      under autoBroadcastJoinThreshold=-1);
     - the broadcast tree is centroid-sized: O(cells · d) doubles
       across all levels (a geometric series over the level sizes). The
       hierarchy BUILD is Θ(cells²/branch) pairwise scorings over the
@@ -2717,36 +2595,18 @@ def hier_assign(
     the map lookup misses, the fold over the NULL array yields a NULL
     node, and the NULL cascades to a filtered-out NULL cell: identical
     to the unrolled oracle's inner join through c2s (parity-preserved,
-    not a defect).
-
-    `cent_cands` (r13): the bottom level's quantizer in its native
-    one-row `_cand_array` layout, when the caller trained it via
-    `_kmeans_train_cands` — reused for the top array on a depth-0
-    hierarchy instead of re-aggregating `cent`. Each BUILT level keeps
-    its own native row the same way, so the per-level link assignment
-    and the top array broadcast the training loop's checkpointed state
-    directly (one `_cand_array` aggregate + broadcast build saved per
-    level — guide §1.2-1)."""
-    levels = [cent]
-    rows: list[DataFrame | None] = [cent_cands]
-    sizes = [n_cells]
-    while sizes[-1] > branch:
-        m = -(-sizes[-1] // branch)
-        pts = levels[-1].select(
-            F.col("cid").alias("vec_id"), F.col("cv").alias("v")
-        )
-        seeds = levels[-1].orderBy("cid").limit(m)
+    not a defect)."""
+    rows = [cands]  # each level's one-row quantizer, bottom-up
+    size = n_cells
+    while size > branch:
+        size = -(-size // branch)
+        level = _explode_cands(rows[-1])
+        pts = level.select(F.col("cid").alias("vec_id"), F.col("cv").alias("v"))
+        seeds = level.orderBy("cid").limit(size)
         # no persist: the training output is already a checkpointed leaf
-        cr = _kmeans_train_cands(pts, iters=1, n_cells=m, seeds=seeds)
-        levels.append(_explode_cands(cr))
-        rows.append(cr)
-        sizes.append(m)
-    depth = len(levels) - 1
-    top = (
-        rows[-1]
-        if rows[-1] is not None
-        else _cand_array(levels[-1])
-    ).select(F.col("cands").alias("top"))
+        rows.append(kmeans_train(pts, iters=1, n_cells=size, seeds=seeds))
+    depth = len(rows) - 1
+    top = rows[-1].select(F.col("cands").alias("top"))
     if depth == 0:
         onerow = top
     else:
@@ -2755,21 +2615,16 @@ def hier_assign(
         # lookup struct exactly)
         ents = []
         for k in range(depth):
-            pts = levels[k].select(
-                F.col("cid").alias("vec_id"), F.col("cv").alias("v")
-            )
+            level = _explode_cands(rows[k])
+            pts = level.select(F.col("cid").alias("vec_id"), F.col("cv").alias("v"))
             # fold argmax, not the window _ivf_assign: value-identical at
             # nprobe=1 (same floored cosine, same cid-ASC tie — the
-            # _assign1 docstring contract) and the centroid-table link
-            # build stops paying a row_number exchange per level (r12);
-            # the fold runs over the parent level's NATIVE checkpointed
-            # array (rows[k+1] always exists for built levels), not a
-            # re-aggregation of its exploded view (r13)
-            link = _assign1_cands(pts, rows[k + 1]).select(
+            # _assign1 docstring contract) with no row_number exchange
+            link = _assign1(pts, rows[k + 1]).select(
                 F.col("vec_id").alias("child"), F.col("cell").alias("parent")
             )
             ents.append(
-                link.join(levels[k], link["child"] == levels[k]["cid"])
+                link.join(level, link["child"] == level["cid"])
                 .groupBy("parent")
                 .agg(
                     F.array_sort(
@@ -2826,9 +2681,8 @@ def hier_assign(
 
 
 # Incremental semantic dedup: the SemDeDup analog of
-# `corpus_dedup_rounds` (exact) and `incremental_lsh_rounds` (near-dup)
-# — closes the incremental trilogy (VERDICT r10 "What's missing" item
-# 3). Embedding micro-batches arrive in K rounds against PERSISTENT
+# `corpus_dedup_rounds` (exact) and `incremental_lsh_rounds` (near-dup).
+# Embedding micro-batches arrive in K rounds against PERSISTENT
 # state: a centroid store trained ONCE on the first snapshot and then
 # frozen (retraining per increment would re-partition every historical
 # cell), plus a cell-partitioned store of all prior arrivals.
@@ -2945,33 +2799,16 @@ def semdedup_rounds(
     )
 
     samp = v.filter(F.col("vec_id") % k_batches == 0)
-    # no persist: the trained quantizer is already a checkpointed leaf
-    # (r12); its native one-row array rides along so the hierarchy build
-    # never re-aggregates it (r13)
-    cands = (
-        _kmeans_train_cands(
-            samp,
-            iters,
-            n_cells=n_cells,
-            seed_below=n_cells * k_batches,
-            seeds=seeds,
-        )
-        if iters
-        else None
-    )
-    cent = (
-        _explode_cands(cands)
-        if cands is not None
-        else kmeans_train(
-            samp,
-            iters=0,
-            n_cells=n_cells,
-            seed_below=n_cells * k_batches,
-            seeds=seeds,
-        )
+    # no persist: the trained quantizer is a checkpointed one-row leaf
+    cands = kmeans_train(
+        samp,
+        iters,
+        n_cells=n_cells,
+        seed_below=n_cells * k_batches,
+        seeds=seeds,
     )
     m = persist_tracked(
-        hier_assign(v, cent, n_cells=n_cells, branch=branch, cent_cands=cands)
+        hier_assign(v, cands, n_cells=n_cells, branch=branch)
         .withColumn("nrm", V.l2_norm(F.col("v")))
         .withColumn("batch_id", (F.col("vec_id") % k_batches).cast("int"))
     )
@@ -2980,22 +2817,20 @@ def semdedup_rounds(
         arr = m.filter(F.col("batch_id") == k)
         # The round-k store is ONE filter over the persisted assignment
         # cache, not a union of the k prior batch frames: a k-branch
-        # union scans the cache k times per broadcast build (the r12
-        # job profile showed the store-side builds growing 0.5 -> 1.4 s
-        # across rounds, 64/96/128 tasks — guide §2.3, don't rescan what
-        # one predicate can select). batch_id < k selects exactly the
-        # rows the union held, so every round's verdict is
-        # byte-identical; the streaming face is untouched (its store is
-        # the parquet read, which is already one relation).
+        # union scans the cache k times per broadcast build (measured:
+        # store-side builds growing 0.5 -> 1.4 s across rounds,
+        # 64/96/128 tasks). batch_id < k selects exactly the rows such
+        # a union holds; the streaming face's store is the parquet
+        # read, which is already one relation.
         store = m.filter(F.col("batch_id") < k) if k else None
         rounds.append(semdedup_pair_scan(arr, store, tau))
     allp = rounds[0]
     for r in rounds[1:]:
         allp = allp.unionByName(r)
     # ONE verdict aggregation over the union of the K per-round pair
-    # scans, instead of K per-round groupBys + a verdict union (r13,
-    # guide §2.3 — the r12 shape ran 4 groupBy exchanges where one
-    # suffices). Value-identical to union-of-round-verdicts: round k's
+    # scans, instead of K per-round groupBys + a verdict union (K
+    # groupBy exchanges where one suffices). Value-identical to
+    # union-of-round-verdicts: round k's
     # pair scan only emits idb from batch k, so the K pair sets are
     # key-disjoint in idb and the groupBy distributes over their union
     # (the semdedup_verdicts docstring lemma). The streaming face

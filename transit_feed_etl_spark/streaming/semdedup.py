@@ -28,7 +28,7 @@ Scale design:
   appended to the store — a lazy verdict plan re-evaluated after the
   append would pair arrivals against themselves via the store and
   prune everything with cos 1.0.
-- foreachBatch is AT-LEAST-ONCE (ADVICE r11): if a batch fails after
+- foreachBatch is AT-LEAST-ONCE: if a batch fails after
   the store write and is retried, a plain append would leave the
   retried batch's own rows in the store — the store join has no
   ida != idb guard, so every vector would pair with its own copy at
@@ -47,11 +47,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-# single source of truth for the prune threshold — a duplicated literal
-# here could silently drift from the batch face (ADVICE r11); safe to
-# import at module level: queries/similarity.py only imports THIS module
-# lazily inside the twin builder, so there is no import cycle
-from transit_feed_etl_spark.queries.similarity import _SEMDEDUP_TAU as _TAU
+# single source of truth for the prune threshold and the training
+# rounds — a duplicated literal here could silently drift from the batch
+# face; safe to import at module level: queries/similarity.py only
+# imports THIS module lazily inside the twin builder, so there is no
+# import cycle
+from transit_feed_etl_spark.queries.similarity import (
+    _KM_ITERS,
+    _SEMDEDUP_TAU as _TAU,
+    _cand_array,
+    _explode_cands,
+    hier_assign,
+    kmeans_train,
+)
 
 
 def semdedup_pair_scan(
@@ -62,18 +70,16 @@ def semdedup_pair_scan(
     at cos6 >= tau. `batch` and `store` carry (vec_id, cell, v, nrm);
     the store holds strictly-earlier arrivals.
 
-    ONE cell-equijoin per round (r13, guide §2.4/§3.1): the a-side is
-    the union of the store (tagged pre_a = true — everything in it
-    precedes the whole batch) and the batch itself (pre_a = false — in
-    one batch, arrival order is id order), and the precedence residual
-    `pre_a OR ida < idb` rides the equijoin. The r12 shape ran TWO
-    joins per round (in-batch with the id< residual, store with none)
-    and unioned their outputs — two broadcast builds and two join
-    stages per round for the identical pair set: for a ∈ batch the
-    residual reduces to ida < idb, for a ∈ store to true, so the single
-    join's pair multiset is exactly the old union, row for row.
-    cos6 is FLOOR-truncated at 6dp (r12 repin, the portable IEEE form —
-    see queries/similarity.py's module docstring), matching the batch
+    ONE cell-equijoin per round: the a-side is the union of the store
+    (tagged pre_a = true — everything in it precedes the whole batch)
+    and the batch itself (pre_a = false — in one batch, arrival order
+    is id order), and the precedence residual `pre_a OR ida < idb`
+    rides the equijoin. For a ∈ batch the residual reduces to
+    ida < idb, for a ∈ store to true, so the one join yields the same
+    pair multiset as an in-batch join unioned with a store join, with
+    one broadcast build and one join stage instead of two.
+    cos6 is FLOOR-truncated at 6dp (the portable IEEE form — see
+    queries/similarity.py's module docstring), matching the batch
     face's `_semdedup_prune_from_cells` expression exactly."""
     cos6 = (
         F.floor(
@@ -118,7 +124,7 @@ def semdedup_verdicts(pairs: DataFrame) -> DataFrame:
     key-disjoint unions of per-round pair scans: grouping the union of
     K rounds' pairs equals unioning K per-round groupings — the fold
     the batch twin (queries/similarity.py:semdedup_rounds) exploits to
-    run ONE verdict aggregation for all rounds (r13, guide §2.3)."""
+    run ONE verdict aggregation for all rounds."""
     return pairs.groupBy(F.col("idb").alias("vec_id")).agg(
         F.min("cell_b").cast("int").alias("cell"),
         F.min("ida").cast("bigint").alias("keeper_id"),
@@ -144,14 +150,13 @@ def _dot(a, b):
     return V.dot(a, b)
 
 
-def _assigned(v: DataFrame, cent: DataFrame, n_cells: int) -> DataFrame:
-    """(vec_id, cell, v, nrm) via the frozen-centroid broadcast-tree
+def _assigned(v: DataFrame, cands: DataFrame, n_cells: int) -> DataFrame:
+    """(vec_id, cell, v, nrm) via the frozen quantizer's broadcast-tree
     walk, with the store-stable column types."""
     from transit_feed_etl_spark.operators import vectors as V
-    from transit_feed_etl_spark.queries.similarity import hier_assign
 
     return (
-        hier_assign(v, cent, n_cells=n_cells)
+        hier_assign(v, cands, n_cells=n_cells)
         .withColumn("nrm", V.l2_norm(F.col("v")))
         .select(
             F.col("vec_id").cast("long").alias("vec_id"),
@@ -167,27 +172,25 @@ def ensure_centroids(
     cent_path: str,
     first_batch: DataFrame,
     n_cells: int,
-    iters: int = 3,
 ) -> DataFrame:
-    """Read the persistent centroid store, or train it ONCE on the first
-    batch (seeds = its n_cells lowest vec_ids, the deterministic rule
-    the batch twin's oracle unrolls) and freeze it. Frozen centroids are
-    the production posture — see module doc."""
-    from transit_feed_etl_spark.queries.similarity import kmeans_train
-
+    """The frozen one-row quantizer (`kmeans_train`'s layout): read from
+    the persistent (cid, cv) centroid store, or trained ONCE on the
+    first batch (seeds = its n_cells lowest vec_ids, the deterministic
+    rule the batch twin's oracle unrolls) and written there. Frozen
+    centroids are the production posture — see module doc."""
     try:
-        return spark.read.parquet(cent_path)
+        return _cand_array(spark.read.parquet(cent_path))
     except AnalysisException:
         seeds = (
             first_batch.orderBy("vec_id")
             .limit(n_cells)
             .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
         )
-        cent = kmeans_train(
-            first_batch, iters=iters, n_cells=n_cells, seeds=seeds
-        ).localCheckpoint()
-        cent.write.mode("overwrite").parquet(cent_path)
-        return cent
+        cands = kmeans_train(
+            first_batch, iters=_KM_ITERS, n_cells=n_cells, seeds=seeds
+        )
+        _explode_cands(cands).write.mode("overwrite").parquet(cent_path)
+        return cands
 
 
 def semdedup_batch_against_store(
@@ -207,8 +210,8 @@ def semdedup_batch_against_store(
     The store read drops rows carrying this batch_id so a retry never
     pairs the batch against its own earlier, failed write."""
     spark = batch.sparkSession
-    cent = ensure_centroids(spark, cent_path, batch, n_cells)
-    m = _assigned(batch, cent, n_cells)
+    cands = ensure_centroids(spark, cent_path, batch, n_cells)
+    m = _assigned(batch, cands, n_cells)
     try:
         store = spark.read.parquet(store_path)
         # partition discovery surfaces batch_id as a column; exclude the
