@@ -123,6 +123,39 @@ def test_all_bad_batch_is_still_quarantined(spark, tmp_path):
     assert [r["vehicle_id"] for r in quar] == ["bad"]
 
 
+@pytest.mark.xfail(
+    strict=True,
+    reason="replay is not idempotent yet: a replayed batch appends its sink, "
+    "catalog and quarantine rows again (ROADMAP.md direction 3)",
+)
+@pytest.mark.parametrize("geoparquet", [False, True], ids=["plain", "geoparquet"])
+def test_replayed_batch_leaves_outputs_unchanged(spark, tmp_path, geoparquet):
+    """foreachBatch delivers at least once, so a batch can arrive twice
+    under the same batch_id. After the replay the sink, the catalog and
+    the quarantine must read as after one call: (sink, catalog,
+    quarantine) = (2, 2, 1)."""
+    from transit_feed_etl_spark.pipeline.catalog import FileCatalog
+    from transit_feed_etl_spark.streaming.ingest import make_batch_processor
+
+    out, quarantine = str(tmp_path / "out"), str(tmp_path / "quarantine")
+    catalog = FileCatalog(spark, str(tmp_path / "catalog"))
+    process, _ = make_batch_processor(out, catalog, quarantine, geoparquet=geoparquet)
+    ents = [
+        _vehicle_entity("v1", 40.7, -74.0),
+        _vehicle_entity("v2", 40.8, -73.9),
+        _vehicle_entity("bad", 99.0, -500.0),
+    ]
+    batch = _feed_batch(spark, tmp_path, "b0", "2024-03-01T12:00:00", ents)
+    process(batch, 7)
+    process(batch, 7)
+    counts = (
+        spark.read.parquet(out).count(),
+        catalog.total_records(),
+        spark.read.parquet(quarantine).count(),
+    )
+    assert counts == (2, 2, 1)
+
+
 # Spark jobs one GeoParquet tick with a quarantined row launches: the
 # per-hour good/bad aggregate (3: the flatten cache, the shuffle map
 # stage, the collect), the quarantine write (1) and the sink write (2:

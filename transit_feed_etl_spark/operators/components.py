@@ -18,7 +18,7 @@ MapReduce and Beyond", SoCC 2014) drops in for adversarially deep
 graphs; min-label is the right default for dedup workloads.
 
 The fixpoint is engine-independent, so a DuckDB recursive CTE oracle
-value-checks the whole operator (queries/dedup.py::dedup_clusters).
+(`components_sql`) value-checks the whole operator.
 """
 
 from __future__ import annotations
@@ -54,7 +54,7 @@ def connected_components(
     # parallelism. At bench scale (hundreds of edges) this is 1-2
     # partitions instead of inheriting the 32-wide static shuffle width
     # — the rounds were spending their wall time scheduling 32
-    # near-empty tasks per join stage (r12 job profile; the session-wide
+    # near-empty tasks per join stage (job profile; the session-wide
     # AQE cached-plan re-sizing alternative was measured and reverted,
     # session.py). Label values are width-independent (min/least over
     # exact keys; the registry's 8/32/128-partition sweeps pin this).
@@ -72,7 +72,7 @@ def connected_components(
     # which scanned e0 — its only reader. Drop e0 NOW instead of holding
     # both copies of the symmetrized edge list resident for the query's
     # lifetime: at the 100 TB design point the leak doubled the largest
-    # cached relation in the operator (ADVICE r12). release_caches()
+    # cached relation in the operator. release_caches()
     # tolerates the early unpersist (double-unpersist is a no-op).
     e0.unpersist()
     for _ in range(max_iter):
@@ -121,3 +121,24 @@ def connected_components(
         f"connected_components did not converge in {max_iter} rounds "
         "(component diameter exceeds max_iter)"
     )
+
+
+def components_sql(pairs_sql: str, id_col: str) -> str:
+    """DuckDB reference for `connected_components`: the recursive
+    reachability CTEs over the (id_a, id_b) pair query `pairs_sql`,
+    ending in `cc (<id_col>, canonical_id)`, the component minimum per
+    node. Callers append their own CTEs and final SELECT."""
+    return f"""
+    WITH RECURSIVE pairs AS ({pairs_sql}),
+    edges AS (
+      SELECT id_a AS a, id_b AS b FROM pairs
+      UNION
+      SELECT id_b AS a, id_a AS b FROM pairs
+    ),
+    nodes AS (SELECT DISTINCT a AS node FROM edges),
+    reach AS (
+      SELECT node, node AS label FROM nodes
+      UNION
+      SELECT e.b AS node, r.label FROM reach r JOIN edges e ON e.a = r.node
+    ),
+    cc AS (SELECT node AS {id_col}, MIN(label) AS canonical_id FROM reach GROUP BY node)"""

@@ -62,10 +62,6 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
     )
 
 
-def token_count(text: Column | str) -> Column:
-    return F.size(tokens(text))
-
-
 # Portable ASCII-whitespace class. Java's bare \s is [ \t\n\x0B\f\r]
 # while RE2 (DuckDB) \s is [ \t\n\f\r] — NO \x0B — so any
 # oracle-mirrored regex written with \s silently diverges on

@@ -112,8 +112,8 @@ def blocked_cosine_pairs(
     if n_blocks is None:
         # one cheap count job sizes the tiling; per-task input is then
         # bounded at ~2*target_rows_per_block vectors regardless of n
-        # (the r1 review flagged the old fixed n_blocks=8: at 100 TB a
-        # fixed split means ~n/8 rows per task — unbounded memory)
+        # (a fixed n_blocks=8 would mean ~n/8 rows per task at 100 TB —
+        # unbounded memory)
         n_blocks = auto_blocks(
             emb.count(),
             target_rows_per_block,
@@ -175,21 +175,6 @@ def blocked_cosine_pairs(
     return rep.groupBy("_i", "_j").applyInPandas(
         score, "id_a long, id_b long, cos_raw double"
     )
-
-
-def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id: bit i = sign(dot(v, plane_i)).
-    `planes` is a deterministic driver-side constant (seeded numpy),
-    folded into the plan as literals — broadcast for free."""
-    bucket = F.lit(0)
-    for i, p in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(float(x)) for x in p]), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
 
 
 def multitable_codes(vec: Column, planes: list[list[float]], k: int) -> Column:

@@ -24,6 +24,11 @@ from transit_feed_etl_spark.caching import persist_tracked
 from transit_feed_etl_spark.io import table, table_par
 from transit_feed_etl_spark.operators import minhash as MH
 from transit_feed_etl_spark.operators import textfns as TX
+from transit_feed_etl_spark.operators.components import (
+    components_sql,
+    connected_components,
+)
+from transit_feed_etl_spark.operators.prefixfilter import jaccard_prefix_pairs
 from transit_feed_etl_spark.registry import register
 
 _TOKS_SQL = "list_filter(string_split_regex(lower(text), '\\W+'), t -> t <> '')"
@@ -109,20 +114,9 @@ def neardup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the exact baseline that the MinHash-LSH operator approximates."""
     # table_par: the single-row-group testdata file would serialize the
     # CPU-heavy shingle evaluation onto one core (io.py docstring).
-    d = table_par(spark, sf_dir, "documents")
-    # Two-step projection (tokens as an attribute, shingles over it) — see
-    # operators/minhash.py: inlining tokens() into the shingle lambda
-    # re-tokenizes the doc per element_at call (~100x measured).
-    toks = d.select("doc_id", TX.tokens("text").alias("toks"))
-    # Persist the shingle-set relation: it feeds `sizes` (used on both
-    # broadcast sides) and both sides of the shingle self-join — four plan
-    # references that would otherwise each re-run tokenize+shingle.
-    # Tracked cache: released via caching.release_caches() post-action.
-    sh = persist_tracked(
-        toks.select(
-            "doc_id", F.array_distinct(TX.word_shingles(F.col("toks"), 3)).alias("sh")
-        )
-    )
+    # The shingle-set relation feeds `sizes` (used on both broadcast
+    # sides) and both sides of the shingle self-join: four references.
+    sh = _shingle_sets(table_par(spark, sf_dir, "documents"))
     sizes = sh.select("doc_id", F.size("sh").alias("n"))
     # Inner explode drops empty arrays natively — no size() pre-filter.
     e = sh.select("doc_id", F.explode("sh").alias("s"))
@@ -168,9 +162,8 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-# The xxhash64 SimHash queries carry BOUND-STYLE oracles (promoted r12
-# from the r1 driver_exempt rows — VERDICT r11 "What's missing" #3, the
-# r5 sketch pattern): xxhash64 does not exist in DuckDB and its inputs
+# The xxhash64 SimHash queries carry BOUND-STYLE oracles, as the sketch
+# queries do: xxhash64 does not exist in DuckDB and its inputs
 # are the corpus tokens, so the raw fingerprints cannot be folded as
 # literals (unlike ann_lsh_topk's data-independent hyperplanes). The
 # checked columns are therefore exact portables the oracle recomputes
@@ -392,20 +385,8 @@ def simhash_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_clusters",
-    oracle=f"""
-    WITH RECURSIVE pairs AS ({_JACCARD_PAIRS_SQL}),
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION
-      SELECT id_b AS a, id_a AS b FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT a AS node FROM edges),
-    reach AS (
-      SELECT node, node AS label FROM nodes
-      UNION
-      SELECT e.b AS node, r.label FROM reach r JOIN edges e ON e.a = r.node
-    ),
-    cc AS (SELECT node AS doc_id, MIN(label) AS canonical_id FROM reach GROUP BY node)
+    oracle=components_sql(_JACCARD_PAIRS_SQL, "doc_id")
+    + """
     SELECT cc.doc_id, cc.canonical_id,
            CAST(COUNT(*) OVER (PARTITION BY cc.canonical_id) AS INT) AS cluster_size
     FROM cc
@@ -424,30 +405,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Value-level oracle: min-label propagation reaches the same fixpoint
     as DuckDB's recursive reachability CTE — the iteration strategy is
     engine-specific, the result is not."""
-    from transit_feed_etl_spark.operators.components import connected_components
-    from transit_feed_etl_spark.operators.prefixfilter import jaccard_prefix_pairs
-
-    d = table_par(spark, sf_dir, "documents")
-    toks = d.select("doc_id", TX.tokens("text").alias("toks"))
-    sh = persist_tracked(
-        toks.select(
-            "doc_id", F.array_distinct(TX.word_shingles(F.col("toks"), 3)).alias("sh")
-        )
-    )
-    # materialize the shingle cache BEFORE the pair join references it
-    # 4x, then materialize the pair relation itself: the component loop
-    # re-reads its edge input every round, and an unmaterialized edge
-    # lineage would replay the whole shingle pipeline per round
-    # (measured: the loop goes from minutes to seconds at sf0.1)
-    sh.count()
-    pairs = persist_tracked(
-        jaccard_prefix_pairs(sh, id_col="doc_id", set_col="sh", threshold=0.35)
-    )
-    cc = connected_components(pairs, src="id_a", dst="id_b")
+    cc = _jaccard_components(table_par(spark, sf_dir, "documents"))
     w = W.partitionBy("canonical_id")
     return (
-        cc.select(F.col("node").alias("doc_id"), F.col("label").alias("canonical_id"))
-        .withColumn("cluster_size", F.count(F.lit(1)).over(w).cast("int"))
+        cc.withColumn("cluster_size", F.count(F.lit(1)).over(w).cast("int"))
         .orderBy("canonical_id", "doc_id")
     )
 
@@ -461,44 +422,54 @@ def neardup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     make the naive self-join quadratic never join. Recall is 1.0 by the
     prefix principle (not probabilistic like MinHash-LSH), so this is
     the exact scale path; same oracle as the naive join."""
-    d = table_par(spark, sf_dir, "documents")
+    return _prefix_pairs(table_par(spark, sf_dir, "documents")).orderBy(
+        "id_a", "id_b"
+    )
+
+
+def _shingle_sets(d: DataFrame) -> DataFrame:
+    """(doc_id, sh): each document's distinct word-3-gram set, cached
+    (a tracked cache, released after the query's action). Tokens are
+    projected as an attribute first and shingled over it: inlining
+    tokens() into the shingle lambda re-tokenizes the doc per
+    element_at call (~100x measured, operators/minhash.py)."""
     toks = d.select("doc_id", TX.tokens("text").alias("toks"))
-    # Persist: the shingle-set relation feeds the frequency agg, the
-    # prefix ranking, and both verification sides (4 plan references).
-    # Tracked cache: released via caching.release_caches() post-action.
-    sh = persist_tracked(
+    return persist_tracked(
         toks.select(
             "doc_id", F.array_distinct(TX.word_shingles(F.col("toks"), 3)).alias("sh")
         )
     )
-    # Materialize the cache BEFORE the pair join references it from
-    # multiple plan branches — otherwise the two verification sides race
-    # to fill it and each recomputes the CPU-heavy shingle pipeline
-    # (measured 5.8s -> 3.3s warm at sf0.1, same fix as dedup_clusters).
-    sh.count()
-    from transit_feed_etl_spark.operators.prefixfilter import jaccard_prefix_pairs
 
-    return jaccard_prefix_pairs(
-        sh, id_col="doc_id", set_col="sh", threshold=0.35
-    ).orderBy("id_a", "id_b")
+
+def _prefix_pairs(d: DataFrame) -> DataFrame:
+    """Exact Jaccard >= 0.35 pairs of `d`'s documents by the prefix-filtered
+    join. The shingle cache feeds the frequency agg, the prefix ranking
+    and both verification sides, so it is materialized BEFORE the join
+    references it: otherwise the branches race to fill it and each
+    recomputes the CPU-heavy shingle pipeline (measured 5.8s -> 3.3s
+    warm at sf0.1)."""
+    sh = _shingle_sets(d)
+    sh.count()
+    return jaccard_prefix_pairs(sh, id_col="doc_id", set_col="sh", threshold=0.35)
+
+
+def _jaccard_components(d: DataFrame) -> DataFrame:
+    """(doc_id, canonical_id) for every document with a near-duplicate:
+    `_prefix_pairs` resolved into connected components, canonical id =
+    component minimum. The pair relation is cached because the
+    component loop re-reads its edge input every round; an uncached
+    edge lineage would replay the whole shingle pipeline per round
+    (measured: minutes -> seconds at sf0.1)."""
+    pairs = persist_tracked(_prefix_pairs(d))
+    return connected_components(pairs, src="id_a", dst="id_b").select(
+        F.col("node").alias("doc_id"), F.col("label").alias("canonical_id")
+    )
 
 
 @register(
     "dedup_keep_best",
-    oracle=f"""
-    WITH RECURSIVE pairs AS ({_JACCARD_PAIRS_SQL}),
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION
-      SELECT id_b AS a, id_a AS b FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT a AS node FROM edges),
-    reach AS (
-      SELECT node, node AS label FROM nodes
-      UNION
-      SELECT e.b AS node, r.label FROM reach r JOIN edges e ON e.a = r.node
-    ),
-    cc AS (SELECT node AS doc_id, MIN(label) AS canonical_id FROM reach GROUP BY node),
+    oracle=components_sql(_JACCARD_PAIRS_SQL, "doc_id")
+    + """,
     j AS (
       SELECT cc.doc_id, cc.canonical_id, d.n_chars
       FROM cc JOIN documents d ON d.doc_id = cc.doc_id
@@ -523,23 +494,8 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete near-dup pipeline a training corpus actually runs. The
     survivor pick is one max_by aggregate over the cluster labels (no
     window over the corpus); quality metadata joins in by doc key."""
-    from transit_feed_etl_spark.operators.components import connected_components
-    from transit_feed_etl_spark.operators.prefixfilter import jaccard_prefix_pairs
-
     d = table_par(spark, sf_dir, "documents")
-    toks = d.select("doc_id", TX.tokens("text").alias("toks"))
-    sh = persist_tracked(
-        toks.select(
-            "doc_id", F.array_distinct(TX.word_shingles(F.col("toks"), 3)).alias("sh")
-        )
-    )
-    sh.count()  # materialize before the 4-way pair-join reuse
-    pairs = persist_tracked(
-        jaccard_prefix_pairs(sh, id_col="doc_id", set_col="sh", threshold=0.35)
-    )
-    cc = connected_components(pairs, src="id_a", dst="id_b").select(
-        F.col("node").alias("doc_id"), F.col("label").alias("canonical_id")
-    )
+    cc = _jaccard_components(d)
     withq = cc.join(d.select("doc_id", "n_chars"), "doc_id")
     return (
         withq.groupBy("canonical_id")
@@ -557,21 +513,8 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "softdedup_weights",
-    oracle=f"""
-    WITH RECURSIVE pairs AS ({_JACCARD_PAIRS_SQL}),
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION
-      SELECT id_b AS a, id_a AS b FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT a AS node FROM edges),
-    reach AS (
-      SELECT node, node AS label FROM nodes
-      UNION
-      SELECT e.b AS node, r.label FROM reach r JOIN edges e ON e.a = r.node
-    ),
-    cc AS (SELECT node AS doc_id, MIN(label) AS canonical_id
-           FROM reach GROUP BY node),
+    oracle=components_sql(_JACCARD_PAIRS_SQL, "doc_id")
+    + """,
     sz AS (SELECT canonical_id, COUNT(*) AS n FROM cc GROUP BY canonical_id),
     j AS (
       SELECT d.doc_id,
@@ -617,23 +560,8 @@ def softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     a canonical-keyed size aggregate — both key-width — and the
     effective size reduces to ONE broadcast row. Value-level oracle:
     the recursive reachability CTE + the same integer weight law."""
-    from transit_feed_etl_spark.operators.components import connected_components
-    from transit_feed_etl_spark.operators.prefixfilter import jaccard_prefix_pairs
-
     d = table_par(spark, sf_dir, "documents")
-    toks = d.select("doc_id", TX.tokens("text").alias("toks"))
-    sh = persist_tracked(
-        toks.select(
-            "doc_id", F.array_distinct(TX.word_shingles(F.col("toks"), 3)).alias("sh")
-        )
-    )
-    sh.count()  # materialize before the 4-way pair-join reuse
-    pairs = persist_tracked(
-        jaccard_prefix_pairs(sh, id_col="doc_id", set_col="sh", threshold=0.35)
-    )
-    cc = connected_components(pairs, src="id_a", dst="id_b").select(
-        F.col("node").alias("doc_id"), F.col("label").alias("canonical_id")
-    )
+    cc = _jaccard_components(d)
     sz = cc.groupBy("canonical_id").agg(F.count(F.lit(1)).alias("n"))
     j = (
         d.select("doc_id")
@@ -718,20 +646,8 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cluster_aware_split",
-    oracle=f"""
-    WITH RECURSIVE pairs AS ({_JACCARD_PAIRS_SQL}),
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION
-      SELECT id_b AS a, id_a AS b FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT a AS node FROM edges),
-    reach AS (
-      SELECT node, node AS label FROM nodes
-      UNION
-      SELECT e.b AS node, r.label FROM reach r JOIN edges e ON e.a = r.node
-    ),
-    cc AS (SELECT node AS doc_id, MIN(label) AS canonical_id FROM reach GROUP BY node),
+    oracle=components_sql(_JACCARD_PAIRS_SQL, "doc_id")
+    + """,
     canon AS (
       SELECT d.doc_id, COALESCE(cc.canonical_id, d.doc_id) AS canonical_id
       FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id
@@ -768,24 +684,10 @@ def cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     90/5/5 assignment on the canonical id -> per-split doc/cluster audit.
     Deterministic and incremental like every hash split here: new
     documents never flip old assignments unless they join a cluster."""
-    from transit_feed_etl_spark.operators.components import connected_components
     from transit_feed_etl_spark.operators.minhash import portable_hash60
-    from transit_feed_etl_spark.operators.prefixfilter import jaccard_prefix_pairs
 
     d = table_par(spark, sf_dir, "documents")
-    toks = d.select("doc_id", TX.tokens("text").alias("toks"))
-    sh = persist_tracked(
-        toks.select(
-            "doc_id", F.array_distinct(TX.word_shingles(F.col("toks"), 3)).alias("sh")
-        )
-    )
-    sh.count()
-    pairs = persist_tracked(
-        jaccard_prefix_pairs(sh, id_col="doc_id", set_col="sh", threshold=0.35)
-    )
-    cc = connected_components(pairs, src="id_a", dst="id_b").select(
-        F.col("node").alias("doc_id"), F.col("label").alias("canonical_id")
-    )
+    cc = _jaccard_components(d)
     canon = d.select("doc_id").join(cc, "doc_id", "left").select(
         "doc_id",
         F.coalesce("canonical_id", "doc_id").alias("canonical_id"),
@@ -803,11 +705,10 @@ def cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Batch twin of streaming/corpus_dedup.py (VERDICT r9 "What's missing"
-# item 2 — the last pytest-only LLM-pipeline component gains driver
-# evidence): the persistent digest store modeled as an accumulating
-# DataFrame, K micro-batches unrolled as K anti-join+append rounds in
-# ONE plan, built from the STREAMING module's own `dedup_round` helper
+# Batch twin of streaming/corpus_dedup.py, so the streaming component
+# has a value-oracled registered query too: the persistent digest store
+# modeled as an accumulating DataFrame, K micro-batches unrolled as K
+# anti-join+append rounds in ONE plan, built from the STREAMING module's own `dedup_round` helper
 # so the driver row attests the very plan the foreachBatch body runs.
 _CORPUS_DEDUP_K = 4
 
@@ -872,17 +773,16 @@ def corpus_dedup_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same distinct set, and a LEFT ANTI join is insensitive to
     # right-side multiplicity. The store argument therefore comes from
     # ONE narrow persisted (doc_id, batch_id, digest) relation filtered
-    # per round (r12), replacing the r11 shape that persisted every
-    # round's survivor frame and anti-joined against a growing
-    # k-branch union of those caches — K cache materializations and
-    # union build-side scans per pass (guide §2.3/§1.2). Each round
+    # per round, not K persisted survivor frames anti-joined as a
+    # growing k-branch union (K cache materializations and union
+    # build-side scans per pass, guide §2.3/§1.2). Each round
     # still runs the streaming module's own `dedup_round` (the
     # driver-row-attests-the-foreachBatch-plan construction); the
     # equality above is what lets the batch twin hand it a cheaper
     # frame with identical anti-join semantics — and the oracle is the
     # from-scratch global recompute either way. Digest width is
     # preserved: the cache carries (doc_id, batch_id, 32-hex digest),
-    # the same 54.8 B/rec contract as before (text never enters it).
+    # 54.8 B/rec (text never enters it).
     digests = persist_tracked(
         base.select(
             "doc_id", "batch_id", F.md5(F.col("text")).alias("digest")

@@ -37,12 +37,16 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from transit_feed_etl_spark.caching import persist_tracked
 from transit_feed_etl_spark.io import table, table_par
 from transit_feed_etl_spark.operators import vectors as V
+from transit_feed_etl_spark.operators.components import (
+    components_sql,
+    connected_components,
+)
 from transit_feed_etl_spark.registry import register
 
 _DOT_SQL = "list_sum(list_transform(range(1, LEN({a}) + 1), i -> {a}[i] * {b}[i]))"
@@ -96,11 +100,12 @@ def _emb_blocks(spark: SparkSession, sf_dir: str) -> int:
     )
 
 
-@register(
-    "cosine_topk_bruteforce",
-    oracle=f"""
+def _cosine_topk_oracle(vec_sql: str) -> str:
+    """DuckDB oracle for the exact cosine top-5 of the first 10 vectors,
+    each vector being `vec_sql` over the `embeddings` row."""
+    return f"""
     WITH v AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+      SELECT vec_id, CAST({vec_sql} AS DOUBLE[]) AS v FROM embeddings
     ),
     q AS (SELECT vec_id AS qid, v AS qv FROM v WHERE vec_id < 10),
     scored AS (
@@ -117,16 +122,16 @@ def _emb_blocks(spark: SparkSession, sf_dir: str) -> int:
     )
     WHERE rnk <= 5
     ORDER BY qid, rnk
-    """,
-)
-def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-5 neighbors for the first 10 vectors: broadcast
+    """
+
+
+def _cosine_topk(spark: SparkSession, sf_dir: str, vec: Column) -> DataFrame:
+    """Exact cosine top-5 neighbors of the first 10 vectors, each vector
+    being the array expression `vec` over the embeddings row: broadcast
     the query side, score all candidates with JVM-side array math, rank
-    per query. The exact baseline for the ANN variant."""
+    per query."""
     emb = table_par(spark, sf_dir, "embeddings")  # dense math on all cores
-    v = emb.select(
-        "vec_id", V.as_double("embedding").alias("v")
-    ).withColumn("nrm", V.l2_norm(F.col("v")))
+    v = emb.select("vec_id", vec.alias("v")).withColumn("nrm", V.l2_norm(F.col("v")))
     q = v.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
     )
@@ -144,6 +149,13 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") <= 5)
         .orderBy("qid", "rnk")
     )
+
+
+@register("cosine_topk_bruteforce", oracle=_cosine_topk_oracle("embedding"))
+def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-5 neighbors for the first 10 vectors over all 64
+    dims. The exact baseline for the ANN variant."""
+    return _cosine_topk(spark, sf_dir, V.as_double("embedding"))
 
 
 # Near-dup cosine threshold.  A production corpus would use ~0.8+, but
@@ -203,12 +215,19 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted score must come from the same IEEE expression tree the
     oracle folds — candidates are output-bounded, so the rescoring join
     costs O(|pairs|), not O(n^2)."""
+    return _cosine_pairs(spark, sf_dir, _NEARDUP_COS_TH).orderBy("id_a", "id_b")
+
+
+def _cosine_pairs(spark: SparkSession, sf_dir: str, th: float) -> DataFrame:
+    """(id_a, id_b, cos_sim), id_a < id_b, for every embedding pair whose
+    FLOORed cosine is >= `th`: the blocked kernel's candidates at
+    `th - 1e-4`, rescored with the exact sequential fold."""
     emb = table_par(spark, sf_dir, "embeddings")  # dense math on all cores
     cand = V.blocked_cosine_pairs(
         emb,
         "vec_id",
         "embedding",
-        _NEARDUP_COS_TH - 1e-4,
+        th - 1e-4,
         n_blocks=_emb_blocks(spark, sf_dir),
     ).select("id_a", "id_b")
     v = emb.select("vec_id", V.as_double("embedding").alias("v")).withColumn(
@@ -225,8 +244,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(a, "id_a")
         .join(b, "id_b")
         .select("id_a", "id_b", cos.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= _NEARDUP_COS_TH)
-        .orderBy("id_a", "id_b")
+        .filter(F.col("cos_sim") >= th)
     )
 
 
@@ -1413,50 +1431,14 @@ def retrieval_join_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "truncated_cosine_topk",
-    oracle=f"""
-    WITH v AS (
-      SELECT vec_id, CAST(embedding[1:16] AS DOUBLE[]) AS v FROM embeddings
-    ),
-    q AS (SELECT vec_id AS qid, v AS qv FROM v WHERE vec_id < 10),
-    scored AS (
-      SELECT q.qid, c.vec_id AS nid,
-             FLOOR(({_DOT_SQL.format(a="q.qv", b="c.v")}
-                   / ({_NORM_SQL.format(a="q.qv")} * {_NORM_SQL.format(a="c.v")}))
-                   * 10000) / 10000.0 AS score
-      FROM q JOIN v c ON c.vec_id <> q.qid
-    )
-    SELECT qid, nid, score, rnk FROM (
-      SELECT qid, nid, score,
-             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid ASC) AS rnk
-      FROM scored
-    ) WHERE rnk <= 5
-    ORDER BY qid, rnk
-    """,
-)
+@register("truncated_cosine_topk", oracle=_cosine_topk_oracle("embedding[1:16]"))
 def truncated_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style DIMENSION truncation: cosine top-5 on the first
     16 of 64 dims — 4× less compute/shuffle per comparison, the standard
     coarse-ranking stage before full-dimension re-scoring (candidate
     generation gets cheap; the re-score pass restores quality). Slice
     happens at the scan so only 16 doubles ever leave the projection."""
-    emb = table_par(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", F.slice(V.as_double("embedding"), 1, 16).alias("v")
-    ).withColumn("nrm", V.l2_norm(F.col("v")))
-    q = v.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
-    )
-    pairs = v.alias("c").join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-    score = _f4(V.dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")))
-    w = W.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid").asc())
-    return (
-        pairs.select("qid", F.col("vec_id").alias("nid"), score.alias("score"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .orderBy("qid", "rnk")
-    )
+    return _cosine_topk(spark, sf_dir, F.slice(V.as_double("embedding"), 1, 16))
 
 
 @register(
@@ -1735,20 +1717,8 @@ _COSINE_PAIRS_SQL = f"""
 
 @register(
     "embedding_dedup_clusters",
-    oracle=f"""
-    WITH RECURSIVE pairs AS ({_COSINE_PAIRS_SQL}),
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION
-      SELECT id_b AS a, id_a AS b FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT a AS node FROM edges),
-    reach AS (
-      SELECT node, node AS label FROM nodes
-      UNION
-      SELECT e.b AS node, r.label FROM reach r JOIN edges e ON e.a = r.node
-    ),
-    cc AS (SELECT node AS vec_id, MIN(label) AS canonical_id FROM reach GROUP BY node)
+    oracle=components_sql(_COSINE_PAIRS_SQL, "vec_id")
+    + """
     SELECT vec_id, canonical_id,
            CAST(COUNT(*) OVER (PARTITION BY canonical_id) AS INT) AS cluster_size
     FROM cc
@@ -1767,32 +1737,8 @@ def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     `embedding_neardup_pairs`: FLOOR makes BLAS fold noise visible at
     on-grid scores, so the decisive expression must be the oracle's
     own IEEE tree)."""
-    from transit_feed_etl_spark.operators.components import connected_components
-
-    emb = table_par(spark, sf_dir, "embeddings")
-    cand = V.blocked_cosine_pairs(
-        emb,
-        "vec_id",
-        "embedding",
-        _CLUSTER_COS_TH - 1e-4,
-        n_blocks=_emb_blocks(spark, sf_dir),
-    ).select("id_a", "id_b")
-    v = emb.select("vec_id", V.as_double("embedding").alias("v")).withColumn(
-        "nrm", V.l2_norm(F.col("v"))
-    )
-    a = v.select(
-        F.col("vec_id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    b = v.select(
-        F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    cos = _f4(V.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")))
     pairs = persist_tracked(
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", cos.alias("cos"))
-        .filter(F.col("cos") >= _CLUSTER_COS_TH)
-        .select("id_a", "id_b")
+        _cosine_pairs(spark, sf_dir, _CLUSTER_COS_TH).select("id_a", "id_b")
     )
     cc = connected_components(pairs, src="id_a", dst="id_b")
     w = W.partitionBy("canonical_id")
@@ -2129,59 +2075,8 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully constant) sample centers to the zero matrix and the power
     iteration's normalization fails fast under ANSI (0/0), the right
     answer for an undefined principal axis."""
-    v = table_par(spark, sf_dir, "embeddings").select(
-        "vec_id", V.as_double("embedding").alias("e")
-    )
-    ex = v.select("vec_id", F.posexplode("e").alias("pos", "x")).select(
-        "vec_id", (F.col("pos") + 1).alias("i"), "x"
-    )
-    means = ex.groupBy("i").agg(
-        (
-            F.sum(F.col("x").cast("decimal(25,15)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("m")
-    )
-    marr = means.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "m"))), lambda s: s["m"]
-        ).alias("marr")
-    )
-    cxd = persist_tracked(
-        v.crossJoin(F.broadcast(marr)).select(
-            "vec_id", F.zip_with("e", "marr", lambda x, m: x - m).alias("c")
-        )
-    )
-    cov = _scatter_matrix(cxd)
-    varr = v.sparkSession.range(1).select(
-        F.array(*[F.lit(1.0)] * EMB_DIM).alias("vv")
-    )
-    for _ in range(_PCA_ITERS):
-        w = (
-            cov.crossJoin(F.broadcast(varr))
-            .select(
-                "i", (F.col("cij") * F.element_at("vv", F.col("j"))).alias("pd")
-            )
-            .groupBy("i")
-            .agg(F.sum(F.col("pd").cast("decimal(25,15)")).cast("double").alias("w"))
-        )
-        nrm = w.agg(
-            F.sqrt(
-                F.sum((F.col("w") * F.col("w")).cast("decimal(38,15)")).cast(
-                    "double"
-                )
-            ).alias("nrm")
-        )
-        varr = (
-            w.crossJoin(F.broadcast(nrm))
-            .select("i", (F.col("w") / F.col("nrm")).alias("vv_i"))
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "vv_i"))),
-                    lambda s: s["vv_i"],
-                ).alias("vv")
-            )
-            .localCheckpoint()  # 1 row per round; flat plans
-        )
+    cxd = _pca_centered(spark, sf_dir)
+    varr = _pca_power(_scatter_matrix(cxd))
     cxe = cxd.select("vec_id", F.posexplode("c").alias("pos", "cval")).select(
         "vec_id", (F.col("pos") + 1).alias("i"), "cval"
     )
@@ -2268,19 +2163,24 @@ def _semdedup_oracle(
     """DuckDB oracle for semdedup_prune: the SAME unrolled Lloyd
     training as _kmeans_oracle, then the cell-local pair scan and the
     keep-lowest-id pruning decision."""
-    cos = _COS6
-    parts = _kmeans_training_parts(iters, cells)
-    final = f"c{iters}"
-    return f"""
-    WITH {", ".join(parts)},
-    cells AS (
+    cells_cte = f"""cells AS (
       SELECT vec_id, cid AS cell FROM (
         SELECT v.vec_id, c.cid,
                ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                 ORDER BY {cos.format(a="v.v", b="c.cv")} DESC, c.cid ASC) AS rn
-        FROM v CROSS JOIN {final} c
+                 ORDER BY {_COS6.format(a="v.v", b="c.cv")} DESC, c.cid ASC) AS rn
+        FROM v CROSS JOIN c{iters} c
       ) WHERE rn = 1
-    ),
+    )"""
+    return _semdedup_prune_sql(_kmeans_training_parts(iters, cells) + [cells_cte], tau)
+
+
+def _semdedup_prune_sql(parts: list[str], tau: float) -> str:
+    """The cell-local pair scan and keep-lowest-id prune decision over
+    the CTEs `parts`, which define `v (vec_id, v)` and
+    `cells (vec_id, cell)`."""
+    cos = _COS6
+    return f"""
+    WITH {", ".join(parts)},
     pairs AS (
       SELECT ca.cell, ca.vec_id AS ida, cb.vec_id AS idb,
              {cos.format(a="a.v", b="b.v")} AS cos6
@@ -2470,25 +2370,9 @@ def _semdedup_sampled_oracle(
     training / two-level assignment chain, then the same pair scan /
     prune decision as `_semdedup_oracle` — the full sampled pipeline is
     value-level differential-checked."""
-    cos = _COS6
-    parts = _sampled_assignment_parts(iters, cells, mod, n_super)
-    return f"""
-    WITH {", ".join(parts)},
-    pairs AS (
-      SELECT ca.cell, ca.vec_id AS ida, cb.vec_id AS idb,
-             {cos.format(a="a.v", b="b.v")} AS cos6
-      FROM cells ca
-      JOIN cells cb ON cb.cell = ca.cell AND ca.vec_id < cb.vec_id
-      JOIN v a ON a.vec_id = ca.vec_id
-      JOIN v b ON b.vec_id = cb.vec_id
+    return _semdedup_prune_sql(
+        _sampled_assignment_parts(iters, cells, mod, n_super), tau
     )
-    SELECT idb AS vec_id, CAST(MIN(cell) AS INT) AS cell,
-           CAST(MIN(ida) AS BIGINT) AS keeper_id,
-           MAX(cos6) AS max_cos6
-    FROM pairs WHERE cos6 >= {tau}
-    GROUP BY idb
-    ORDER BY vec_id
-    """
 
 
 @register("semdedup_prune_sampled", oracle=_semdedup_sampled_oracle())
@@ -2953,6 +2837,34 @@ def _pca2_oracle(iters: int = _PCA_ITERS) -> str:
     """
 
 
+def _pca_centered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, c): every embedding minus the per-dimension corpus mean
+    (decimal-exact sums), cached — the input of the scatter-matrix pass
+    and of the final projection."""
+    v = table_par(spark, sf_dir, "embeddings").select(
+        "vec_id", V.as_double("embedding").alias("e")
+    )
+    ex = v.select("vec_id", F.posexplode("e").alias("pos", "x")).select(
+        "vec_id", (F.col("pos") + 1).alias("i"), "x"
+    )
+    means = ex.groupBy("i").agg(
+        (
+            F.sum(F.col("x").cast("decimal(25,15)")).cast("double")
+            / F.count(F.lit(1))
+        ).alias("m")
+    )
+    marr = means.agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("i", "m"))), lambda s: s["m"]
+        ).alias("marr")
+    )
+    return persist_tracked(
+        v.crossJoin(F.broadcast(marr)).select(
+            "vec_id", F.zip_with("e", "marr", lambda x, m: x - m).alias("c")
+        )
+    )
+
+
 def _scatter_matrix(cxd: DataFrame) -> DataFrame:
     """Full d x d scatter matrix (i, j, cij) of a centered (vec_id, c)
     frame — built from the UPPER TRIANGLE only, then mirrored.
@@ -3043,27 +2955,7 @@ def pca_top2_projections(spark: SparkSession, sf_dir: str) -> DataFrame:
     two corpus passes as one component plus m d^2-row iterations. This
     is the 'deflate and repeat' claim of SCALE.md made executable and
     oracle-checked."""
-    emb = table_par(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", V.as_double("embedding").alias("e"))
-    ex = v.select("vec_id", F.posexplode("e").alias("pos", "x")).select(
-        "vec_id", (F.col("pos") + 1).alias("i"), "x"
-    )
-    means = ex.groupBy("i").agg(
-        (
-            F.sum(F.col("x").cast("decimal(25,15)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("m")
-    )
-    marr = means.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "m"))), lambda s: s["m"]
-        ).alias("marr")
-    )
-    cxd = persist_tracked(
-        v.crossJoin(F.broadcast(marr)).select(
-            "vec_id", F.zip_with("e", "marr", lambda x, m: x - m).alias("c")
-        )
-    )
+    cxd = _pca_centered(spark, sf_dir)
     cov = _scatter_matrix(cxd)
     v1 = _pca_power(cov)
     wf = _pca_matvec(cov, v1)

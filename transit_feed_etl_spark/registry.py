@@ -16,19 +16,19 @@ insensitive value hash):
 - AVG is expressed as exact-decimal SUM (cast to double) / COUNT so both
   engines perform the identical single double division.
 - Any LIMIT/top-k carries a total tie-breaking ORDER BY.
-- ROUND(double, k) is NOT portable at half-boundaries, and as of r12
-  this is MEASURED, not inferred: probing the engines directly found
+- ROUND(double, k) is NOT portable at half-boundaries, and this is
+  MEASURED, not inferred: probing the engines directly found
   42/5000 near-half-boundary doubles disagreeing at 6dp and 573/10000
   6dp-grid values disagreeing at 4dp — for the SAME input double
   (Spark rounds via BigDecimal on the binary expansion HALF_UP; DuckDB
-  rounds x*10^k; the r10 sf0.1 sweep's bigram avg_logprob -3.4078655
-  was this class). FLOOR(x * 10^k) / 10^k is the portable form — the
+  rounds x*10^k; an sf0.1 sweep's bigram avg_logprob -3.4078655 was
+  this class). FLOOR(x * 10^k) / 10^k is the portable form — the
   multiply by an exactly-representable power of ten, the floor, and
   the divide are each correctly-rounded IEEE ops on the same input:
   0/5000 disagreements in the same probe. Policy:
   * NEW queries use FLOOR for every fractional-scale double rounding.
   * The cosine family (similarity.py, graph.py knn, streaming
-    semdedup) converted wholesale in r12 with FORCE_RECHECK rows.
+    semdedup) uses FLOOR throughout.
   * Remaining ROUND columns in other families (textops ratios,
     aggregates moments/percentiles, windows pct_rank, jaccard 6dp —
     mostly quotients of exact integer sums, where a half-boundary
@@ -47,8 +47,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -83,14 +82,14 @@ def register(
             # cannot unpersist it itself — the caller materializes after
             # the builder returns.  Releasing at the next build bounds
             # outstanding executor cache to ONE query's worth in any
-            # sequential loop, with no caller discipline required
-            # (VERDICT r4 "What's wrong" #3: drivers that never call
-            # release_caches() accumulated cache across 200 queries).
+            # sequential loop, with no caller discipline required (a
+            # caller that never calls release_caches() would otherwise
+            # accumulate cache across 200 queries).
             # Unpersist never breaks correctness — a still-referenced
             # plan just recomputes — so interleaved builds only cost
             # recompute time.
             #
-            # The release is THREAD-SCOPED (VERDICT r6 item 5):
+            # The release is THREAD-SCOPED:
             # release_caches() drops only caches the calling thread
             # registered (plus orphans of dead threads), so a
             # multi-threaded driver interleaving builds on separate
@@ -113,12 +112,3 @@ def register(
         return fn
 
     return deco
-
-
-def dsum(col: Column | str, scale: int = 3, alias: str | None = None) -> Column:
-    """Order-independent SUM of a double column: SUM over DECIMAL cast,
-    result cast back to DOUBLE. Mirrors ``CAST(SUM(CAST(x AS DECIMAL(18,s)))
-    AS DOUBLE)`` in the oracle SQL."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = F.sum(c.cast(f"decimal(18,{scale})")).cast("double")
-    return out.alias(alias) if alias else out

@@ -1,4 +1,4 @@
-"""CSV / JSON / JDBC source-sink surface (SURVEY.md §2 Part B "scans"
+"""CSV / JSON source-sink surface (SURVEY.md §2 Part B "scans"
 row — absent in the reference, built-in in Spark).
 
 Design rules for 100 TB ingestion:
@@ -60,34 +60,6 @@ def read_json(
         .option("columnNameOfCorruptRecord", "_corrupt")
     )
     return reader.json(path)
-
-
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    properties: dict[str, str] | None = None,
-) -> DataFrame:
-    """JDBC scan. Without partition_column the whole table arrives
-    through ONE connection (a single task regardless of cluster size);
-    always pass the partitioning triple for anything non-tiny."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column is not None:
-        if lower_bound is None or upper_bound is None:
-            raise ValueError("partitioned JDBC read needs lower/upper bounds")
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-        )
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()
 
 
 def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -8,10 +8,12 @@ DataFrame code.
 
 Reference parity: the source replaces the glue in
 gtfs_rt_assets.py:26-49 (parse) + :79 (batch timestamp) +
-read_gtfs_rt.py:38 (glob scan) with a declarative connector. File
-naming follows the spool convention ``{feed_id}_{%Y%m%d_%H%M%S}.pb``
-(http_fetch.spool_all_feeds), mirroring the reference's stem-encoded
-timestamps (A28).
+read_gtfs_rt.py:38 (glob scan) with a declarative connector. Files
+are named ``{feed_id}_{%Y%m%d_%H%M%S}.pb``, the reference's
+stem-encoded timestamps (A28). Nothing in the package writes them:
+`http_fetch.spool_all_feeds` uses the same stem but writes decoded
+``.json`` records, so raw wire files come from an external fetcher
+(the tests build them with the `gtfs_wire` encoders).
 
 Scale design: `partitions()` returns ONE partition PER WIRE FILE, so a
 1000-executor cluster decodes 1000 feeds concurrently and adding feeds

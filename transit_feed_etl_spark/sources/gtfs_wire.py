@@ -27,7 +27,7 @@ Proto2 presence semantics (the reference's HasField guards,
 gtfs_rt_assets.py:38-46) fall out naturally: a field is present iff its
 tag appears on the wire, absent fields stay None.
 
-Output matches the RAW_FEED_SCHEMA struct subset (pipeline/gtfs.py:51),
+Output matches the struct subset of `pipeline.gtfs.RAW_FEED_SCHEMA`,
 so `flatten_feed` consumes decoded bytes and JSON-shaped fixtures
 identically. The distributed path (`decode_feed_files`) pairs a
 binaryFile scan with mapInPandas — one Python decode per FILE (a feed

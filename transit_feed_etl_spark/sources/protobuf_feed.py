@@ -81,11 +81,3 @@ def parse_feed_message(payload: bytes, feed_id: str, fetch_ts: datetime) -> dict
         "fetch_ts": fetch_ts.strftime("%Y-%m-%dT%H:%M:%S"),
         "entity": entities,
     }
-
-
-def read_binary_feeds(spark, path: str):
-    """Distributed raw-payload scan: pre-fetched .pb files as binary rows
-    (path, modificationTime, content). For decoded rows use
-    ``gtfs_wire.decode_feed_files`` (mapInPandas over this scan, one
-    RAW_FEED_SCHEMA row per file). Parity path for A1 at scale."""
-    return spark.read.format("binaryFile").load(path)

@@ -62,8 +62,6 @@ def make_batch_processor(
     out_root: str,
     catalog: FileCatalog,
     quarantine_root: str | None = None,
-    metrics: IngestMetrics | None = None,
-    run_quality_check: bool = True,
     geoparquet: bool = False,
 ):
     """foreachBatch sink implementing A8/A10/A12/A14-A16/A21.
@@ -83,7 +81,7 @@ def make_batch_processor(
     GeoParquet parity in the live pipeline (reference
     gtfs_rt_assets.py:122-141). A replayed batch rewrites the same
     hours, so a file a crash left unstamped is stamped then."""
-    metrics = metrics if metrics is not None else IngestMetrics()
+    metrics = IngestMetrics()
 
     def process(batch: DataFrame, batch_id: int) -> None:
         flat = with_geometry(flatten_feed(batch)).cache()
@@ -133,8 +131,7 @@ def make_batch_processor(
                 write_partitioned(good, out_root)
             catalog.commit_rows(batch_id, rows)
             metrics.records += n
-            if run_quality_check:  # A21 asset-check parity
-                metrics.checks.append(catalog.check_not_empty())
+            metrics.checks.append(catalog.check_not_empty())  # A21 asset check
         finally:
             flat.unpersist()
 
