@@ -157,13 +157,13 @@ def test_replayed_batch_leaves_outputs_unchanged(spark, tmp_path, geoparquet):
 
 
 # Spark jobs one GeoParquet tick with a quarantined row launches: the
-# per-hour good/bad aggregate (3: the flatten cache, the shuffle map
-# stage, the collect), the quarantine write (1) and the sink write (2:
-# its repartition's map stage, the write). The catalog commit and the
-# quality check run on the driver and launch none. Measured in fresh
-# sessions at local[1], local[4] and local[8]; the same at each, so the
-# budget carries no margin.
-TICK_JOB_BUDGET = 6
+# staged write of the whole batch, good and bad rows together (2: its
+# repartition's map stage, the write). The quarantine and sink files,
+# the footers, the catalog commit and the quality check are written on
+# the driver and launch none. Measured in fresh sessions at local[1],
+# local[4] and local[8]; the same at each, so the budget carries no
+# margin.
+TICK_JOB_BUDGET = 2
 
 
 def test_ingest_tick_job_count_stays_on_budget(spark, tmp_path):
@@ -266,66 +266,218 @@ def test_tick_catalog_rows_equal_append_batch_partitions(spark, tmp_path):
     ]
 
 
-def test_tick_footer_pass_skips_untouched_hours(spark, tmp_path, monkeypatch):
-    """A GeoParquet tick stamps footers only in the hour partitions it
-    wrote: a finalized file in another hour is not opened again, and
-    neither is a file a crashed batch left unstamped until a replay
-    writes that hour again."""
-    import glob
+def _tick_rows(cat):
+    """A catalog's rows, NaN made comparable."""
+    import math
 
+    return sorted(
+        tuple("NaN" if isinstance(v, float) and math.isnan(v) else v for v in r)
+        for r in cat.read()
+        .select("batch_id", "file_path", F.unix_micros("ts"), "record_count",
+                "bbox_minx", "bbox_miny", "bbox_maxx", "bbox_maxy")
+        .collect()
+    )
+
+
+@pytest.mark.parametrize("geoparquet", [False, True], ids=["plain", "geoparquet"])
+def test_tick_catalog_rows_keep_spark_nan_semantics(spark, tmp_path, geoparquet):
+    """The tick computes its catalog rows on the driver; they still equal
+    Spark's `append_batch_partitions` rows when valid rows carry NaN,
+    +-inf or NULL coordinates (a row is out of range only when both
+    coordinates are present). Spark's MAX is NaN once a NaN is present
+    and its MIN is NaN only when every value is; pyarrow's own min/max
+    skip NaN."""
+    from transit_feed_etl_spark.pipeline.catalog import FileCatalog
+    from transit_feed_etl_spark.pipeline.gtfs import (
+        flatten_feed,
+        validate_positions,
+        with_geometry,
+        with_time_partitions,
+    )
+    from transit_feed_etl_spark.streaming.ingest import make_batch_processor
+
+    nan, inf = float("nan"), float("inf")
+    batch = _multi_feed_batch(spark, tmp_path, "b", [
+        ("2024-03-01T11:59:00", [
+            _vehicle_entity("v1", 40.7, -74.0),
+            _vehicle_entity("v2", nan, None),
+            _vehicle_entity("v3", None, inf),
+            _vehicle_entity("bad1", nan, -74.0),
+        ]),
+        ("2024-03-01T12:00:30", [
+            _vehicle_entity("v4", nan, None),
+            _vehicle_entity("v5", None, None),
+        ]),
+        ("2024-03-01T13:10:00", [
+            _vehicle_entity("v6", None, -inf),
+            _vehicle_entity("v7", -inf, None),
+            _vehicle_entity("v8", 41.0, -73.0),
+            _vehicle_entity("bad2", 41.0, inf),
+        ]),
+    ])
+    out = str(tmp_path / "out")
+    tick_cat = FileCatalog(spark, str(tmp_path / "tick_catalog"))
+    process, metrics = make_batch_processor(
+        out, tick_cat, str(tmp_path / "quarantine"), geoparquet=geoparquet
+    )
+    process(batch, 3)
+    assert (metrics.records, metrics.quarantined) == (8, 2)
+
+    ref_cat = FileCatalog(spark, str(tmp_path / "ref_catalog"))
+    good = validate_positions(with_geometry(flatten_feed(batch)))[0]
+    ref_cat.append_batch_partitions(with_time_partitions(good), 3, out)
+    got = _tick_rows(tick_cat)
+    assert got == _tick_rows(ref_cat)
+    assert [r[4:] for r in got] == [
+        (-74.0, 40.7, inf, "NaN"),
+        (None, "NaN", None, "NaN"),
+        (-inf, -inf, -73.0, 41.0),
+    ]
+
+
+def test_tick_opens_no_sink_file(spark, tmp_path, monkeypatch):
+    """A GeoParquet tick reads only the files Spark staged for it: no
+    parquet file already in the sink is opened, not even in the hour the
+    tick writes to."""
     import pyarrow.parquet as pq
 
     from transit_feed_etl_spark.pipeline.catalog import FileCatalog
-    from transit_feed_etl_spark.pipeline.geoparquet import wkb_point
-    from transit_feed_etl_spark.pipeline.gtfs import (
-        flatten_feed,
-        with_time_partitions,
-        write_partitioned,
-    )
     from transit_feed_etl_spark.streaming.ingest import make_batch_processor
 
     out = str(tmp_path / "out")
     catalog = FileCatalog(spark, str(tmp_path / "catalog"))
-    process, _ = make_batch_processor(out, catalog, geoparquet=True)
-    hour = lambda h: f"{out}/year=2024/month=3/day=1/hour={h}"  # noqa: E731
-
-    def stamped(h):
-        return [
-            b"geo" in (pq.read_metadata(f).metadata or {})
-            for f in sorted(glob.glob(hour(h) + "/*.parquet"))
-        ]
+    process, metrics = make_batch_processor(
+        out, catalog, str(tmp_path / "quarantine"), geoparquet=True
+    )
 
     def tick(k, ts_iso):
-        return _feed_batch(spark, tmp_path, f"b{k}", ts_iso, [_vehicle_entity(f"v{k}", 40.7, -74.0)])
+        ents = [_vehicle_entity(f"v{k}", 40.7, -74.0), _vehicle_entity(f"bad{k}", 99.0, 0.0)]
+        return _feed_batch(spark, tmp_path, f"b{k}", ts_iso, ents)
 
     process(tick(0, "2024-03-01T12:00:00"), 0)
-    # a batch that crashed between its sink write and its footer pass
-    crashed = tick(1, "2024-03-01T14:00:00")
-    write_partitioned(
-        with_time_partitions(flatten_feed(crashed)).withColumn(
-            "geometry", wkb_point("longitude", "latitude")
-        ),
-        out,
-    )
-    assert (stamped(12), stamped(14)) == ([True], [False])
+    process(tick(1, "2024-03-01T13:00:00"), 1)
 
     opened = []
-    for name in ("read_metadata", "read_table"):
+    for name in ("read_metadata", "read_table", "read_schema", "ParquetFile", "ParquetDataset"):
         real = getattr(pq, name)
 
         def spy(src, *a, _real=real, **k):
-            if str(src).startswith(out):
-                opened.append(str(src))
+            opened.append(str(src))
             return _real(src, *a, **k)
 
         monkeypatch.setattr(pq, name, spy)
-    process(tick(2, "2024-03-01T13:00:00"), 2)
-    assert opened and all(p.startswith(hour(13) + "/") for p in opened), opened
+    process(tick(2, "2024-03-01T13:01:00"), 2)
     monkeypatch.undo()
-    assert (stamped(12), stamped(13), stamped(14)) == ([True], [True], [False])
+    assert any(p.startswith(catalog.path + "/_staging-") for p in opened), opened
+    assert not [p for p in opened if p.startswith(out)], opened
+    assert metrics.records == 3
+    assert spark.read.parquet(out).count() == 3
 
-    process(crashed, 1)  # the replay
-    assert stamped(14) == [True, True]
+
+@pytest.mark.parametrize("fail_at", ["hour_file", "commit"])
+def test_failed_tick_leaves_no_output(spark, tmp_path, monkeypatch, fail_at):
+    """A tick that raises after Spark staged its batch, while writing its
+    second hour file or in the catalog commit, leaves no parquet file in
+    any hour partition, no quarantine file, no catalog row and no staging
+    directory; Spark still reads the sink and the catalog as before."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from transit_feed_etl_spark.pipeline.catalog import FileCatalog
+    from transit_feed_etl_spark.streaming.ingest import make_batch_processor
+
+    out, quarantine = str(tmp_path / "out"), str(tmp_path / "quarantine")
+    catalog = FileCatalog(spark, str(tmp_path / "catalog"))
+    process, _ = make_batch_processor(out, catalog, quarantine, geoparquet=True)
+    process(_feed_batch(spark, tmp_path, "b0", "2024-03-01T12:00:00", [
+        _vehicle_entity("v0", 40.7, -74.0), _vehicle_entity("bad0", 99.0, 0.0),
+    ]), 0)
+
+    def files():
+        return sorted(
+            os.path.join(root, f)
+            for d in (out, quarantine, catalog.path)
+            for root, _, names in os.walk(d)
+            for f in names
+        )
+
+    before = files()
+    batch = _multi_feed_batch(spark, tmp_path, "b1", [
+        ("2024-03-01T12:30:00", [
+            _vehicle_entity("v1", 40.8, -73.9), _vehicle_entity("bad1", 99.0, 0.0),
+        ]),
+        ("2024-03-01T14:00:00", [
+            _vehicle_entity("v2", 40.9, -73.8), _vehicle_entity("bad2", 0.0, 500.0),
+        ]),
+    ])
+    if fail_at == "hour_file":
+        real, calls = pq.write_table, []
+
+        def write_table(*a, **k):
+            calls.append(1)
+            if len(calls) == 2:
+                raise OSError("disk full")
+            return real(*a, **k)
+
+        monkeypatch.setattr(pq, "write_table", write_table)
+    else:
+        def commit_rows(*_a, **_k):
+            raise OSError("disk full")
+
+        monkeypatch.setattr(catalog, "commit_rows", commit_rows)
+    with pytest.raises(OSError, match="disk full"):
+        process(batch, 1)
+    monkeypatch.undo()
+
+    assert files() == before
+    assert sorted(r["vehicle_id"] for r in spark.read.parquet(out).collect()) == ["v0"]
+    assert [r["vehicle_id"] for r in spark.read.parquet(quarantine).collect()] == ["bad0"]
+    assert catalog.total_records() == 1
+    assert catalog.check_not_empty()["passed"]
+
+
+def test_plain_mode_outputs_read_back_in_another_time_zone(spark, tmp_path):
+    """The driver writes the plain-mode sink and quarantine too: Spark,
+    in a session whose time zone is not UTC, reads `ts` from both as a
+    TimestampType holding the spool's instants, and the catalog's bbox
+    read and snapshot read return the sink's rows."""
+    from transit_feed_etl_spark.pipeline.catalog import FileCatalog
+    from transit_feed_etl_spark.streaming.ingest import make_batch_processor
+
+    out, quarantine = str(tmp_path / "out"), str(tmp_path / "quarantine")
+    catalog = FileCatalog(spark, str(tmp_path / "catalog"))
+    process, metrics = make_batch_processor(out, catalog, quarantine)
+    spool = {0: "2024-03-01T12:00:00", 1: "2024-03-01T23:30:00"}
+    for k, ts_iso in spool.items():
+        process(_feed_batch(spark, tmp_path, f"b{k}", ts_iso, [
+            _vehicle_entity(f"v{k}", 40.7 + k, -74.0), _vehicle_entity(f"bad{k}", 99.0, 0.0),
+        ]), k)
+    assert (metrics.records, metrics.quarantined) == (2, 2)
+    us = {
+        k: int(datetime.fromisoformat(v + "+00:00").timestamp()) * 10**6
+        for k, v in spool.items()
+    }
+
+    def keyed(df):
+        return sorted(tuple(r) for r in df.select("vehicle_id", F.unix_micros("ts")).collect())
+
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        sink, quar = spark.read.parquet(out), spark.read.parquet(quarantine)
+        assert sink.schema["ts"].dataType == T.TimestampType()
+        assert quar.schema["ts"].dataType == T.TimestampType()
+        assert isinstance(sink.schema["geometry"].dataType, T.StructType)
+        rows = keyed(sink)
+        assert rows == [("v0", us[0]), ("v1", us[1])]
+        assert keyed(quar) == [("bad0", us[0]), ("bad1", us[1])]
+        assert keyed(catalog.read_bbox(-180.0, -90.0, 180.0, 90.0)) == rows
+        assert keyed(catalog.read_bbox(-75.0, 41.5, -73.0, 42.0)) == [("v1", us[1])]
+        assert keyed(catalog.read_snapshot(1)) == rows
+        assert keyed(catalog.read_snapshot(0)) == [("v0", us[0])]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
 
 
 def test_ingest_cadence_processing_time_trigger(spark, tmp_path):

@@ -24,6 +24,7 @@ equivalent — we use (batch_id, created_at) instead; documented deviation.
 
 from __future__ import annotations
 
+import math
 import os
 import re
 import uuid
@@ -37,6 +38,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+
+from transit_feed_etl_spark.pipeline.gtfs import PARTITION_COLS
 
 # Schemes the os.path existence probes can answer truthfully.  On a
 # cluster whose catalog stores s3://... or hdfs://... URIs, a local
@@ -111,40 +114,44 @@ _CHECK_SCHEMA = pa.schema(
 )
 
 
-def catalog_aggs(keep: Column | None = None) -> list[Column]:
-    """A14-A16 aggregates of one catalog row over the rows `keep` selects
-    (all rows when None): record count, bbox (MIN/MAX over lon/lat —
-    gdf.total_bounds parity, reference gtfs_rt_assets.py:161-168; NULL
-    when no valid geometry, :169-170) and the latest `ts` as exact
-    microseconds since the epoch (`ts_us`)."""
-    keep = F.lit(True) if keep is None else keep
-
-    def kept(c: str) -> Column:
-        return F.when(keep, F.col(c))
-
+def catalog_aggs() -> list[Column]:
+    """A14-A16 aggregates of one catalog row: record count, bbox
+    (MIN/MAX over lon/lat — gdf.total_bounds parity, reference
+    gtfs_rt_assets.py:161-168; NULL when no valid geometry, :169-170)
+    and the latest `ts` as exact microseconds since the epoch (`ts_us`)."""
     return [
-        F.count_if(keep).alias("record_count"),
-        F.min(kept("longitude")).alias("bbox_minx"),
-        F.min(kept("latitude")).alias("bbox_miny"),
-        F.max(kept("longitude")).alias("bbox_maxx"),
-        F.max(kept("latitude")).alias("bbox_maxy"),
-        F.unix_micros(F.max(kept("ts"))).alias("ts_us"),
+        F.count(F.lit(1)).alias("record_count"),
+        F.min("longitude").alias("bbox_minx"),
+        F.min("latitude").alias("bbox_miny"),
+        F.max("longitude").alias("bbox_maxx"),
+        F.max("latitude").alias("bbox_maxy"),
+        F.unix_micros(F.max("ts")).alias("ts_us"),
     ]
 
 
-def partition_rows(out_root: str, groups) -> list[dict]:
-    """Catalog rows of the hour groups (rows of `catalog_aggs` grouped by
-    year/month/day/hour) that hold records; each row's file_path is its
-    hour partition's directory under `out_root`."""
-    return [
-        {
-            **g.asDict(),
-            "file_path": f"{out_root}/year={g['year']}/month={g['month']}"
-            f"/day={g['day']}/hour={g['hour']}",
-        }
-        for g in groups
-        if g["record_count"]
-    ]
+def _min_max(a: pa.ChunkedArray) -> tuple:
+    """MIN and MAX of a double column as Spark computes them: NULLs are
+    skipped and NaN sorts above every number, +inf included (pyarrow's
+    own min/max skip NaN)."""
+    a = a.drop_null()
+    num = a.filter(pc.invert(pc.is_nan(a)))
+    if len(num) == 0:
+        v = math.nan if len(a) else None
+        return v, v
+    mm = pc.min_max(num)
+    return mm["min"].as_py(), math.nan if len(num) < len(a) else mm["max"].as_py()
+
+
+def table_catalog_row(tbl: pa.Table) -> dict:
+    """`catalog_aggs` over all rows of an Arrow table, computed on the
+    driver with Spark's semantics: record count, bbox and `ts_us`."""
+    (minx, maxx), (miny, maxy) = _min_max(tbl["longitude"]), _min_max(tbl["latitude"])
+    ts = pc.max(tbl["ts"])
+    return {
+        "record_count": tbl.num_rows,
+        "bbox_minx": minx, "bbox_miny": miny, "bbox_maxx": maxx, "bbox_maxy": maxy,
+        "ts_us": None if not ts.is_valid else ts.cast(pa.timestamp("us")).value,
+    }
 
 
 @dataclass
@@ -212,10 +219,13 @@ class FileCatalog:
         catching up — a single whole-batch row would leave earlier
         partitions invisible to the bbox zone map). One collect of an
         aggregate grouped on the partition columns, committed from the
-        driver. The ingest tick computes the same rows inside its own
-        good/bad aggregate instead."""
-        groups = batch.groupBy("year", "month", "day", "hour").agg(*catalog_aggs()).collect()
-        self.commit_rows(batch_id, partition_rows(out_root, groups))
+        driver. The ingest tick computes the same rows on the driver, from
+        each hour file it writes (`table_catalog_row`)."""
+        groups = batch.groupBy(*PARTITION_COLS).agg(*catalog_aggs()).collect()
+        self.commit_rows(batch_id, [
+            {**g.asDict(), "file_path": "/".join([out_root, *(f"{c}={g[c]}" for c in PARTITION_COLS)])}
+            for g in groups
+        ])
 
     # ---- quality-check queries (A17-A21, reference gtfs_rt_assets.py:200-245)
 

@@ -3,24 +3,23 @@
 The reference writes real GeoParquet via geopandas: a WKB geometry
 column plus a `geo` file-metadata key carrying encoding/bbox/CRS, so
 spatial readers recognize the file. Spark's parquet writer cannot
-attach custom key-value metadata, so the sink here is two-phase:
+attach custom key-value metadata, so the footer is added on the driver:
 
-1. distributed write — `wkb_point` builds the 21-byte WKB point
-   encoding (public OGC spec: byte-order 01, geom-type 1, x, y as
-   little-endian doubles) as a JVM expression, so the write starts no
-   Python worker; the frame is written as ordinary partitioned parquet;
-2. footer finalize — `finalize_geo_metadata` rewrites each new file's
-   footer with the GeoParquet 1.0.0 `geo` JSON (geoparquet.org spec):
-   primary_column, WKB encoding, Point geometry type, per-file bbox
-   computed from that file's own lon/lat stats, CRS PROJJSON for
-   EPSG:4326 (constant per reference gtfs_rt_assets.py:128).
+1. `wkb_point` builds the 21-byte WKB point encoding (public OGC spec:
+   byte-order 01, geom-type 1, x, y as little-endian doubles) as a JVM
+   expression, so Spark's write starts no Python worker;
+2. `geo_footer` adds the GeoParquet 1.0.0 `geo` JSON (geoparquet.org
+   spec) to an Arrow table's schema metadata: primary_column, WKB
+   encoding, Point geometry type, a bbox computed from the table's own
+   lon/lat, CRS PROJJSON for EPSG:4326 (constant per reference
+   gtfs_rt_assets.py:128). pyarrow writes it into the file's footer.
 
-The finalize step is a driver-side loop over footer rewrites — the
-same boundary as the reference's per-file catalog INSERT and our
-catalog commit: per-minute batches write ONE file per hour (A12), and
-the ingest tick finalizes only the hour partitions it wrote, so the
-loop rewrites O(1) files per batch and reads the footers of the few
-files already in those hours.
+The ingest tick (`streaming/ingest.py`) stamps the footer as it writes
+each final sink file from the hour file Spark staged, so no sink file
+is rewritten. `write_geoparquet` and `compact_partitions` let Spark
+write the final files and stamp them in place afterwards with
+`finalize_geo_metadata`, a driver-side loop that reads and rewrites
+each unstamped file once and skips stamped files from their footer.
 """
 
 from __future__ import annotations
@@ -31,6 +30,9 @@ import os
 import struct
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -120,40 +122,45 @@ def write_geoparquet(
     finalize_geo_metadata(root, lon_col, lat_col)
 
 
+def geo_footer(
+    tbl: pa.Table, lon_col: str = "longitude", lat_col: str = "latitude"
+) -> pa.Table:
+    """`tbl` with the GeoParquet `geo` key added to its schema metadata.
+    The bbox is min/max of the table's own coordinates (the reference's
+    gdf.total_bounds per file, gtfs_rt_assets.py:161-168); a table whose
+    longitudes are all NULL gets a bbox-less entry (the reference's NULL-bbox
+    fallback, gtfs_rt_assets.py:169-170)."""
+    bbox = None
+    if lon_col in tbl.column_names and lat_col in tbl.column_names:
+        lo, la = tbl[lon_col], tbl[lat_col]
+        if lo.null_count < len(lo):
+            bbox = [
+                pc.min(lo).as_py(), pc.min(la).as_py(),
+                pc.max(lo).as_py(), pc.max(la).as_py(),
+            ]
+    meta = dict(tbl.schema.metadata or {})
+    meta[b"geo"] = json.dumps(geo_metadata(bbox)).encode()
+    return tbl.replace_schema_metadata(meta)
+
+
 def finalize_geo_metadata(
     root: str, lon_col: str = "longitude", lat_col: str = "latitude"
 ) -> int:
     """Stamp the GeoParquet `geo` metadata onto every parquet file under
-    root that doesn't have it yet; returns the number stamped. The skip
-    reads only footers, so files stamped earlier cost one footer read.
-    Per-file bbox = min/max of that file's own coordinates (the
-    reference's gdf.total_bounds per file, gtfs_rt_assets.py:161-168);
-    all-null files get a bbox-less geo entry (reference's NULL-bbox
-    fallback, gtfs_rt_assets.py:169-170).
+    root that doesn't have it yet (`geo_footer`, one bbox per file);
+    returns the number stamped. The skip reads only footers, so files
+    stamped earlier cost one footer read.
 
     Spark must still read a rewritten file: Spark's INT96 timestamps are
     read as microseconds (pyarrow's nanosecond default is written back
     as INT64 nanos, which Spark rejects), and the stale `.<name>.crc`
     checksum Hadoop keeps beside each file and verifies is removed."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
     n = 0
     for path in glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True):
         if b"geo" in (pq.read_metadata(path).metadata or {}):
             continue
         tbl = pq.read_table(path, coerce_int96_timestamp_unit="us")
-        bbox = None
-        if lon_col in tbl.column_names and lat_col in tbl.column_names:
-            lo, la = tbl[lon_col], tbl[lat_col]
-            if lo.null_count < len(lo):
-                bbox = [
-                    pc.min(lo).as_py(), pc.min(la).as_py(),
-                    pc.max(lo).as_py(), pc.max(la).as_py(),
-                ]
-        meta = dict(tbl.schema.metadata or {})
-        meta[b"geo"] = json.dumps(geo_metadata(bbox)).encode()
-        pq.write_table(tbl.replace_schema_metadata(meta), path)
+        pq.write_table(geo_footer(tbl, lon_col, lat_col), path)
         head, name = os.path.split(path)
         crc = os.path.join(head, f".{name}.crc")
         if os.path.exists(crc):

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 CRS = "EPSG:4326"  # constant per reference gtfs_rt_assets.py:128
+PARTITION_COLS = ("year", "month", "day", "hour")
 
 # Explicit schema for the flattened vehicle-position record — the
 # reference's 11 implicit dict fields (gtfs_rt_assets.py:35-47) made
@@ -117,22 +118,24 @@ def flatten_feed(raw: DataFrame) -> DataFrame:
     fields. Nested access through a NULL parent struct yields NULL —
     Spark gives the reference's 8 HasField guards
     (gtfs_rt_assets.py:38-46) for free."""
-    e = F.col("e.vehicle")
+    # SQL text: the JVM parses each step in one call, where building the
+    # same projection from Column objects takes a call per field
+    v = "e.vehicle"
     return (
-        raw.select("feed_id", "fetch_ts", F.explode_outer("entity").alias("e"))
-        .filter(e.isNotNull())
-        .select(
-            F.col("feed_id"),
-            F.col("fetch_ts").alias("ts"),
-            e["vehicle"]["id"].alias("vehicle_id"),
-            e["position"]["latitude"].alias("latitude"),
-            e["position"]["longitude"].alias("longitude"),
-            e["position"]["speed"].alias("speed"),
-            e["position"]["bearing"].alias("bearing"),
-            e["trip"]["trip_id"].alias("trip_id"),
-            e["trip"]["route_id"].alias("route_id"),
-            e["current_stop_sequence"].alias("current_stop_sequence"),
-            e["current_status"].alias("current_status"),
+        raw.selectExpr("feed_id", "fetch_ts", "explode_outer(entity) AS e")
+        .where(f"{v} IS NOT NULL")
+        .selectExpr(
+            "feed_id",
+            "fetch_ts AS ts",
+            f"{v}.vehicle.id AS vehicle_id",
+            f"{v}.position.latitude AS latitude",
+            f"{v}.position.longitude AS longitude",
+            f"{v}.position.speed AS speed",
+            f"{v}.position.bearing AS bearing",
+            f"{v}.trip.trip_id AS trip_id",
+            f"{v}.trip.route_id AS route_id",
+            f"{v}.current_stop_sequence AS current_stop_sequence",
+            f"{v}.current_status AS current_status",
         )
     )
 
@@ -148,10 +151,16 @@ def point_geometry(lon: Column, lat: Column) -> Column:
     )
 
 
+def geometry_columns() -> dict[str, Column]:
+    """The A11 point `geometry` and its constant `crs`."""
+    return {
+        "geometry": point_geometry(F.col("longitude"), F.col("latitude")),
+        "crs": F.lit(CRS),
+    }
+
+
 def with_geometry(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "geometry", point_geometry(F.col("longitude"), F.col("latitude"))
-    ).withColumn("crs", F.lit(CRS))
+    return df.withColumns(geometry_columns())
 
 
 def out_of_range() -> Column:
@@ -176,17 +185,16 @@ def validate_positions(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return df.filter(~bad), df.filter(bad)
 
 
-def with_time_partitions(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def time_partition_columns(ts_col: str = "ts") -> dict[str, Column]:
     """A12 path template YYYY/MM/DD/HH (reference gtfs_rt_assets.py:136-138)
     as Hive-style partition columns -> Catalyst partition pruning on any
     time-range predicate."""
     c = F.col(ts_col)
-    return (
-        df.withColumn("year", F.year(c))
-        .withColumn("month", F.month(c))
-        .withColumn("day", F.dayofmonth(c))
-        .withColumn("hour", F.hour(c))
-    )
+    return {"year": F.year(c), "month": F.month(c), "day": F.dayofmonth(c), "hour": F.hour(c)}
+
+
+def with_time_partitions(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+    return df.withColumns(time_partition_columns(ts_col))
 
 
 def write_partitioned(
@@ -196,12 +204,11 @@ def write_partitioned(
     columns first so each Hive partition is written by few tasks —
     the small-files guard the reference lacks (one file per minute,
     gtfs_rt_assets.py:138, melts the namenode at 100 TB)."""
-    part_cols = ["year", "month", "day", "hour"]
     out = with_time_partitions(df) if "year" not in df.columns else df
     (
-        out.repartition(files_per_partition * 4, *part_cols)
+        out.repartition(files_per_partition * 4, *PARTITION_COLS)
         .write.mode(mode)
-        .partitionBy(*part_cols)
+        .partitionBy(*PARTITION_COLS)
         .parquet(root)
     )
 

@@ -5,11 +5,14 @@
   partitioned parquet sink + catalog commit + quality check, all inside
   foreachBatch.
 
+Each tick is two Spark jobs (one staged write of the whole batch) and
+one driver pass over the staged hour files (`make_batch_processor`).
+
 Delivery is at-least-once: the checkpoint keeps a restarted query from
 reading a spool file twice, but Spark may replay a micro-batch whose
 processing did not finish, and a replay appends its rows again. Making
-the tick idempotent (stage the batch's files, commit keyed by
-`batch_id`, skip a batch already committed) is an open item.
+the tick idempotent (commit keyed by `batch_id`, skip a batch already
+committed) is an open item.
 
 The reference's process-per-run orchestration (Dagster DefaultRunLauncher,
 dagster.yaml:24-26) becomes driver->executor task dispatch; the IO-manager
@@ -24,26 +27,33 @@ and can never reproduce a batch).
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import shutil
+import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from transit_feed_etl_spark.pipeline.catalog import (
-    FileCatalog,
-    catalog_aggs,
-    partition_rows,
-)
+from transit_feed_etl_spark.pipeline.catalog import FileCatalog, table_catalog_row
+from transit_feed_etl_spark.pipeline.geoparquet import geo_footer, wkb_point
 from transit_feed_etl_spark.pipeline.gtfs import (
+    PARTITION_COLS,
     RAW_FEED_SCHEMA,
     flatten_feed,
+    geometry_columns,
     out_of_range,
-    validate_positions,
-    with_geometry,
-    with_time_partitions,
+    time_partition_columns,
     write_partitioned,
 )
+
+# the key under which Spark keeps its schema in a parquet footer; Spark
+# reads each column with the type recorded there
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 @dataclass
@@ -58,6 +68,17 @@ class IngestMetrics:
     checks: list = field(default_factory=list)
 
 
+def _project(tbl: pa.Table, src: dict[str, str]) -> pa.Table:
+    """The columns of a staged table that `src` maps (output name ->
+    staged name), with Spark's schema in the footer cut to match."""
+    meta = dict(tbl.schema.metadata)
+    fields = {f["name"]: f for f in json.loads(meta[_SPARK_SCHEMA])["fields"]}
+    meta[_SPARK_SCHEMA] = json.dumps(
+        {"type": "struct", "fields": [{**fields[s], "name": o} for o, s in src.items()]}
+    ).encode()
+    return pa.table([tbl[s] for s in src.values()], names=list(src)).replace_schema_metadata(meta)
+
+
 def make_batch_processor(
     out_root: str,
     catalog: FileCatalog,
@@ -66,74 +87,101 @@ def make_batch_processor(
 ):
     """foreachBatch sink implementing A8/A10/A12/A14-A16/A21.
 
-    Each batch is flattened once into a cache. One aggregate over it,
-    grouped by hour partition, gives each hour's good and bad counts
-    and, over the good rows, the hour's catalog row (count, bbox,
-    latest ts). The quarantine write and the sink write read the cache;
-    the catalog row is committed and the quality check runs on the
-    driver, so the sink write is the batch's last Spark job. Quarantine
-    comes before the empty-batch guard, so a batch with no valid
-    vehicle still keeps its evidence.
-
-    ``geoparquet=True`` adds a WKB `geometry` column before the write
-    and stamps the GeoParquet `geo` footer (per-file bbox, EPSG:4326)
-    after it, on the hour partitions the batch wrote — full A12
-    GeoParquet parity in the live pipeline (reference
-    gtfs_rt_assets.py:122-141). A replayed batch rewrites the same
-    hours, so a file a crash left unstamped is stamped then."""
+    Spark writes the batch once, flattened in one projection, to a
+    staging directory that is unique per call and lies under the catalog
+    directory (an `_` name, which the catalog, Spark and pyarrow all
+    skip): one file per hour partition holding the vehicle fields, the
+    point `geometry`, `crs`, the out-of-range flag `_q` and, for
+    GeoParquet, the WKB point `_wkb`. These are the batch's only two
+    Spark jobs. The driver then reads each staged hour file once and
+    writes:
+      - the hour's good rows to `<hour>/part-<batch>-<call>.parquet`
+        in the sink, with the `geo` footer (per-file bbox, EPSG:4326)
+        when ``geoparquet=True`` (full A12 GeoParquet parity in the live
+        pipeline, reference gtfs_rt_assets.py:122-141; the WKB column
+        replaces the struct geometry);
+      - its out-of-range rows to the batch's one quarantine file (A8);
+      - one catalog row per hour partition with good rows: count, bbox
+        and latest ts over those rows, as `catalog_aggs` computes them
+        (the reference's one-file-per-run template adapted to a
+        partitioned layout: per-partition rows keep the bbox zone map
+        correct when a catch-up batch spans hours).
+    Every output file is written under a hidden temp name and renamed
+    into place once all are written; the catalog rows are committed
+    next, and the quality check (A21) runs last. If anything before the
+    commit raises, the batch's renamed and temp files are removed, so a
+    failed batch leaves no sink file, quarantine file or catalog row.
+    A batch with out-of-range rows only still keeps its quarantine
+    evidence; a batch with no good row commits nothing (A10 empty-batch
+    guard, gtfs_rt_assets.py:114-116). The driver writes the sink and
+    the quarantine, so they are local (or locally mounted) paths, as the
+    catalog already is."""
     metrics = IngestMetrics()
+    # the columns the batch gains in its one projection, built once: each
+    # Column costs the driver a round trip to the JVM per node
+    cols = {**geometry_columns(), "_q": out_of_range(), **time_partition_columns()}
+    if geoparquet:
+        cols["_wkb"] = wkb_point("longitude", "latitude")
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        flat = with_geometry(flatten_feed(batch)).cache()
-        try:
-            good, bad = validate_positions(flat)
-            is_bad = out_of_range()
-            hours = (
-                with_time_partitions(flat)
-                .groupBy("year", "month", "day", "hour")
-                .agg(F.count_if(is_bad).alias("bad"), *catalog_aggs(~is_bad))
-                .collect()
-            )
-            n = sum(h["record_count"] for h in hours)
-            n_bad = sum(h["bad"] for h in hours)
-            metrics.batches += 1
-            if n_bad:  # A8 quarantine instead of log-and-drop
-                metrics.quarantined += n_bad
-                if quarantine_root:
-                    bad.write.mode("append").parquet(quarantine_root)
-            if n == 0:  # A10 empty-batch guard (gtfs_rt_assets.py:114-116)
-                metrics.empty_batches += 1
-                return
-            # One catalog row per hour partition the batch wrote (the
-            # reference's one-file-per-run template adapted to a
-            # partitioned layout; per-partition rows keep the bbox zone
-            # map correct when a catch-up batch spans hours).
-            rows = partition_rows(out_root, hours)
-            good = with_time_partitions(good)
-            if geoparquet:
-                from transit_feed_etl_spark.pipeline.geoparquet import (
-                    finalize_geo_metadata,
-                    wkb_point,
-                )
+        call = uuid.uuid4().hex
+        name = f"part-{int(batch_id):05d}-{call}.parquet"
+        staging = os.path.join(catalog.path, f"_staging-{call}")
+        moves: list[tuple[str, str]] = []  # (temp name, final name)
 
-                # the WKB column REPLACES the struct geometry: GeoParquet
-                # readers key on primary_column "geometry" being WKB
-                write_partitioned(
-                    good.withColumn(
-                        "geometry",
-                        wkb_point(F.col("longitude"), F.col("latitude")),
-                    ),
-                    out_root,
-                )
-                for r in rows:
-                    finalize_geo_metadata(r["file_path"])
-            else:
-                write_partitioned(good, out_root)
+        def temp_for(final: str) -> str:
+            head, tail = os.path.split(final)
+            os.makedirs(head, exist_ok=True)
+            moves.append((os.path.join(head, f".{tail}.tmp"), final))
+            return moves[-1][0]
+
+        rows, n_bad, quarantine = [], 0, None
+        try:
+            write_partitioned(flatten_feed(batch).withColumns(cols), staging)
+            pattern = os.path.join(staging, *(f"{c}=*" for c in PARTITION_COLS))
+            for hour_dir in sorted(glob.glob(pattern)):
+                t = pq.read_table(hour_dir, coerce_int96_timestamp_unit="us")
+                keep = [c for c in t.column_names if c not in ("_q", "_wkb")]
+                bad = t.filter(t["_q"])
+                n_bad += bad.num_rows
+                if bad.num_rows and quarantine_root:
+                    bad = _project(bad, {c: c for c in keep})
+                    if quarantine is None:
+                        path = temp_for(os.path.join(quarantine_root, name))
+                        quarantine = pq.ParquetWriter(path, bad.schema)
+                    quarantine.write_table(bad)
+                good = t.filter(pc.invert(t["_q"]))
+                if not good.num_rows:
+                    continue
+                wkb = "_wkb" if geoparquet else "geometry"
+                good = _project(good, {c: wkb if c == "geometry" else c for c in keep})
+                if geoparquet:
+                    good = geo_footer(good)
+                rel = os.path.relpath(hour_dir, staging)
+                pq.write_table(good, temp_for(os.path.join(out_root, rel, name)))
+                rows.append({**table_catalog_row(good), "file_path": f"{out_root}/{rel}"})
+            if quarantine is not None:
+                quarantine.close()
+            for tmp, final in moves:
+                os.replace(tmp, final)
             catalog.commit_rows(batch_id, rows)
-            metrics.records += n
-            metrics.checks.append(catalog.check_not_empty())  # A21 asset check
+        except BaseException:
+            if quarantine is not None:
+                quarantine.close()
+            for path in (p for m in moves for p in m):
+                if os.path.exists(path):
+                    os.remove(path)
+            raise
         finally:
-            flat.unpersist()
+            shutil.rmtree(staging, ignore_errors=True)
+        n = sum(r["record_count"] for r in rows)
+        metrics.batches += 1
+        metrics.quarantined += n_bad
+        if n == 0:
+            metrics.empty_batches += 1
+            return
+        metrics.records += n
+        metrics.checks.append(catalog.check_not_empty())  # A21 asset check
 
     return process, metrics
 
