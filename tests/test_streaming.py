@@ -157,13 +157,13 @@ def test_replayed_batch_leaves_outputs_unchanged(spark, tmp_path, geoparquet):
 
 
 # Spark jobs one GeoParquet tick with a quarantined row launches: the
-# staged write of the whole batch, good and bad rows together (2: its
-# repartition's map stage, the write). The quarantine and sink files,
-# the footers, the catalog commit and the quality check are written on
-# the driver and launch none. Measured in fresh sessions at local[1],
-# local[4] and local[8]; the same at each, so the budget carries no
-# margin.
-TICK_JOB_BUDGET = 2
+# collect of the whole flattened batch, good and bad rows together, to
+# the driver as Arrow (one stage, no exchange). The sink and quarantine
+# files, the footers, the catalog commit and the quality check are
+# written on the driver and launch none. Measured in fresh sessions at
+# local[1], local[4] and local[8]; the same at each, so the budget
+# carries no margin.
+TICK_JOB_BUDGET = 1
 
 
 def test_ingest_tick_job_count_stays_on_budget(spark, tmp_path):
@@ -336,9 +336,12 @@ def test_tick_catalog_rows_keep_spark_nan_semantics(spark, tmp_path, geoparquet)
 
 
 def test_tick_opens_no_sink_file(spark, tmp_path, monkeypatch):
-    """A GeoParquet tick reads only the files Spark staged for it: no
-    parquet file already in the sink is opened, not even in the hour the
-    tick writes to."""
+    """A GeoParquet tick opens one parquet file: the catalog file its own
+    commit added, which the quality check reads. It opens none already
+    in the sink, not even in the hour the tick writes to, and no staged
+    copy of its batch."""
+    import os
+
     import pyarrow.parquet as pq
 
     from transit_feed_etl_spark.pipeline.catalog import FileCatalog
@@ -357,6 +360,7 @@ def test_tick_opens_no_sink_file(spark, tmp_path, monkeypatch):
     process(tick(0, "2024-03-01T12:00:00"), 0)
     process(tick(1, "2024-03-01T13:00:00"), 1)
 
+    committed = set(os.listdir(catalog.path))
     opened = []
     for name in ("read_metadata", "read_table", "read_schema", "ParquetFile", "ParquetDataset"):
         real = getattr(pq, name)
@@ -368,8 +372,8 @@ def test_tick_opens_no_sink_file(spark, tmp_path, monkeypatch):
         monkeypatch.setattr(pq, name, spy)
     process(tick(2, "2024-03-01T13:01:00"), 2)
     monkeypatch.undo()
-    assert any(p.startswith(catalog.path + "/_staging-") for p in opened), opened
-    assert not [p for p in opened if p.startswith(out)], opened
+    added = [os.path.join(catalog.path, f) for f in os.listdir(catalog.path) if f not in committed]
+    assert opened == added, opened
     assert metrics.records == 3
     assert spark.read.parquet(out).count() == 3
 
@@ -478,6 +482,158 @@ def test_plain_mode_outputs_read_back_in_another_time_zone(spark, tmp_path):
         assert keyed(catalog.read_snapshot(0)) == [("v0", us[0])]
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+@pytest.mark.parametrize("geoparquet", [False, True], ids=["plain", "geoparquet"])
+def test_tick_writes_naive_utc_ts_in_another_time_zone(spark, tmp_path, geoparquet):
+    """A tick run in a session whose time zone is not UTC writes `ts` to
+    its sink and quarantine files as pyarrow reads Spark's own files: a
+    naive timestamp[us] holding the spool's UTC instant. Both files carry
+    Spark's schema, so Spark reads `ts` back as a TimestampType."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from transit_feed_etl_spark.pipeline.catalog import FileCatalog
+    from transit_feed_etl_spark.streaming.ingest import make_batch_processor
+
+    out, quarantine = str(tmp_path / "out"), str(tmp_path / "quarantine")
+    catalog = FileCatalog(spark, str(tmp_path / "catalog"))
+    process, metrics = make_batch_processor(out, catalog, quarantine, geoparquet=geoparquet)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        process(_feed_batch(spark, tmp_path, "b0", "2024-03-01T23:30:00Z", [
+            _vehicle_entity("v0", 40.7, -74.0), _vehicle_entity("bad0", 99.0, 0.0),
+        ]), 0)
+        assert (metrics.records, metrics.quarantined) == (1, 1)
+        (sink_file,) = glob.glob(os.path.join(out, "**", "*.parquet"), recursive=True)
+        (quar_file,) = glob.glob(os.path.join(quarantine, "*.parquet"))
+        for path in (sink_file, quar_file):
+            t = pq.read_table(path)
+            assert t.schema.field("ts").type == pa.timestamp("us"), path
+            assert t["ts"].to_pylist() == [datetime(2024, 3, 1, 23, 30)], path
+            spark_schema = json.loads(t.schema.metadata[b"org.apache.spark.sql.parquet.row.metadata"])
+            assert [f["name"] for f in spark_schema["fields"]] == t.column_names, path
+            df = spark.read.parquet(path)
+            assert df.schema["ts"].dataType == T.TimestampType(), path
+            assert df.select(F.unix_micros("ts")).first()[0] == int(
+                datetime.fromisoformat("2024-03-01T23:30:00+00:00").timestamp()
+            ) * 10**6
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+def test_batch_of_non_vehicle_entities_is_empty(spark, tmp_path):
+    """A spool file holding only non-vehicle entities flattens to an empty
+    batch: it counts as an empty batch and writes no sink file, no
+    quarantine file and no catalog row."""
+    from transit_feed_etl_spark.pipeline.catalog import FileCatalog
+    from transit_feed_etl_spark.streaming.ingest import make_batch_processor
+
+    catalog = FileCatalog(spark, str(tmp_path / "catalog"))
+    process, metrics = make_batch_processor(
+        str(tmp_path / "out"), catalog, str(tmp_path / "quarantine"), geoparquet=True
+    )
+    process(_feed_batch(spark, tmp_path, "b0", "2024-03-01T12:00:00", [
+        {"id": "x", "vehicle": None}, {"id": "y"},
+    ]), 0)
+    assert (metrics.batches, metrics.empty_batches, metrics.records, metrics.quarantined) == (
+        1, 1, 0, 0
+    )
+    assert metrics.checks == []
+    for d in ("out", "quarantine", "catalog"):
+        assert not (tmp_path / d).exists(), d
+
+
+def test_rows_without_fetch_ts_land_in_the_default_partition(spark, tmp_path):
+    """A feed file without `fetch_ts` gives rows with a NULL `ts`. The
+    tick writes them, as Spark's partitioned write would, under Hive's
+    default partition name, beside the hour the other rows fall in."""
+    import glob
+    import os
+
+    from transit_feed_etl_spark.pipeline.catalog import FileCatalog
+    from transit_feed_etl_spark.pipeline.gtfs import RAW_FEED_SCHEMA
+    from transit_feed_etl_spark.streaming.ingest import make_batch_processor
+
+    d = tmp_path / "b"
+    d.mkdir()
+    _spool_file(d / "f0.json", "mta", "2024-03-01T12:00:00", [_vehicle_entity("v0", 40.7, -74.0)])
+    with open(d / "f1.json", "w") as f:
+        json.dump({"feed_id": "mta", "entity": [_vehicle_entity("v1", 40.8, -73.9)]}, f)
+    out = str(tmp_path / "out")
+    catalog = FileCatalog(spark, str(tmp_path / "catalog"))
+    process, metrics = make_batch_processor(out, catalog, geoparquet=True)
+    process(spark.read.schema(RAW_FEED_SCHEMA).json(str(d)), 0)
+    assert metrics.records == 2
+    default = "/".join(f"{c}=__HIVE_DEFAULT_PARTITION__" for c in ("year", "month", "day", "hour"))
+    hours = sorted(
+        os.path.relpath(os.path.dirname(p), out)
+        for p in glob.glob(os.path.join(out, "**", "*.parquet"), recursive=True)
+    )
+    assert hours == ["year=2024/month=3/day=1/hour=12", default]
+    rows = spark.read.parquet(out).select("vehicle_id", "ts", "year").collect()
+    assert sorted((r["vehicle_id"], r["ts"] is None, r["year"]) for r in rows) == [
+        ("v0", False, 2024), ("v1", True, None)
+    ]
+    assert sorted(r["file_path"] for r in catalog.read().collect()) == [
+        f"{out}/year=2024/month=3/day=1/hour=12", f"{out}/{default}"
+    ]
+
+
+def test_spool_backlog_drains_in_capped_batches(spark, tmp_path, monkeypatch):
+    """A micro-batch reads at most `MAX_BYTES_PER_TRIGGER` bytes of spool,
+    and at least one file. With the cap below one file, a three-file
+    backlog drains in three batches and leaves the same sink rows,
+    quarantine rows and catalog totals as the uncapped single batch."""
+    import os
+
+    from transit_feed_etl_spark.streaming import ingest
+
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    for k, ts_iso in enumerate(["2024-03-01T11:59:00", "2024-03-01T12:00:00", "2024-03-01T13:30:00"]):
+        _spool_file(spool / f"f{k}.json", "mta", ts_iso, [
+            _vehicle_entity(f"v{k}", 40.7 + k / 10, -74.0),
+            _vehicle_entity(f"bad{k}", 99.0, 0.0),
+            {"id": "x", "vehicle": None},
+        ])
+
+    def drain(name):
+        d = tmp_path / name
+        q, metrics, catalog = start_ingest(
+            spark, str(spool), str(d / "out"), str(d / "catalog"), str(d / "ckpt"),
+            quarantine_root=str(d / "quarantine"), available_now=True, geoparquet=True,
+        )
+        q.awaitTermination(120)
+
+        def keyed(path):
+            df = spark.read.parquet(path)
+            return sorted(tuple(r) for r in df.select("vehicle_id", F.unix_micros("ts")).collect())
+
+        cat = catalog.read().groupBy("file_path").agg(F.sum("record_count")).collect()
+        check = {**metrics.checks[-1]}
+        check["latest_file"] = os.path.relpath(check["latest_file"], d)
+        return metrics.batches, (
+            keyed(str(d / "out")),
+            keyed(str(d / "quarantine")),
+            sorted((os.path.relpath(p, d), n) for p, n in cat),
+            catalog.total_records(),
+            metrics.records,
+            metrics.quarantined,
+            check,
+        )
+
+    batches, whole = drain("whole")
+    monkeypatch.setattr(ingest, "MAX_BYTES_PER_TRIGGER", 1)
+    capped_batches, capped = drain("capped")
+    assert (batches, capped_batches) == (1, 3)
+    assert capped == whole
+    assert whole[3:6] == (3, 3, 3)
+    assert whole[-1]["passed"]
 
 
 def test_ingest_cadence_processing_time_trigger(spark, tmp_path):

@@ -158,9 +158,10 @@ def table_catalog_row(tbl: pa.Table) -> dict:
 class FileCatalog:
     spark: SparkSession
     path: str
-    # check columns of each catalog file read so far:
-    # path -> ((size, mtime_ns), table)
+    # catalog files read so far, path -> (size, mtime_ns), and their check
+    # columns as one contiguous table
     _seen: dict = field(default_factory=dict, init=False, repr=False, compare=False)
+    _table: pa.Table | None = field(default=None, init=False, repr=False, compare=False)
 
     def _files(self) -> list[os.DirEntry]:
         """The committed catalog files. Hidden and `_`-prefixed names
@@ -285,24 +286,30 @@ class FileCatalog:
         fs = self._existing_paths(cat.select("file_path").distinct())
         return cat.join(fs, "file_path", "left_anti")
 
-    def _check_table(self):
+    def _check_table(self) -> pa.Table | None:
         """The catalog's (ts in microseconds, batch_id, record_count,
         file_path) columns, read with pyarrow, or None for an empty
         catalog. Catalog files are immutable: each is read once per
-        instance and re-read only if its size or mtime changes."""
-        seen = {}
+        instance and folded into one cached table; if a file read before
+        changes size or mtime, or goes away, every file is read again."""
+        files = {}
         for e in self._files():
             st = e.stat()
-            key = (st.st_size, st.st_mtime_ns)
-            hit = self._seen.get(e.path)
-            if hit is None or hit[0] != key:
-                t = pq.read_table(
-                    e.path, columns=_CHECK_SCHEMA.names, coerce_int96_timestamp_unit="us"
-                )
-                hit = (key, t.cast(_CHECK_SCHEMA))
-            seen[e.path] = hit
-        self._seen = seen
-        return pa.concat_tables([t for _, t in seen.values()]) if seen else None
+            files[e.path] = (st.st_size, st.st_mtime_ns)
+        if any(files.get(p) != key for p, key in self._seen.items()):
+            self._seen, self._table = {}, None
+        new = [p for p in files if p not in self._seen]
+        if new:
+            tables = [
+                pq.read_table(p, columns=_CHECK_SCHEMA.names, coerce_int96_timestamp_unit="us")
+                .cast(_CHECK_SCHEMA)
+                for p in new
+            ]
+            if self._table is not None:
+                tables.insert(0, self._table)
+            self._table = pa.concat_tables(tables).combine_chunks()
+            self._seen.update((p, files[p]) for p in new)
+        return self._table
 
     def check_not_empty(self, lookback_hours: int = 1) -> dict:
         """A21: the reference's asset check — total>0, recent>0, latest
@@ -314,13 +321,16 @@ class FileCatalog:
         total = recent = 0
         latest = None
         if t is not None and t.num_rows:
+            ts = t["ts"]
             total = pc.sum(t["record_count"]).as_py() or 0
-            anchor = pc.max(t["ts"]).as_py()
-            since = anchor - lookback_hours * 3_600_000_000
-            recent = pc.sum(t.filter(pc.field("ts") >= since)["record_count"]).as_py() or 0
-            latest = t.sort_by([("ts", "descending"), ("batch_id", "descending")])[
-                "file_path"
-            ][0].as_py()
+            anchor = pc.max(ts)
+            since = anchor.as_py() - lookback_hours * 3_600_000_000
+            recent = pc.sum(t["record_count"].filter(pc.greater_equal(ts, since))).as_py() or 0
+            # ORDER BY ts DESC, batch_id DESC LIMIT 1: of the rows at the
+            # latest ts, the first with the highest batch_id
+            top = t.filter(pc.equal(ts, anchor))
+            at = pc.index(top["batch_id"], pc.max(top["batch_id"])).as_py()
+            latest = top["file_path"][at].as_py()
         latest_exists = latest is not None and os.path.exists(_require_local(latest))
         return {
             "passed": bool(total > 0 and recent > 0 and latest_exists),

@@ -15,8 +15,8 @@ attach custom key-value metadata, so the footer is added on the driver:
    gtfs_rt_assets.py:128). pyarrow writes it into the file's footer.
 
 The ingest tick (`streaming/ingest.py`) stamps the footer as it writes
-each final sink file from the hour file Spark staged, so no sink file
-is rewritten. `write_geoparquet` and `compact_partitions` let Spark
+each sink file from the Arrow batch Spark hands the driver, so no sink
+file is rewritten. `write_geoparquet` and `compact_partitions` let Spark
 write the final files and stamp them in place afterwards with
 `finalize_geo_metadata`, a driver-side loop that reads and rewrites
 each unstamped file once and skips stamped files from their footer.
@@ -65,26 +65,24 @@ CRS_PROJJSON = {
 }
 
 
-_WKB_POINT_HEADER = bytes.fromhex("0101000000")  # little-endian, Point
+def _le_double(x: str) -> str:
+    """SQL for the 8 little-endian IEEE-754 bytes of a double: its raw
+    bits, byte-swapped, as 16 zero-padded hex digits, unhexed."""
+    bits = f"reflect('java.lang.Double', 'doubleToRawLongBits', {x})"
+    swapped = f"reflect('java.lang.Long', 'reverseBytes', CAST({bits} AS BIGINT))"
+    return f"unhex(lpad(hex(CAST({swapped} AS BIGINT)), 16, '0'))"
 
 
-def _le_double(x: Column) -> Column:
-    """The 8 little-endian IEEE-754 bytes of a double: its raw bits,
-    byte-swapped, as 16 zero-padded hex digits, unhexed."""
-    bits = F.reflect(F.lit("java.lang.Double"), F.lit("doubleToRawLongBits"), x)
-    swapped = F.reflect(F.lit("java.lang.Long"), F.lit("reverseBytes"), bits.cast("long"))
-    return F.unhex(F.lpad(F.hex(swapped.cast("long")), 16, "0"))
-
-
-def wkb_point(lon: Column | str, lat: Column | str) -> Column:
-    """WKB point: 01 (little-endian) + 01000000 (Point) + x + y. NULL
-    when either coordinate is NULL or NaN (the reference's None-geometry
-    rows, gtfs_rt_assets.py:124-127)."""
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    lat = F.col(lat) if isinstance(lat, str) else lat
-    present = lon.isNotNull() & lat.isNotNull() & ~F.isnan(lon) & ~F.isnan(lat)
-    return F.when(
-        present, F.concat(F.lit(_WKB_POINT_HEADER), _le_double(lon), _le_double(lat))
+def wkb_point(lon: str, lat: str) -> Column:
+    """WKB point of the columns named `lon` and `lat`: 01 (little-endian)
+    + 01000000 (Point) + x + y. NULL when either coordinate is NULL or NaN
+    (the reference's None-geometry rows, gtfs_rt_assets.py:124-127). SQL
+    text: the JVM parses it in one call, where the same expression built
+    from Column objects takes a call per node."""
+    x, y = f"`{lon}`", f"`{lat}`"
+    return F.expr(
+        f"CASE WHEN {x} IS NOT NULL AND {y} IS NOT NULL AND NOT isnan({x}) AND NOT isnan({y})"
+        f" THEN concat(X'0101000000', {_le_double(x)}, {_le_double(y)}) END"
     )
 
 
