@@ -386,3 +386,26 @@ def test_semdedup_single_join_round_equals_two_join_form(spark):
         .collect()
     }
     assert folded == per_round and folded
+
+
+def test_semdedup_faces_share_one_pair_scan():
+    """The streaming foreachBatch body runs the very pair scan and
+    verdict aggregation the batch, sampled and incremental queries run
+    (one function object each, defined in queries/), and no query
+    module imports from streaming/."""
+    import ast
+    import pathlib
+
+    from transit_feed_etl_spark.queries import similarity
+    from transit_feed_etl_spark.streaming import semdedup
+
+    assert semdedup.semdedup_pair_scan is similarity.semdedup_pair_scan
+    assert semdedup.semdedup_verdicts is similarity.semdedup_verdicts
+    queries = pathlib.Path(similarity.__file__).parent
+    imported = {
+        (p.name, n.module)
+        for p in queries.glob("*.py")
+        for n in ast.walk(ast.parse(p.read_text()))
+        if isinstance(n, ast.ImportFrom) and "streaming" in (n.module or "")
+    }
+    assert not imported, imported

@@ -551,13 +551,16 @@ def test_batch_of_non_vehicle_entities_is_empty(spark, tmp_path):
 def test_rows_without_fetch_ts_land_in_the_default_partition(spark, tmp_path):
     """A feed file without `fetch_ts` gives rows with a NULL `ts`. The
     tick writes them, as Spark's partitioned write would, under Hive's
-    default partition name, beside the hour the other rows fall in."""
+    default partition name, beside the hour the other rows fall in. That
+    hour's catalog row has a NULL `ts`, and the freshness check answers
+    as the catalog's Spark queries do."""
     import glob
     import os
 
     from transit_feed_etl_spark.pipeline.catalog import FileCatalog
     from transit_feed_etl_spark.pipeline.gtfs import RAW_FEED_SCHEMA
     from transit_feed_etl_spark.streaming.ingest import make_batch_processor
+    from tests.test_pipeline import _check_parity
 
     d = tmp_path / "b"
     d.mkdir()
@@ -579,9 +582,25 @@ def test_rows_without_fetch_ts_land_in_the_default_partition(spark, tmp_path):
     assert sorted((r["vehicle_id"], r["ts"] is None, r["year"]) for r in rows) == [
         ("v0", False, 2024), ("v1", True, None)
     ]
-    assert sorted(r["file_path"] for r in catalog.read().collect()) == [
-        f"{out}/year=2024/month=3/day=1/hour=12", f"{out}/{default}"
-    ]
+    dated = f"{out}/year=2024/month=3/day=1/hour=12"
+    assert sorted(r["file_path"] for r in catalog.read().collect()) == [dated, f"{out}/{default}"]
+    # the undated hour's catalog row has a NULL ts: it neither anchors the
+    # freshness lookback nor becomes the latest file
+    check = catalog.check_not_empty()
+    assert (check["total_records"], check["recent_records"], check["latest_file"]) == (2, 1, dated)
+    assert catalog.latest_file()["file_path"] == dated
+    _check_parity(catalog)
+
+    # a catalog whose only rows are undated: no recent records, and the
+    # latest file is the default partition
+    undated_out = str(tmp_path / "undated_out")
+    undated = FileCatalog(spark, str(tmp_path / "undated_catalog"))
+    process, _ = make_batch_processor(undated_out, undated, geoparquet=True)
+    process(spark.read.schema(RAW_FEED_SCHEMA).json(str(d / "f1.json")), 0)
+    check = undated.check_not_empty()
+    assert (check["total_records"], check["recent_records"]) == (1, 0)
+    assert check["latest_file"] == f"{undated_out}/{default}" and not check["passed"]
+    _check_parity(undated)
 
 
 def test_spool_backlog_drains_in_capped_batches(spark, tmp_path, monkeypatch):

@@ -94,7 +94,7 @@ CATALOG_SCHEMA = T.StructType(
     [
         T.StructField("batch_id", T.LongType(), False),
         T.StructField("file_path", T.StringType(), False),
-        T.StructField("ts", T.TimestampType(), False),
+        T.StructField("ts", T.TimestampType(), True),
         T.StructField("record_count", T.LongType(), False),
         T.StructField("created_at", T.TimestampType(), False),
         T.StructField("bbox_minx", T.DoubleType(), True),
@@ -185,18 +185,16 @@ class FileCatalog:
         """Append a batch's catalog rows as one parquet file, written on the
         driver with pyarrow: no Spark job. Each row maps `file_path`,
         `record_count`, the four `bbox_*` values and `ts_us`, the latest
-        `ts` in microseconds (NULL: the commit time, as is `created_at`).
-        The file is written under a hidden temp name, which every reader
-        skips, and renamed into place, so readers see all of it or none."""
+        `ts` in microseconds, stored as the row's `ts` (NULL when no row
+        had a `ts`: the freshness lookback never anchors on an undated
+        row). `created_at` is the commit time. The file is written under
+        a hidden temp name, which every reader skips, and renamed into
+        place, so readers see all of it or none."""
         if not rows:
             return
         now = datetime.now(timezone.utc)
         table = pa.Table.from_pylist(
-            [
-                {**r, "batch_id": batch_id, "created_at": now,
-                 "ts": now if r["ts_us"] is None else r["ts_us"]}
-                for r in rows
-            ],
+            [{**r, "batch_id": batch_id, "created_at": now, "ts": r["ts_us"]} for r in rows],
             schema=_ARROW_SCHEMA,
         )
         os.makedirs(self.path, exist_ok=True)
@@ -323,12 +321,14 @@ class FileCatalog:
         if t is not None and t.num_rows:
             ts = t["ts"]
             total = pc.sum(t["record_count"]).as_py() or 0
-            anchor = pc.max(ts)
-            since = anchor.as_py() - lookback_hours * 3_600_000_000
-            recent = pc.sum(t["record_count"].filter(pc.greater_equal(ts, since))).as_py() or 0
-            # ORDER BY ts DESC, batch_id DESC LIMIT 1: of the rows at the
-            # latest ts, the first with the highest batch_id
-            top = t.filter(pc.equal(ts, anchor))
+            anchor = pc.max(ts)  # NULL ts rows are skipped, as MAX skips them
+            if anchor.is_valid:
+                since = anchor.as_py() - lookback_hours * 3_600_000_000
+                recent = pc.sum(t["record_count"].filter(pc.greater_equal(ts, since))).as_py() or 0
+            # ORDER BY ts DESC (NULLS LAST), batch_id DESC LIMIT 1: of the
+            # rows at the latest ts (all rows undated: the NULL ones), the
+            # first with the highest batch_id
+            top = t.filter(pc.equal(ts, anchor) if anchor.is_valid else pc.is_null(ts))
             at = pc.index(top["batch_id"], pc.max(top["batch_id"])).as_py()
             latest = top["file_path"][at].as_py()
         latest_exists = latest is not None and os.path.exists(_require_local(latest))

@@ -705,12 +705,33 @@ def cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Batch twin of streaming/corpus_dedup.py, so the streaming component
+# Batch face of streaming/corpus_dedup.py, so the streaming component
 # has a value-oracled registered query too: the persistent digest store
 # modeled as an accumulating DataFrame, K micro-batches unrolled as K
-# anti-join+append rounds in ONE plan, built from the STREAMING module's own `dedup_round` helper
-# so the driver row attests the very plan the foreachBatch body runs.
+# anti-join+append rounds in ONE plan, each round the `dedup_round` the
+# foreachBatch body runs, so its oracle row attests that plan.
 _CORPUS_DEDUP_K = 4
+
+
+def dedup_round(
+    batch: DataFrame,
+    seen: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Pure-plan core of one dedup round, run by the streaming
+    foreachBatch body (streaming/corpus_dedup.py) and by
+    `corpus_dedup_rounds`, the oracle-checked face of this operator:
+    in-batch first-seen (lowest id per md5 digest), then a left-anti
+    join against the `seen` digest store (one `digest` column). Returns
+    the surviving rows with their `_digest` column attached so the
+    caller can append it to the store."""
+    digests = batch.withColumn("_digest", F.md5(F.col(text_col)))
+    rn = F.row_number().over(W.partitionBy("_digest").orderBy(id_col))
+    firsts = digests.withColumn("_rn", rn).filter(F.col("_rn") == 1).drop("_rn")
+    return firsts.join(
+        seen, firsts["_digest"] == seen["digest"], "left_anti"
+    )
 
 _CORPUS_DEDUP_ORACLE = f"""
     WITH b AS (
@@ -735,7 +756,7 @@ def corpus_dedup_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twin of `streaming/corpus_dedup.py`. The documents table is
     split into K deterministic micro-batches (batch_id = doc_id % K,
     processed in batch order, the arrival order a crawl spool would
-    deliver); each round runs the streaming module's own `dedup_round`
+    deliver); each round runs `dedup_round`, as the foreachBatch body does
     (in-batch first-seen per md5 digest, then a left-anti join against
     the digest store accumulated from every PRIOR round's survivors),
     and the store grows by the round's fresh digests — the exact
@@ -757,8 +778,6 @@ def corpus_dedup_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the store is a digest-prefix-partitioned table and each
     round co-partitions against it (see streaming/corpus_dedup.py's
     module doc). K is fixed, corpus-independent plan depth."""
-    from transit_feed_etl_spark.streaming.corpus_dedup import dedup_round
-
     d = table_par(spark, sf_dir, "documents")
     base = d.select(
         "doc_id",
@@ -776,7 +795,7 @@ def corpus_dedup_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per round, not K persisted survivor frames anti-joined as a
     # growing k-branch union (K cache materializations and union
     # build-side scans per pass, guide §2.3/§1.2). Each round
-    # still runs the streaming module's own `dedup_round` (the
+    # still runs the foreachBatch body's `dedup_round` (the
     # driver-row-attests-the-foreachBatch-plan construction); the
     # equality above is what lets the batch twin hand it a cheaper
     # frame with identical anti-join semantics — and the oracle is the

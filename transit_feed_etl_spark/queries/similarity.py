@@ -2232,63 +2232,93 @@ def semdedup_pairs(
     production sizing rule, SCALE.md)."""
     # no persist: the trained quantizer is a checkpointed one-row leaf
     cells = _assign1(v, kmeans_train(v, iters, n_cells=n_cells))
-    return _semdedup_prune_from_cells(v, cells, tau)
+    return _semdedup_prune_from_cells(cells, tau)
 
 
-def _semdedup_prune_from_cells(
-    v: DataFrame, cells: DataFrame, tau: float
+def semdedup_pair_scan(
+    batch: DataFrame, store: DataFrame | None, tau: float = _SEMDEDUP_TAU
 ) -> DataFrame:
-    """The cell-local pair scan + keep-lowest-id prune decision shared
-    by the flat-assignment (`semdedup_pairs`) and sampled/hierarchical
-    (`semdedup_pairs_sampled`) pipelines: `cells` is any (vec_id, cell)
-    assignment; the quadratic work never crosses a cell boundary. When
-    `cells` already carries the vector column (the map-side assigners
-    `_assign1` / `hier_assign` keep it on the row) the vector-width
-    join-back on vec_id is skipped entirely — the ONLY corpus-sized
-    exchange left in the pipeline is the cell-keyed co-location shuffle
-    feeding the quadratic pair scan, which is SemDeDup's intrinsic data
-    movement."""
-    # Per-vector norms computed ONCE before the pair join: the score is
-    # still dot/(nrm_a * nrm_b) — the identical IEEE expression tree the
-    # oracle's _COS6 evaluates — but the quadratic stage folds each pair's
-    # arrays once (the dot) instead of three times (dot + both norms).
-    # PERSISTED: m feeds BOTH sides of the pair join, so without it the
-    # whole assignment subtree runs twice — cheap for the flat argmax,
-    # but a recomputed hierarchical routing chain measured 11.6 s
-    # against 6.2 s persisted at sf0.1.
-    merged = cells if "v" in cells.columns else cells.join(v, "vec_id")
-    m = persist_tracked(merged.withColumn("nrm", V.l2_norm(F.col("v"))))
-    a = m.select(
-        F.col("cell").alias("cell_a"),
-        F.col("vec_id").alias("ida"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = m.select(
+    """SemDeDup's cell-local pair scan, the one copy every face runs:
+    (cell_b, ida, idb, cos6) for every in-cell pair whose earlier side
+    precedes `idb`'s arrival, filtered at cos6 >= tau. `batch` and
+    `store` carry (vec_id, cell, v, nrm); the store holds
+    strictly-earlier arrivals, and a whole corpus is one batch with no
+    store.
+
+    ONE cell-equijoin: the a-side is the union of the store (tagged
+    pre_a = true — everything in it precedes the whole batch) and the
+    batch itself (pre_a = false — in one batch, arrival order is id
+    order), and the precedence residual `pre_a OR ida < idb` rides the
+    equijoin. For a ∈ batch the residual reduces to ida < idb, for
+    a ∈ store to true, so the one join yields the same pair multiset as
+    an in-batch join unioned with a store join, with one build and one
+    join stage instead of two; with no store Catalyst folds the literal
+    away and the join is the plain cell + id< self-join. The score is
+    dot / (nrm_a * nrm_b) over norms computed once per vector, the
+    expression tree the oracles' _COS6 evaluates, FLOOR-truncated at
+    6dp (module docstring)."""
+
+    def _a(df: DataFrame, precedes: bool) -> DataFrame:
+        return df.select(
+            F.col("cell").alias("cell_a"),
+            F.col("vec_id").alias("ida"),
+            F.col("v").alias("va"),
+            F.col("nrm").alias("na"),
+            F.lit(precedes).alias("pre_a"),
+        )
+
+    a = _a(batch, False)
+    if store is not None:
+        a = _a(store, True).unionByName(a)
+    y = batch.select(
         F.col("cell").alias("cell_b"),
         F.col("vec_id").alias("idb"),
         F.col("v").alias("vb"),
         F.col("nrm").alias("nb"),
     )
+    cand = a.join(
+        y,
+        (F.col("cell_a") == F.col("cell_b"))
+        & (F.col("pre_a") | (F.col("ida") < F.col("idb"))),
+    )
     cos6 = _f6(V.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")))
-    pairs = (
-        a.join(
-            b,
-            (F.col("cell_a") == F.col("cell_b")) & (F.col("ida") < F.col("idb")),
-        )
-        .select("cell_a", "ida", "idb", cos6.alias("cos6"))
-        .filter(F.col("cos6") >= tau)
+    return cand.select("cell_b", "ida", "idb", cos6.alias("cos6")).filter(
+        F.col("cos6") >= tau
     )
-    return (
-        pairs.groupBy(F.col("idb").alias("vec_id"))
-        .agg(
-            F.min("cell_a").cast("int").alias("cell"),
-            F.min("ida").cast("bigint").alias("keeper_id"),
-            F.max("cos6").alias("max_cos6"),
-        )
-        .select("vec_id", "cell", "keeper_id", "max_cos6")
-        .orderBy("vec_id")
+
+
+def semdedup_verdicts(pairs: DataFrame) -> DataFrame:
+    """Keep-lowest-id prune verdicts (vec_id, cell, keeper_id, max_cos6)
+    from a similar-pair relation. Because a vector's verdict is final
+    the round it arrives (its pairs are all in-batch or vs
+    strictly-earlier arrivals), this aggregation distributes over
+    key-disjoint unions of per-round pair scans: grouping the union of
+    K rounds' pairs equals unioning K per-round groupings — the fold
+    `semdedup_rounds` exploits to run ONE verdict aggregation for all
+    rounds."""
+    return pairs.groupBy(F.col("idb").alias("vec_id")).agg(
+        F.min("cell_b").cast("int").alias("cell"),
+        F.min("ida").cast("bigint").alias("keeper_id"),
+        F.max("cos6").alias("max_cos6"),
     )
+
+
+def _semdedup_prune_from_cells(cells: DataFrame, tau: float) -> DataFrame:
+    """The whole-corpus prune over a (vec_id, v, cell) assignment (the
+    map-side assigners `_assign1` / `hier_assign` keep the vector on the
+    row): the corpus as one batch through `semdedup_pair_scan`, then
+    `semdedup_verdicts`. The quadratic work never crosses a cell
+    boundary, and the only corpus-sized exchange is the cell-keyed
+    co-location shuffle feeding the pair scan, SemDeDup's intrinsic data
+    movement."""
+    # Norms computed ONCE before the pair join: the quadratic stage folds
+    # each pair's arrays once (the dot) instead of three times.
+    # PERSISTED: m feeds BOTH sides of the pair join, so without it the
+    # whole assignment subtree runs twice — cheap for the flat argmax,
+    # but a recomputed hierarchical routing chain measured 11.6 s
+    # against 6.2 s persisted at sf0.1.
+    m = persist_tracked(cells.withColumn("nrm", V.l2_norm(F.col("v"))))
+    return semdedup_verdicts(semdedup_pair_scan(m, None, tau)).orderBy("vec_id")
 
 
 _SD_SAMPLE_MOD = 4  # train on vec_id % 4 == 0 (portable deterministic sample)
@@ -2422,17 +2452,28 @@ def semdedup_pairs_sampled(
     automatically, keeping per-vector assignment work O(branch ·
     log_branch cells) instead of a fixed two-level quantizer's
     O(n_super + cells/n_super) = O(√cells)."""
-    samp = v.filter(F.col("vec_id") % sample_mod == 0)
+    cells = _sampled_cells(v, n_cells, iters, sample_mod, branch, seeds)
+    return _semdedup_prune_from_cells(cells, tau)
+
+
+def _sampled_cells(
+    v: DataFrame,
+    n_cells: int,
+    iters: int,
+    mod: int,
+    branch: int,
+    seeds: DataFrame | None,
+) -> DataFrame:
+    """(vec_id, cell, v): k-means trained on the modular sample
+    vec_id % mod == 0 (seeds: its n_cells lowest ids, unless `seeds` is
+    given), then every vector routed through `hier_assign` — the
+    training and assignment that `_sampled_assignment_parts` unrolls."""
+    samp = v.filter(F.col("vec_id") % mod == 0)
     # no persist: the trained quantizer is a checkpointed one-row leaf
     cands = kmeans_train(
-        samp,
-        iters,
-        n_cells=n_cells,
-        seed_below=n_cells * sample_mod,
-        seeds=seeds,
+        samp, iters, n_cells=n_cells, seed_below=n_cells * mod, seeds=seeds
     )
-    cells = hier_assign(v, cands, n_cells=n_cells, branch=branch)
-    return _semdedup_prune_from_cells(v, cells, tau)
+    return hier_assign(v, cands, n_cells=n_cells, branch=branch)
 
 
 def hier_assign(
@@ -2671,28 +2712,15 @@ def semdedup_rounds(
     the unrolled oracle stays tractable; tools/scale_probe.py calls
     this directly with cells grown with the corpus.
 
-    Rounds are built from the STREAMING module's own `semdedup_round`
-    (streaming/semdedup.py), so the driver CORRECTNESS row attests the
-    very plan the foreachBatch body runs — the `corpus_dedup_rounds` /
+    Each round is `semdedup_pair_scan` of the batch against the store,
+    the same function the streaming foreachBatch body
+    (streaming/semdedup.py) runs, so this query's oracle row attests
+    the streaming round's plan — the `corpus_dedup_rounds` /
     `dedup_round` construction. Per-round verdicts union to the global
     recompute because a vector's verdict is final the round it arrives
     (its pairs are all in-batch or vs strictly-earlier arrivals)."""
-    from transit_feed_etl_spark.streaming.semdedup import (
-        semdedup_pair_scan,
-        semdedup_verdicts,
-    )
-
-    samp = v.filter(F.col("vec_id") % k_batches == 0)
-    # no persist: the trained quantizer is a checkpointed one-row leaf
-    cands = kmeans_train(
-        samp,
-        iters,
-        n_cells=n_cells,
-        seed_below=n_cells * k_batches,
-        seeds=seeds,
-    )
     m = persist_tracked(
-        hier_assign(v, cands, n_cells=n_cells, branch=branch)
+        _sampled_cells(v, n_cells, iters, k_batches, branch, seeds)
         .withColumn("nrm", V.l2_norm(F.col("v")))
         .withColumn("batch_id", (F.col("vec_id") % k_batches).cast("int"))
     )
@@ -2714,15 +2742,11 @@ def semdedup_rounds(
     # ONE verdict aggregation over the union of the K per-round pair
     # scans, instead of K per-round groupBys + a verdict union (K
     # groupBy exchanges where one suffices). Value-identical to
-    # union-of-round-verdicts: round k's
-    # pair scan only emits idb from batch k, so the K pair sets are
-    # key-disjoint in idb and the groupBy distributes over their union
-    # (the semdedup_verdicts docstring lemma). The streaming face
-    # (`semdedup_round` = verdicts ∘ pair_scan, per batch) keeps the
-    # per-round aggregation its foreachBatch body needs, built from the
-    # SAME two functions this twin composes — the driver CORRECTNESS
-    # row still attests the streaming round's pair scan and verdict
-    # expressions.
+    # union-of-round-verdicts: round k's pair scan only emits idb from
+    # batch k, so the K pair sets are key-disjoint in idb and the
+    # groupBy distributes over their union (the semdedup_verdicts
+    # docstring lemma). The streaming face aggregates per batch
+    # (`semdedup_round`), with the same `semdedup_verdicts`.
     verdicts = semdedup_verdicts(allp)
     return (
         verdicts.withColumn(

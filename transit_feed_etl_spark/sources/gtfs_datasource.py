@@ -42,30 +42,9 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import StructType
 
-FLAT_SCHEMA = StructType(
-    [
-        StructField("feed_id", StringType(), False),
-        StructField("ts", TimestampType(), False),
-        StructField("vehicle_id", StringType(), True),
-        StructField("latitude", DoubleType(), True),
-        StructField("longitude", DoubleType(), True),
-        StructField("speed", DoubleType(), True),
-        StructField("bearing", DoubleType(), True),
-        StructField("trip_id", StringType(), True),
-        StructField("route_id", StringType(), True),
-        StructField("current_stop_sequence", IntegerType(), True),
-        StructField("current_status", IntegerType(), True),
-    ]
-)
+from transit_feed_etl_spark.pipeline.gtfs import VEHICLE_POSITION_SCHEMA
 
 
 def _list_wire_files(path: str) -> list[str]:
@@ -175,7 +154,7 @@ class GtfsRtDataSource(DataSource):
         return "gtfs_rt"
 
     def schema(self) -> StructType:
-        return FLAT_SCHEMA
+        return VEHICLE_POSITION_SCHEMA
 
     def reader(self, schema: StructType) -> GtfsRtBatchReader:
         return GtfsRtBatchReader(self.options)

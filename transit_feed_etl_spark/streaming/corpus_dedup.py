@@ -21,7 +21,7 @@ Scale design:
   appended — the store append must not invalidate the lazy plan that
   reads the store (a lazy `fresh` re-evaluated after the append would
   anti-join against its own digests and drop everything).
-- foreachBatch is AT-LEAST-ONCE (ADVICE r11): a batch retried after
+- foreachBatch is AT-LEAST-ONCE: a batch retried after
   its store write would anti-join against its OWN digests and silently
   emit zero fresh rows. The store write is therefore idempotent per
   batch — each batch OVERWRITES its own `batch_id=N` subpath, and the
@@ -33,30 +33,11 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-
-def dedup_round(
-    batch: DataFrame,
-    seen: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Pure-plan core of one dedup round, shared by the streaming
-    foreachBatch body below and the registered batch twin
-    (queries/dedup.py:corpus_dedup_rounds — the driver-oracled face of
-    this operator): in-batch first-seen (lowest id per md5 digest), then
-    a left-anti join against the `seen` digest store (one `digest`
-    column). Returns the surviving rows with their `_digest` column
-    attached so the caller can append it to the store."""
-    digests = batch.withColumn("_digest", F.md5(F.col(text_col)))
-    rn = F.row_number().over(W.partitionBy("_digest").orderBy(id_col))
-    firsts = digests.withColumn("_rn", rn).filter(F.col("_rn") == 1).drop("_rn")
-    return firsts.join(
-        seen, firsts["_digest"] == seen["digest"], "left_anti"
-    )
+from transit_feed_etl_spark.queries.dedup import dedup_round
 
 
 def dedup_batch_against_store(

@@ -1,10 +1,11 @@
 """Incremental semantic dedup: SemDeDup over an embedding stream
 against PERSISTENT centroid + arrival stores — the streaming face of
-`queries/similarity.py::incremental_semdedup_rounds` (the driver-oracled
-batch twin builds its rounds from THIS module's `semdedup_round`, so the
-green CORRECTNESS row attests the very plan the foreachBatch body runs —
-the same construction as streaming/corpus_dedup.py and its
-`corpus_dedup_rounds` twin).
+`queries/similarity.py::incremental_semdedup_rounds`. Each batch runs
+the one SemDeDup pair scan and verdict aggregation
+(`queries/similarity.py::semdedup_pair_scan` / `semdedup_verdicts`)
+that the batch, sampled and incremental queries run, so their green
+CORRECTNESS rows attest the plan the foreachBatch body runs — the same
+construction as streaming/corpus_dedup.py and `corpus_dedup_rounds`.
 
 This is the daily-increment operational mode: a crawl delivers embedding
 micro-batches forever; each arrival must be checked against the WHOLE
@@ -47,11 +48,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-# single source of truth for the prune threshold and the training
-# rounds — a duplicated literal here could silently drift from the batch
-# face; safe to import at module level: queries/similarity.py only
-# imports THIS module lazily inside the twin builder, so there is no
-# import cycle
+from transit_feed_etl_spark.operators import vectors as V
+
+# the prune threshold and training rounds come from the batch face, so
+# they cannot drift from it
 from transit_feed_etl_spark.queries.similarity import (
     _KM_ITERS,
     _SEMDEDUP_TAU as _TAU,
@@ -59,102 +59,24 @@ from transit_feed_etl_spark.queries.similarity import (
     _explode_cands,
     hier_assign,
     kmeans_train,
+    semdedup_pair_scan,
+    semdedup_verdicts,
 )
-
-
-def semdedup_pair_scan(
-    batch: DataFrame, store: DataFrame | None, tau: float = _TAU
-) -> DataFrame:
-    """One round's similar-pair scan: (cell_b, ida, idb, cos6) for every
-    in-cell pair whose earlier side precedes `idb`'s arrival, filtered
-    at cos6 >= tau. `batch` and `store` carry (vec_id, cell, v, nrm);
-    the store holds strictly-earlier arrivals.
-
-    ONE cell-equijoin per round: the a-side is the union of the store
-    (tagged pre_a = true — everything in it precedes the whole batch)
-    and the batch itself (pre_a = false — in one batch, arrival order
-    is id order), and the precedence residual `pre_a OR ida < idb`
-    rides the equijoin. For a ∈ batch the residual reduces to
-    ida < idb, for a ∈ store to true, so the one join yields the same
-    pair multiset as an in-batch join unioned with a store join, with
-    one broadcast build and one join stage instead of two.
-    cos6 is FLOOR-truncated at 6dp (the portable IEEE form — see
-    queries/similarity.py's module docstring), matching the batch
-    face's `_semdedup_prune_from_cells` expression exactly."""
-    cos6 = (
-        F.floor(
-            _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")) * 1000000
-        )
-        / 1000000.0
-    )
-
-    def _a(df: DataFrame, precedes: bool) -> DataFrame:
-        return df.select(
-            F.col("cell").alias("cell_a"),
-            F.col("vec_id").alias("ida"),
-            F.col("v").alias("va"),
-            F.col("nrm").alias("na"),
-            F.lit(precedes).alias("pre_a"),
-        )
-
-    a = _a(batch, False)
-    if store is not None:
-        a = _a(store, True).unionByName(a)
-    y = batch.select(
-        F.col("cell").alias("cell_b"),
-        F.col("vec_id").alias("idb"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    cand = a.join(
-        y,
-        (F.col("cell_a") == F.col("cell_b"))
-        & (F.col("pre_a") | (F.col("ida") < F.col("idb"))),
-    )
-    return cand.select("cell_b", "ida", "idb", cos6.alias("cos6")).filter(
-        F.col("cos6") >= tau
-    )
-
-
-def semdedup_verdicts(pairs: DataFrame) -> DataFrame:
-    """Per-arrival prune verdicts (vec_id, cell, keeper_id, max_cos6)
-    from a similar-pair relation. Because a vector's verdict is final
-    the round it arrives (its pairs are all in-batch or vs
-    strictly-earlier arrivals), this aggregation distributes over
-    key-disjoint unions of per-round pair scans: grouping the union of
-    K rounds' pairs equals unioning K per-round groupings — the fold
-    the batch twin (queries/similarity.py:semdedup_rounds) exploits to
-    run ONE verdict aggregation for all rounds."""
-    return pairs.groupBy(F.col("idb").alias("vec_id")).agg(
-        F.min("cell_b").cast("int").alias("cell"),
-        F.min("ida").cast("bigint").alias("keeper_id"),
-        F.max("cos6").alias("max_cos6"),
-    )
 
 
 def semdedup_round(
     batch: DataFrame, store: DataFrame | None, tau: float = _TAU
 ) -> DataFrame:
-    """Pure-plan core of one semantic-dedup round, shared by the
-    streaming foreachBatch body below and the registered batch twin
-    (queries/similarity.py:semdedup_rounds — the driver-oracled face of
-    this operator): the single-join pair scan + the verdict
-    aggregation. Per-round verdicts union to the global recompute —
-    the merge law the batch twin's oracle proves."""
+    """Pure-plan core of one semantic-dedup round, the foreachBatch
+    body's: the single-join pair scan + the verdict aggregation.
+    Per-round verdicts union to the global recompute — the merge law
+    `incremental_semdedup_rounds`' oracle proves."""
     return semdedup_verdicts(semdedup_pair_scan(batch, store, tau))
-
-
-def _dot(a, b):
-    from transit_feed_etl_spark.operators import vectors as V
-
-    return V.dot(a, b)
 
 
 def _assigned(v: DataFrame, cands: DataFrame, n_cells: int) -> DataFrame:
     """(vec_id, cell, v, nrm) via the frozen quantizer's broadcast-tree
     walk, with the store-stable column types."""
-    from transit_feed_etl_spark.operators import vectors as V
-
     return (
         hier_assign(v, cands, n_cells=n_cells)
         .withColumn("nrm", V.l2_norm(F.col("v")))
@@ -176,8 +98,9 @@ def ensure_centroids(
     """The frozen one-row quantizer (`kmeans_train`'s layout): read from
     the persistent (cid, cv) centroid store, or trained ONCE on the
     first batch (seeds = its n_cells lowest vec_ids, the deterministic
-    rule the batch twin's oracle unrolls) and written there. Frozen
-    centroids are the production posture — see module doc."""
+    rule `incremental_semdedup_rounds`' oracle unrolls) and written
+    there. Frozen centroids are the production posture — see module
+    doc."""
     try:
         return _cand_array(spark.read.parquet(cent_path))
     except AnalysisException:
@@ -243,8 +166,6 @@ def start_semdedup_stream(
     parquet verdict sink. availableNow trigger: drains whatever is
     spooled, then stops — run per ingestion cycle, or swap in a
     processingTime trigger for continuous operation."""
-    from transit_feed_etl_spark.operators import vectors as V
-
     stream = spark.readStream.schema("vec_id long, embedding array<double>").json(
         spool_dir
     )
