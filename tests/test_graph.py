@@ -104,7 +104,7 @@ def test_pagerank_iterations_shuffle_free(spark):
     edges = raw.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
         raw.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
-    pr = pagerank(edges, iters=2, cut_lineage=False)
+    pr = pagerank(edges, iters=2)
     pr.collect()
     plan = pr._jdf.queryExecution().executedPlan().toString().split(
         "== Initial Plan =="

@@ -10,12 +10,11 @@ encoder, so encoder and decoder can't share a bug.
 from __future__ import annotations
 
 import struct
-from datetime import datetime
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
 from transit_feed_etl_spark.sources import gtfs_wire as W
-from transit_feed_etl_spark.sources.protobuf_feed import parse_feed_message
 
 
 def _golden_feed() -> bytes:
@@ -91,12 +90,15 @@ def test_truncated_payload_raises():
 
 
 def test_parse_feed_message_uses_wire_decoder_without_bindings():
-    out = parse_feed_message(
+    out = W.parse_feed_message(
         _golden_feed(), "sf_muni", datetime(2026, 1, 2, 3, 4, 5)
     )
     assert out["feed_id"] == "sf_muni"
-    assert out["fetch_ts"] == "2026-01-02T03:04:05"
+    # a naive fetch time is taken as UTC and written with its offset
+    assert out["fetch_ts"] == "2026-01-02T03:04:05Z"
     assert out["entity"][0]["vehicle"]["trip"]["route_id"] == "r9"
+    aware = datetime(2026, 1, 1, 22, 4, 5, tzinfo=timezone(timedelta(hours=-5)))
+    assert W.parse_feed_message(_golden_feed(), "f", aware)["fetch_ts"] == "2026-01-02T03:04:05Z"
 
 
 def test_decode_feed_files_end_to_end(spark, tmp_path):
@@ -156,7 +158,7 @@ def _spool_two_feeds(tmp_path):
 def test_python_datasource_batch_read(spark, tmp_path):
     """spark.read.format('gtfs_rt'): decode+filter+flatten inside a
     first-class Python Data Source, one partition per wire file."""
-    from datetime import datetime
+    from datetime import datetime, timedelta, timezone
 
     from transit_feed_etl_spark.sources.gtfs_datasource import GtfsRtDataSource
 

@@ -16,7 +16,6 @@ from transit_feed_etl_spark.pipeline.gtfs import (
     VEHICLE_POSITION_SCHEMA,
     flatten_feed,
     validate_positions,
-    with_geometry,
     with_time_partitions,
     write_partitioned,
 )
@@ -92,11 +91,14 @@ def test_flatten_filters_and_null_guards(raw_feed):
 
 
 def test_geometry_null_when_coords_missing(raw_feed):
-    geo = with_geometry(flatten_feed(raw_feed))
+    from transit_feed_etl_spark.pipeline.geoparquet import read_wkb_points, wkb_point
+
+    geo = flatten_feed(raw_feed).withColumn("geometry", wkb_point("longitude", "latitude"))
     rows = {r["vehicle_id"]: r for r in geo.collect()}
-    assert rows["veh_1"]["geometry"]["lon"] == -74.0
+    point = rows["veh_1"]["geometry"]
+    assert len(point) == 21  # WKB point: byte order, type, x, y
+    assert read_wkb_points([point]).iloc[0].tolist() == [-74.0, 40.7]
     assert rows[None]["geometry"] is None  # A11 null-guard
-    assert rows["veh_1"]["crs"] == "EPSG:4326"
 
 
 def test_validate_positions_quarantine(spark):
@@ -114,14 +116,12 @@ def test_validate_positions_quarantine(spark):
 
 def test_partitioned_sink_and_pruning(spark, tmp_path):
     df = with_time_partitions(
-        with_geometry(
-            spark.createDataFrame(
-                [
-                    ("f", datetime(2024, 3, 1, 12, 0, 1), "a", 40.0, -74.0, 1.0, 0.0, None, None, None, None),
-                    ("f", datetime(2024, 3, 1, 13, 0, 2), "b", 41.0, -73.0, 2.0, 0.0, None, None, None, None),
-                ],
-                VEHICLE_POSITION_SCHEMA,
-            )
+        spark.createDataFrame(
+            [
+                ("f", datetime(2024, 3, 1, 12, 0, 1), "a", 40.0, -74.0, 1.0, 0.0, None, None, None, None),
+                ("f", datetime(2024, 3, 1, 13, 0, 2), "b", 41.0, -73.0, 2.0, 0.0, None, None, None, None),
+            ],
+            VEHICLE_POSITION_SCHEMA,
         )
     )
     root = str(tmp_path / "positions")
@@ -250,9 +250,7 @@ def test_compaction_bounds_files_per_partition(spark, tmp_path):
          None, None, None, None)
         for m in range(12)
     ]
-    df = with_time_partitions(
-        with_geometry(spark.createDataFrame(rows, VEHICLE_POSITION_SCHEMA))
-    )
+    df = with_time_partitions(spark.createDataFrame(rows, VEHICLE_POSITION_SCHEMA))
     root = str(tmp_path / "many")
     # simulate the reference's one-file-per-minute pattern: 12 writes
     for m in range(12):

@@ -95,3 +95,33 @@ def test_spool_isolates_failures(server, tmp_path):
     assert "bad" in result["errors"]  # A8: failure isolated, run continues
     spooled = list((tmp_path / "spool").iterdir())
     assert len(spooled) == 1 and spooled[0].name.startswith("good_")
+
+
+def test_spooled_fetch_ts_is_the_utc_instant_in_any_session_time_zone(spark, tmp_path, monkeypatch):
+    """The default parser writes the fetch time with its UTC offset, so a
+    session in another time zone reads the spool record's `fetch_ts` as
+    the instant it was fetched."""
+    from datetime import datetime, timezone
+
+    from pyspark.sql import functions as F
+
+    from transit_feed_etl_spark.pipeline.gtfs import RAW_FEED_SCHEMA
+    from transit_feed_etl_spark.sources import gtfs_wire as W
+    from transit_feed_etl_spark.sources import http_fetch
+
+    payload = W.encode_feed_message(
+        W.encode_vehicle_entity("e1", vehicle_id="bus1", lat=40.7, lon=-74.0)
+    )
+    monkeypatch.setattr(http_fetch, "fetch_with_retry", lambda feed: payload)
+    spool = str(tmp_path / "spool")
+    now = datetime(2024, 3, 1, 12, 0, tzinfo=timezone.utc)
+    assert spool_all_feeds([{"id": "mta", "url": "unused"}], spool, now=now)["success"] == 1
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        row = spark.read.schema(RAW_FEED_SCHEMA).json(spool).select(
+            "feed_id", F.unix_micros("fetch_ts")
+        ).first()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert tuple(row) == ("mta", int(now.timestamp()) * 10**6)

@@ -128,8 +128,7 @@ def test_all_bad_batch_is_still_quarantined(spark, tmp_path):
     reason="replay is not idempotent yet: a replayed batch appends its sink, "
     "catalog and quarantine rows again (ROADMAP.md direction 3)",
 )
-@pytest.mark.parametrize("geoparquet", [False, True], ids=["plain", "geoparquet"])
-def test_replayed_batch_leaves_outputs_unchanged(spark, tmp_path, geoparquet):
+def test_replayed_batch_leaves_outputs_unchanged(spark, tmp_path):
     """foreachBatch delivers at least once, so a batch can arrive twice
     under the same batch_id. After the replay the sink, the catalog and
     the quarantine must read as after one call: (sink, catalog,
@@ -139,7 +138,7 @@ def test_replayed_batch_leaves_outputs_unchanged(spark, tmp_path, geoparquet):
 
     out, quarantine = str(tmp_path / "out"), str(tmp_path / "quarantine")
     catalog = FileCatalog(spark, str(tmp_path / "catalog"))
-    process, _ = make_batch_processor(out, catalog, quarantine, geoparquet=geoparquet)
+    process, _ = make_batch_processor(out, catalog, quarantine)
     ents = [
         _vehicle_entity("v1", 40.7, -74.0),
         _vehicle_entity("v2", 40.8, -73.9),
@@ -174,7 +173,7 @@ def test_ingest_tick_job_count_stays_on_budget(spark, tmp_path):
 
     catalog = FileCatalog(spark, str(tmp_path / "catalog"))
     process, metrics = make_batch_processor(
-        str(tmp_path / "out"), catalog, str(tmp_path / "quarantine"), geoparquet=True
+        str(tmp_path / "out"), catalog, str(tmp_path / "quarantine")
     )
     sc = spark.sparkContext
     ents = [
@@ -220,7 +219,6 @@ def test_tick_catalog_rows_equal_append_batch_partitions(spark, tmp_path):
     from transit_feed_etl_spark.pipeline.gtfs import (
         flatten_feed,
         validate_positions,
-        with_geometry,
         with_time_partitions,
     )
     from transit_feed_etl_spark.streaming.ingest import make_batch_processor
@@ -244,7 +242,7 @@ def test_tick_catalog_rows_equal_append_batch_partitions(spark, tmp_path):
     assert (metrics.records, metrics.quarantined) == (4, 2)
 
     ref_cat = FileCatalog(spark, str(tmp_path / "ref_catalog"))
-    good = validate_positions(with_geometry(flatten_feed(batch)))[0]
+    good = validate_positions(flatten_feed(batch))[0]
     ref_cat.append_batch_partitions(with_time_partitions(good), 7, out)
 
     def rows(cat):
@@ -279,8 +277,7 @@ def _tick_rows(cat):
     )
 
 
-@pytest.mark.parametrize("geoparquet", [False, True], ids=["plain", "geoparquet"])
-def test_tick_catalog_rows_keep_spark_nan_semantics(spark, tmp_path, geoparquet):
+def test_tick_catalog_rows_keep_spark_nan_semantics(spark, tmp_path):
     """The tick computes its catalog rows on the driver; they still equal
     Spark's `append_batch_partitions` rows when valid rows carry NaN,
     +-inf or NULL coordinates (a row is out of range only when both
@@ -291,7 +288,6 @@ def test_tick_catalog_rows_keep_spark_nan_semantics(spark, tmp_path, geoparquet)
     from transit_feed_etl_spark.pipeline.gtfs import (
         flatten_feed,
         validate_positions,
-        with_geometry,
         with_time_partitions,
     )
     from transit_feed_etl_spark.streaming.ingest import make_batch_processor
@@ -317,14 +313,12 @@ def test_tick_catalog_rows_keep_spark_nan_semantics(spark, tmp_path, geoparquet)
     ])
     out = str(tmp_path / "out")
     tick_cat = FileCatalog(spark, str(tmp_path / "tick_catalog"))
-    process, metrics = make_batch_processor(
-        out, tick_cat, str(tmp_path / "quarantine"), geoparquet=geoparquet
-    )
+    process, metrics = make_batch_processor(out, tick_cat, str(tmp_path / "quarantine"))
     process(batch, 3)
     assert (metrics.records, metrics.quarantined) == (8, 2)
 
     ref_cat = FileCatalog(spark, str(tmp_path / "ref_catalog"))
-    good = validate_positions(with_geometry(flatten_feed(batch)))[0]
+    good = validate_positions(flatten_feed(batch))[0]
     ref_cat.append_batch_partitions(with_time_partitions(good), 3, out)
     got = _tick_rows(tick_cat)
     assert got == _tick_rows(ref_cat)
@@ -349,9 +343,7 @@ def test_tick_opens_no_sink_file(spark, tmp_path, monkeypatch):
 
     out = str(tmp_path / "out")
     catalog = FileCatalog(spark, str(tmp_path / "catalog"))
-    process, metrics = make_batch_processor(
-        out, catalog, str(tmp_path / "quarantine"), geoparquet=True
-    )
+    process, metrics = make_batch_processor(out, catalog, str(tmp_path / "quarantine"))
 
     def tick(k, ts_iso):
         ents = [_vehicle_entity(f"v{k}", 40.7, -74.0), _vehicle_entity(f"bad{k}", 99.0, 0.0)]
@@ -393,7 +385,7 @@ def test_failed_tick_leaves_no_output(spark, tmp_path, monkeypatch, fail_at):
 
     out, quarantine = str(tmp_path / "out"), str(tmp_path / "quarantine")
     catalog = FileCatalog(spark, str(tmp_path / "catalog"))
-    process, _ = make_batch_processor(out, catalog, quarantine, geoparquet=True)
+    process, _ = make_batch_processor(out, catalog, quarantine)
     process(_feed_batch(spark, tmp_path, "b0", "2024-03-01T12:00:00", [
         _vehicle_entity("v0", 40.7, -74.0), _vehicle_entity("bad0", 99.0, 0.0),
     ]), 0)
@@ -441,11 +433,11 @@ def test_failed_tick_leaves_no_output(spark, tmp_path, monkeypatch, fail_at):
     assert catalog.check_not_empty()["passed"]
 
 
-def test_plain_mode_outputs_read_back_in_another_time_zone(spark, tmp_path):
-    """The driver writes the plain-mode sink and quarantine too: Spark,
-    in a session whose time zone is not UTC, reads `ts` from both as a
-    TimestampType holding the spool's instants, and the catalog's bbox
-    read and snapshot read return the sink's rows."""
+def test_sink_outputs_read_back_in_another_time_zone(spark, tmp_path):
+    """Spark, in a session whose time zone is not UTC, reads `ts` from the
+    GeoParquet sink and the quarantine as a TimestampType holding the
+    spool's instants, reads `geometry` as WKB binary, and the catalog's
+    bbox read and snapshot read return the sink's rows."""
     from transit_feed_etl_spark.pipeline.catalog import FileCatalog
     from transit_feed_etl_spark.streaming.ingest import make_batch_processor
 
@@ -472,7 +464,8 @@ def test_plain_mode_outputs_read_back_in_another_time_zone(spark, tmp_path):
         sink, quar = spark.read.parquet(out), spark.read.parquet(quarantine)
         assert sink.schema["ts"].dataType == T.TimestampType()
         assert quar.schema["ts"].dataType == T.TimestampType()
-        assert isinstance(sink.schema["geometry"].dataType, T.StructType)
+        assert sink.schema["geometry"].dataType == T.BinaryType()
+        assert quar.schema["geometry"].dataType == T.BinaryType()
         rows = keyed(sink)
         assert rows == [("v0", us[0]), ("v1", us[1])]
         assert keyed(quar) == [("bad0", us[0]), ("bad1", us[1])]
@@ -484,8 +477,7 @@ def test_plain_mode_outputs_read_back_in_another_time_zone(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", tz)
 
 
-@pytest.mark.parametrize("geoparquet", [False, True], ids=["plain", "geoparquet"])
-def test_tick_writes_naive_utc_ts_in_another_time_zone(spark, tmp_path, geoparquet):
+def test_tick_writes_naive_utc_ts_in_another_time_zone(spark, tmp_path):
     """A tick run in a session whose time zone is not UTC writes `ts` to
     its sink and quarantine files as pyarrow reads Spark's own files: a
     naive timestamp[us] holding the spool's UTC instant. Both files carry
@@ -501,7 +493,7 @@ def test_tick_writes_naive_utc_ts_in_another_time_zone(spark, tmp_path, geoparqu
 
     out, quarantine = str(tmp_path / "out"), str(tmp_path / "quarantine")
     catalog = FileCatalog(spark, str(tmp_path / "catalog"))
-    process, metrics = make_batch_processor(out, catalog, quarantine, geoparquet=geoparquet)
+    process, metrics = make_batch_processor(out, catalog, quarantine)
     tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
     try:
@@ -535,7 +527,7 @@ def test_batch_of_non_vehicle_entities_is_empty(spark, tmp_path):
 
     catalog = FileCatalog(spark, str(tmp_path / "catalog"))
     process, metrics = make_batch_processor(
-        str(tmp_path / "out"), catalog, str(tmp_path / "quarantine"), geoparquet=True
+        str(tmp_path / "out"), catalog, str(tmp_path / "quarantine")
     )
     process(_feed_batch(spark, tmp_path, "b0", "2024-03-01T12:00:00", [
         {"id": "x", "vehicle": None}, {"id": "y"},
@@ -569,7 +561,7 @@ def test_rows_without_fetch_ts_land_in_the_default_partition(spark, tmp_path):
         json.dump({"feed_id": "mta", "entity": [_vehicle_entity("v1", 40.8, -73.9)]}, f)
     out = str(tmp_path / "out")
     catalog = FileCatalog(spark, str(tmp_path / "catalog"))
-    process, metrics = make_batch_processor(out, catalog, geoparquet=True)
+    process, metrics = make_batch_processor(out, catalog)
     process(spark.read.schema(RAW_FEED_SCHEMA).json(str(d)), 0)
     assert metrics.records == 2
     default = "/".join(f"{c}=__HIVE_DEFAULT_PARTITION__" for c in ("year", "month", "day", "hour"))
@@ -595,7 +587,7 @@ def test_rows_without_fetch_ts_land_in_the_default_partition(spark, tmp_path):
     # latest file is the default partition
     undated_out = str(tmp_path / "undated_out")
     undated = FileCatalog(spark, str(tmp_path / "undated_catalog"))
-    process, _ = make_batch_processor(undated_out, undated, geoparquet=True)
+    process, _ = make_batch_processor(undated_out, undated)
     process(spark.read.schema(RAW_FEED_SCHEMA).json(str(d / "f1.json")), 0)
     check = undated.check_not_empty()
     assert (check["total_records"], check["recent_records"]) == (1, 0)
@@ -625,7 +617,7 @@ def test_spool_backlog_drains_in_capped_batches(spark, tmp_path, monkeypatch):
         d = tmp_path / name
         q, metrics, catalog = start_ingest(
             spark, str(spool), str(d / "out"), str(d / "catalog"), str(d / "ckpt"),
-            quarantine_root=str(d / "quarantine"), available_now=True, geoparquet=True,
+            quarantine_root=str(d / "quarantine"), available_now=True,
         )
         q.awaitTermination(120)
 
@@ -846,6 +838,22 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert out == {(12, 0, "click"): 1, (12, 30, "view"): 1}
 
 
+def test_sink_format_other_than_geoparquet_raises(tmp_path):
+    """The sink writes GeoParquet only: both entry points reject
+    `geoparquet=False` before touching Spark or the file system (neither
+    a catalog nor a session is given to them here)."""
+    from transit_feed_etl_spark.streaming.ingest import make_batch_processor
+
+    with pytest.raises(ValueError, match="GeoParquet only"):
+        make_batch_processor(str(tmp_path / "out"), None, geoparquet=False)
+    with pytest.raises(ValueError, match="GeoParquet only"):
+        start_ingest(
+            None, str(tmp_path / "spool"), str(tmp_path / "out"),
+            str(tmp_path / "catalog"), str(tmp_path / "ckpt"), geoparquet=False,
+        )
+    assert list(tmp_path.iterdir()) == []
+
+
 def test_ingest_stream_geoparquet_mode(spark, tmp_path):
     """geoparquet=True: the streamed output files carry real WKB
     geometry and the GeoParquet 'geo' footer with per-file bbox —
@@ -971,8 +979,7 @@ def test_transform_with_state_quota(spark, tmp_path):
 
     Capability gate: the transformWithState state-server protocol is
     protobuf-based; without google.protobuf bindings the engine's
-    Python driver worker cannot start (same optional dependency the
-    GTFS bindings path documents in sources/protobuf_feed.py)."""
+    Python driver worker cannot start, so the test skips."""
     pytest.importorskip("google.protobuf.descriptor")
     from transit_feed_etl_spark.streaming.stateful import quota_admission
 

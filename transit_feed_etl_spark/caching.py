@@ -14,9 +14,9 @@ THREAD; ``release_caches()`` unpersists the calling thread's caches
 cannot leak). Scoping by thread means a sequential loop still bounds
 outstanding cache to one query's worth — the next build releases the
 previous build's caches — while two drivers interleaving builds on
-separate threads can no longer unpersist each other's in-use caches
-(the threaded-driver hazard documented in registry.register, removed
-per VERDICT r6 item 5). ``bench.py`` and the test harness call
+separate threads cannot unpersist each other's in-use caches (the
+threaded-driver hazard documented in registry.register). ``bench.py``
+and the test harness call
 ``release_caches()`` after each query's action completes.
 MEMORY_AND_DISK + Spark's LRU eviction bound the damage even if a
 caller forgets.
@@ -35,18 +35,16 @@ _LOCK = threading.Lock()
 # len(_TRACKED); entries are scoped to their registering thread. A
 # WEAKREF to the Thread OBJECT, not its ident: CPython reuses idents
 # after a thread exits, so an ident-keyed entry could be re-attributed
-# to an unrelated new thread and escape scavenging forever (ADVICE r7).
+# to an unrelated new thread and escape scavenging forever.
 # Identity of the Thread object cannot be reused while we can still
 # dereference it.
 _TRACKED: list[tuple[weakref.ref, DataFrame]] = []
 
 
-def persist_tracked(
-    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-) -> DataFrame:
-    """persist() that registers the frame for later release_caches(),
-    scoped to the calling thread."""
-    out = df.persist(level)
+def persist_tracked(df: DataFrame) -> DataFrame:
+    """persist(MEMORY_AND_DISK) that registers the frame for later
+    release_caches(), scoped to the calling thread."""
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     with _LOCK:
         _TRACKED.append((weakref.ref(threading.current_thread()), out))
     return out

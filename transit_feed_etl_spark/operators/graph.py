@@ -38,27 +38,22 @@ def pagerank(
     dst: str = "dst",
     iters: int = 3,
     damping: float = 0.85,
-    broadcast_ranks: bool = True,
-    cut_lineage: bool = False,
 ) -> DataFrame:
     """PageRank over a directed edge list (pass a symmetrized list for
     an undirected graph). Every node must have out-degree >= 1 (true by
     construction for symmetrized edges); the node set is the distinct
     `src` set. Returns (node, rank) with full-precision double ranks.
 
-    With ``broadcast_ranks`` (the |V| << |E| regime — rank vector fits
-    in an executor broadcast), iterations are SHUFFLE-FREE: the static
-    (src, dst, deg) relation is hash-partitioned on `dst` once and
-    persisted, the rank join is a broadcast map-side join that preserves
-    that partitioning, and the contribution groupBy(dst) therefore needs
-    no exchange (pinned by tests/test_plans.py). When the rank vector
-    itself outgrows a broadcast (billions of nodes), pass False to fall
-    back to shuffle joins on src — two |E| exchanges per iteration, the
-    classic cost model.
+    Iterations are SHUFFLE-FREE in the |V| << |E| regime, where the rank
+    vector fits in an executor broadcast: the static (src, dst, deg)
+    relation is hash-partitioned on `dst` once and persisted, the rank
+    join is a broadcast map-side join that preserves that partitioning,
+    and the contribution groupBy(dst) therefore needs no exchange
+    (pinned by tests/test_plans.py).
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # |V|-row relation referenced by every iteration's teleport anchor
-    # and the initial ranks — persist so nn/r0 never re-derive the
+    # and the initial ranks — persist so neither re-derives the
     # (potentially expensive) upstream edge build
     deg = persist_tracked(e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
     # |V| as a 1-row broadcast anchor (never collected at the driver)
@@ -75,13 +70,9 @@ def pagerank(
     out.count()  # materialize ONCE so iterations read the cache
     for _ in range(iters):
         contrib = (F.col("rank") / F.col("deg")).cast("decimal(38,30)")
-        joined = (
-            out.join(F.broadcast(ranks), "src")
-            if broadcast_ranks
-            else out.join(ranks, "src")
-        )
         new_ranks = (
-            joined.groupBy("dst")
+            out.join(F.broadcast(ranks), "src")
+            .groupBy("dst")
             .agg(F.sum(contrib).alias("mass"))
             .crossJoin(F.broadcast(nn))
             .select(
@@ -92,19 +83,11 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        # Default: persist the round lazily — at a handful of
-        # iterations the nesting stays shallow and the whole chain
-        # executes as one action with every broadcast build served from
-        # cache (measured 4.3 s for 3 rounds at sf0.1; eager per-round
-        # localCheckpoint jobs measured 10x slower here). cut_lineage
-        # trades that for flat per-round plans — the right call when
-        # iteration counts grow past ~10 (see components.py / the MMR
-        # operator, where nesting depth, not round count, dominated).
-        ranks = (
-            new_ranks.localCheckpoint()
-            if cut_lineage
-            else persist_tracked(new_ranks)
-        )
+        # persist each iteration lazily: at a handful of iterations the
+        # nesting stays shallow and the whole chain executes as one
+        # action with every broadcast build served from cache (an eager
+        # localCheckpoint per iteration measured 10x slower)
+        ranks = persist_tracked(new_ranks)
     return ranks.select(F.col("src").alias("node"), "rank")
 
 
@@ -157,7 +140,7 @@ def triangle_count(
         # deg<<32 + id BIGINT would give WITHOUT the id < 2^32 range
         # assumption — 64-bit ids (e.g. xxhash64-derived node ids) are
         # normal at the 100 TB target, and a packed key silently
-        # collides for them, dropping wedges (ADVICE r7).
+        # collides for them, dropping wedges.
         key = F.struct(F.col("deg"), F.col("node").alias("id"))
         deg = deg.select("node", key.alias("ord"))
         withord = (
@@ -201,12 +184,10 @@ def triangle_count(
     # streams come from an explode over the triangle row, not a 3-way
     # unionAll of tri projections — union branches are separate plan
     # subtrees and there is no exchange between the join and the union
-    # for ReuseExchange to share, so the 3-branch shape re-executed the
-    # ENTIRE wedge join three times (r12 job profile: 3 identical
-    # multi-second join jobs per pass at sf0.1 — guide §1.2 step 1,
-    # don't recompute what you already have). explode(array(x,y,z))
-    # yields the identical node multiset, so the per-node counts are
-    # byte-identical.
+    # for ReuseExchange to share, so a 3-branch shape would execute the
+    # ENTIRE wedge join three times (3 identical multi-second join jobs
+    # per pass at sf0.1). explode(array(x,y,z)) yields the identical
+    # node multiset, so the per-node counts are the same.
     return (
         tri.select(
             F.explode(

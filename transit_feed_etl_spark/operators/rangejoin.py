@@ -30,10 +30,11 @@ def range_join_binned(
     start_ts: str,
     end_ts: str,
     bin_width_s: int,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join each row of ``points`` to every row of ``intervals`` whose
-    [start_ts, end_ts] contains point_ts (inclusive bounds).
+    """Inner-join each row of ``points`` to every row of ``intervals``
+    whose [start_ts, end_ts] contains point_ts (inclusive bounds). An
+    outer join cannot be built this way: an interval is exploded to one
+    row per bin it spans, so its unmatched bins would each emit a row.
 
     Both inputs keep all their columns; callers project/aggregate after.
     The bin equi-key makes this a plain shuffled (or broadcast, if one
@@ -52,4 +53,4 @@ def range_join_binned(
         & (F.col(point_ts) >= F.col(start_ts))
         & (F.col(point_ts) <= F.col(end_ts))
     )
-    return p.join(i, cond, how).drop("_bin")
+    return p.join(i, cond).drop("_bin")

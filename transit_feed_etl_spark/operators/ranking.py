@@ -28,15 +28,12 @@ def global_rank(
     df: DataFrame,
     order_cols: list[str],
     rank_col: str = "rnk",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Attach an exact, gap-free, 1-based global rank over the total
     order `order_cols` (caller must pass a tie-free column list) without
     ever materializing a single-partition sort."""
     cols = [F.col(c) for c in order_cols]
-    ranged = df.repartitionByRange(
-        *( [num_partitions] if num_partitions else [] ), *cols
-    ).withColumn("_pid", F.spark_partition_id())
+    ranged = df.repartitionByRange(*cols).withColumn("_pid", F.spark_partition_id())
     counts = ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
     woff = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, W.currentRow)
     offsets = counts.select(

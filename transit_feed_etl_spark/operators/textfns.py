@@ -29,8 +29,8 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is")
 
 
-def tokens(text: Column | str, lowercase: bool = True) -> Column:
-    """Split on non-word runs, drop empties. Mirrors DuckDB
+def tokens(text: Column | str) -> Column:
+    """Lowercase, split on non-word runs, drop empties. Mirrors DuckDB
     ``list_filter(string_split_regex(lower(text),'\\W+'), t -> t <> '')``.
 
     Cross-engine contract verified on a Unicode corpus (accents,
@@ -40,9 +40,7 @@ def tokens(text: Column | str, lowercase: bool = True) -> Column:
     ('i' + combining dot, which then splits on the mark) but to plain
     'i' in DuckDB — pinned by test_u0130_divergence_is_pinned."""
     c = F.col(text) if isinstance(text, str) else text
-    if lowercase:
-        c = F.lower(c)
-    return F.filter(F.split(c, r"\W+"), lambda t: t != "")
+    return F.filter(F.split(F.lower(c), r"\W+"), lambda t: t != "")
 
 
 def word_shingles(toks: Column, n: int = 3) -> Column:

@@ -4,11 +4,12 @@ The reference flattens protobuf FeedMessage entities with per-row Python
 loops (reference gtfs_rt_assets.py:26-49) and builds shapely Points via
 iterrows (reference gtfs_rt_assets.py:122-127). Here every stage is a
 declarative DataFrame transform: explode + nested-field projection
-(null-safe for free), vectorized geometry struct, Hive-partitioned sink.
+(null-safe for free), Hive-partitioned sink. The point geometry is the
+WKB column the ingest tick adds (`pipeline/geoparquet.py` `wkb_point`).
 
 Input shape (FIXTURES.md F2 — JSON/struct-shaped so no protobuf
-descriptor is needed; `from_protobuf` is an optional adapter, see
-`sources/protobuf_feed.py`):
+descriptor is needed; `sources/gtfs_wire.py` decodes protobuf feed
+bytes into it):
 
   feed_id  string
   fetch_ts timestamp
@@ -138,29 +139,6 @@ def flatten_feed(raw: DataFrame) -> DataFrame:
             f"{v}.current_status AS current_status",
         )
     )
-
-
-def point_geometry(lon: Column, lat: Column) -> Column:
-    """A11: vehicle point geometry — struct{lon,lat} when both present,
-    NULL otherwise (reference builds shapely Points in an iterrows loop,
-    gtfs_rt_assets.py:122-127; this is the vectorized equivalent).
-    CRS is the module constant EPSG:4326."""
-    return F.when(
-        lon.isNotNull() & lat.isNotNull(),
-        F.struct(lon.alias("lon"), lat.alias("lat")),
-    )
-
-
-def geometry_columns() -> dict[str, Column]:
-    """The A11 point `geometry` and its constant `crs`."""
-    return {
-        "geometry": point_geometry(F.col("longitude"), F.col("latitude")),
-        "crs": F.lit(CRS),
-    }
-
-
-def with_geometry(df: DataFrame) -> DataFrame:
-    return df.withColumns(geometry_columns())
 
 
 def out_of_range() -> Column:

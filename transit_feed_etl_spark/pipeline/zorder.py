@@ -25,26 +25,24 @@ from pyspark.sql import functions as F
 MORTON_BITS = 16  # per dimension -> 32-bit codes, ~0.005° cells
 
 
-def _quantize(v: Column, lo: float, hi: float, bits: int) -> Column:
-    """Clamp to [lo, hi] and scale to an integer in [0, 2^bits)."""
-    n = (1 << bits) - 1
+def _quantize(v: Column, lo: float, hi: float) -> Column:
+    """Clamp to [lo, hi] and scale to an integer in [0, 2^MORTON_BITS)."""
+    n = (1 << MORTON_BITS) - 1
     clamped = F.least(F.greatest(v, F.lit(lo)), F.lit(hi))
     return F.floor((clamped - F.lit(lo)) / F.lit(hi - lo) * n).cast("long")
 
 
-def morton_code(
-    lon: Column | str, lat: Column | str, bits: int = MORTON_BITS
-) -> Column:
+def morton_code(lon: Column | str, lat: Column | str) -> Column:
     """Interleaved-bit Morton code of (lon, lat), fully JVM-side: an
-    unrolled sum of shift/mask expressions (2*bits terms, constant-
+    unrolled sum of shift/mask expressions (2*MORTON_BITS terms, constant-
     folded structure — no UDF, participates in whole-stage codegen).
     NULL coordinates yield NULL (sorted last by repartitionByRange)."""
     lon = F.col(lon) if isinstance(lon, str) else lon
     lat = F.col(lat) if isinstance(lat, str) else lat
-    qx = _quantize(lon, -180.0, 180.0, bits)
-    qy = _quantize(lat, -90.0, 90.0, bits)
+    qx = _quantize(lon, -180.0, 180.0)
+    qy = _quantize(lat, -90.0, 90.0)
     code = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(MORTON_BITS):
         code = code.bitwiseOR(
             F.shiftleft(F.shiftright(qx, i).bitwiseAND(F.lit(1)), 2 * i)
         ).bitwiseOR(

@@ -51,7 +51,7 @@ _FEATS_SQL = """
 """
 
 
-def _perceptron_oracle(rounds: int = _ROUNDS) -> str:
+def _perceptron_oracle() -> str:
     """Unrolled batch-perceptron training: margins -> misclassified set
     -> decimal-exact gradient -> weight update with the lr0/round
     schedule, one CTE block per round. Learning rates fold through
@@ -63,7 +63,7 @@ def _perceptron_oracle(rounds: int = _ROUNDS) -> str:
              "w0 AS (SELECT "
              + ", ".join(f"CAST(0.0 AS DOUBLE) AS w{j}" for j in range(_NF))
              + ")"]
-    for r in range(rounds):
+    for r in range(_ROUNDS):
         lr_sql = f"CAST('{_LR / (r + 1)!r}' AS DOUBLE)"
         margin = " + ".join(f"w.w{j} * f.{x}" for j, x in enumerate(xs))
         grads = ", ".join(
@@ -88,7 +88,7 @@ def _perceptron_oracle(rounds: int = _ROUNDS) -> str:
         f"""SELECT {r + 1} AS round,
                (SELECT CAST(mis AS BIGINT) FROM g{r}) AS n_misclassified,
                {", ".join(f"(SELECT CAST(FLOOR(w{j} * 1e9) AS BIGINT) FROM w{r + 1}) AS w{j}_e9" for j in range(_NF))}"""
-        for r in range(rounds)
+        for r in range(_ROUNDS)
     )
     return (
         "WITH " + ",\n    ".join(parts)

@@ -78,9 +78,14 @@ _FLOOR6_SQL = "FLOOR(({x}) * 1000000) / 1000000.0"
 EMB_DIM = 64  # driver testdata contract (TESTDATA.md): fixed-width embeddings
 
 
-def _lsh_planes(n_planes: int = 8, dim: int = EMB_DIM) -> list[list[float]]:
+# multi-table sign-LSH of ann_lsh_topk and its oracle: tables x planes per table
+_LSH_TABLES, _LSH_PLANES = 8, 5
+
+
+def _lsh_planes() -> list[list[float]]:
+    """The seeded hyperplanes, table after table."""
     rng = np.random.default_rng(2024)
-    return rng.standard_normal((n_planes, dim)).tolist()
+    return rng.standard_normal((_LSH_TABLES * _LSH_PLANES, EMB_DIM)).tolist()
 
 
 _EMB_COUNT_MEMO: dict[tuple[int, str], int] = {}
@@ -248,7 +253,7 @@ def _cosine_pairs(spark: SparkSession, sf_dir: str, th: float) -> DataFrame:
     )
 
 
-def _lsh_oracle(n_tables: int = 8, k: int = 5) -> str:
+def _lsh_oracle() -> str:
     """DuckDB oracle for ann_lsh_topk (multi-table sign-LSH): the
     hyperplanes are deterministic driver-side constants, so per-table
     bucket codes and the bucket-restricted top-k are fully
@@ -258,12 +263,12 @@ def _lsh_oracle(n_tables: int = 8, k: int = 5) -> str:
     OR over per-table code equalities is exactly the exploded equi-join
     the Spark side runs (codes of different tables are disjoint by the
     t*256 offset)."""
-    planes = _lsh_planes(n_planes=n_tables * k)
+    planes = _lsh_planes()
     code_cols = []
-    for t in range(n_tables):
+    for t in range(_LSH_TABLES):
         bits = []
-        for j in range(k):
-            p = planes[t * k + j]
+        for j in range(_LSH_PLANES):
+            p = planes[t * _LSH_PLANES + j]
             arr = "[" + ", ".join(repr(x) for x in p) + "]"
             bits.append(
                 f"(CASE WHEN list_sum(list_transform(range(1, {EMB_DIM} + 1),"
@@ -271,13 +276,13 @@ def _lsh_oracle(n_tables: int = 8, k: int = 5) -> str:
             )
         code_cols.append(f"({t * 256} + " + " + ".join(bits) + f") AS c{t}")
     codes = ", ".join(code_cols)
-    match = " OR ".join(f"c.c{t} = q.c{t}" for t in range(n_tables))
+    match = " OR ".join(f"c.c{t} = q.c{t}" for t in range(_LSH_TABLES))
     return f"""
     WITH v AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ),
     b AS (SELECT vec_id, v, {codes} FROM v),
-    q AS (SELECT vec_id AS qid, v AS qv, {", ".join(f"c{t}" for t in range(n_tables))}
+    q AS (SELECT vec_id AS qid, v AS qv, {", ".join(f"c{t}" for t in range(_LSH_TABLES))}
           FROM b WHERE vec_id < 10),
     scored AS (
       SELECT q.qid, c.vec_id AS nid,
@@ -310,10 +315,9 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring; value-level oracle (deterministic planes folded as
     literals)."""
     emb = table_par(spark, sf_dir, "embeddings")
-    planes = _lsh_planes(n_planes=8 * 5)
     v = (
         emb.select("vec_id", V.as_double("embedding").alias("v"))
-        .withColumn("codes", V.multitable_codes(F.col("v"), planes, k=5))
+        .withColumn("codes", V.multitable_codes(F.col("v"), _lsh_planes(), k=_LSH_PLANES))
         .withColumn("nrm", V.l2_norm(F.col("v")))
     )
     # candidate generation on the exploded code relation (equi join)
@@ -581,7 +585,7 @@ def _kmeans_training_parts(
     return parts
 
 
-def _kmeans_oracle(iters: int = _KM_ITERS, cells: int = _KM_CELLS) -> str:
+def _kmeans_oracle() -> str:
     """DuckDB oracle for ivf_kmeans_topk with the k-means TRAINING
     unrolled as a CTE chain — the full Lloyd iteration is value-level
     differential-checked, not just the final search.
@@ -593,8 +597,8 @@ def _kmeans_oracle(iters: int = _KM_ITERS, cells: int = _KM_CELLS) -> str:
     iteration is bit-identical in both engines, so the trained
     centroids (and hence the ANN result) hash-match."""
     cos = _COS6
-    parts = _kmeans_training_parts(iters, cells)
-    final = f"c{iters}"
+    parts = _kmeans_training_parts(_KM_ITERS, _KM_CELLS)
+    final = f"c{_KM_ITERS}"
     return f"""
     WITH {", ".join(parts)},
     asg AS (
@@ -829,9 +833,9 @@ def _ivf_assign(v: DataFrame, cands: DataFrame, nprobe: int) -> DataFrame:
 
 
 def ivf_search_topk(
-    v: DataFrame, cands: DataFrame, n_queries: int = 10, nprobe: int = 2, k: int = 5
+    v: DataFrame, cands: DataFrame, n_queries: int = 10, nprobe: int = 2
 ) -> DataFrame:
-    """Cell-pruned top-k search against a `kmeans_train` quantizer
+    """Cell-pruned top-5 search against a `kmeans_train` quantizer
     (trained or seed): assign every vector to its cell, probe each
     query's nprobe nearest cells, score candidates exactly, rank. At
     100 TB the cell id is the partition key — candidate scoring is a
@@ -859,7 +863,7 @@ def ivf_search_topk(
             "qid", "nid", _f6(V.cosine(F.col("qv"), F.col("nv"))).alias("score")
         )
         .withColumn("rnk", F.row_number().over(ws))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= 5)
         .select("qid", "nid", _f4(F.col("score")).alias("score"), "rnk")
         .orderBy("qid", "rnk")
     )
@@ -1981,7 +1985,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PCA_ITERS = 3
 
 
-def _pca_oracle(iters: int = _PCA_ITERS) -> str:
+def _pca_oracle() -> str:
     """DuckDB oracle for pca_top_component with the power iteration
     unrolled as a CTE chain — covariance accumulation, every
     matrix-vector product, the norm, and the final projection all go
@@ -2012,7 +2016,7 @@ def _pca_oracle(iters: int = _PCA_ITERS) -> str:
       FROM range(1, {EMB_DIM} + 1)
     )""",
     ]
-    for k in range(iters):
+    for k in range(_PCA_ITERS):
         parts.append(
             f"""w{k} AS (
       SELECT c.i, CAST(SUM(CAST(c.cij * p.vv AS DECIMAL(25,15))) AS DOUBLE) AS w
@@ -2036,7 +2040,7 @@ def _pca_oracle(iters: int = _PCA_ITERS) -> str:
     proj AS (
       SELECT cx.vec_id,
              CAST(SUM(CAST(cx.c * p.vv AS DECIMAL(25,15))) AS DOUBLE) AS s
-      FROM cx JOIN v{iters} p USING (i)
+      FROM cx JOIN v{_PCA_ITERS} p USING (i)
       GROUP BY cx.vec_id
     ),
     sc AS (SELECT vec_id, CAST(FLOOR(s * 1e6) AS BIGINT) AS pc1_e6 FROM proj)
@@ -2157,9 +2161,7 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEMDEDUP_TAU = 0.25
 
 
-def _semdedup_oracle(
-    iters: int = _KM_ITERS, cells: int = _KM_CELLS, tau: float = _SEMDEDUP_TAU
-) -> str:
+def _semdedup_oracle() -> str:
     """DuckDB oracle for semdedup_prune: the SAME unrolled Lloyd
     training as _kmeans_oracle, then the cell-local pair scan and the
     keep-lowest-id pruning decision."""
@@ -2168,10 +2170,12 @@ def _semdedup_oracle(
         SELECT v.vec_id, c.cid,
                ROW_NUMBER() OVER (PARTITION BY v.vec_id
                  ORDER BY {_COS6.format(a="v.v", b="c.cv")} DESC, c.cid ASC) AS rn
-        FROM v CROSS JOIN c{iters} c
+        FROM v CROSS JOIN c{_KM_ITERS} c
       ) WHERE rn = 1
     )"""
-    return _semdedup_prune_sql(_kmeans_training_parts(iters, cells) + [cells_cte], tau)
+    return _semdedup_prune_sql(
+        _kmeans_training_parts(_KM_ITERS, _KM_CELLS) + [cells_cte], _SEMDEDUP_TAU
+    )
 
 
 def _semdedup_prune_sql(parts: list[str], tau: float) -> str:
@@ -2219,20 +2223,15 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup_pairs(v, n_cells=_KM_CELLS)
 
 
-def semdedup_pairs(
-    v: DataFrame,
-    n_cells: int = _KM_CELLS,
-    iters: int = _KM_ITERS,
-    tau: float = _SEMDEDUP_TAU,
-) -> DataFrame:
+def semdedup_pairs(v: DataFrame, n_cells: int = _KM_CELLS) -> DataFrame:
     """The SemDeDup pipeline over a (vec_id, v) frame with a
     parameterized cell count — the registered query pins n_cells so the
     unrolled oracle stays tractable; tools/scale_probe.py calls this
     directly with cells grown proportionally to the corpus (the
     production sizing rule, SCALE.md)."""
     # no persist: the trained quantizer is a checkpointed one-row leaf
-    cells = _assign1(v, kmeans_train(v, iters, n_cells=n_cells))
-    return _semdedup_prune_from_cells(cells, tau)
+    cells = _assign1(v, kmeans_train(v, _KM_ITERS, n_cells=n_cells))
+    return _semdedup_prune_from_cells(cells, _SEMDEDUP_TAU)
 
 
 def semdedup_pair_scan(
@@ -2325,12 +2324,7 @@ _SD_SAMPLE_MOD = 4  # train on vec_id % 4 == 0 (portable deterministic sample)
 _SD_BRANCH = 4  # hierarchy branching factor for the coarse assignment
 
 
-def _sampled_assignment_parts(
-    iters: int = _KM_ITERS,
-    cells: int = _KM_CELLS,
-    mod: int = _SD_SAMPLE_MOD,
-    n_super: int = _KM_CELLS // _SD_BRANCH,
-) -> list[str]:
+def _sampled_assignment_parts(iters: int, cells: int, mod: int, n_super: int) -> list[str]:
     """The sampled-training + two-level-assignment CTE chain shared by
     `_semdedup_sampled_oracle` and `_incr_semdedup_oracle`: Lloyd
     training unrolled over the MODULAR SAMPLE (vec_id % mod = 0), a
@@ -2389,19 +2383,16 @@ def _sampled_assignment_parts(
     return parts
 
 
-def _semdedup_sampled_oracle(
-    iters: int = _KM_ITERS,
-    cells: int = _KM_CELLS,
-    tau: float = _SEMDEDUP_TAU,
-    mod: int = _SD_SAMPLE_MOD,
-    n_super: int = _KM_CELLS // _SD_BRANCH,
-) -> str:
+def _semdedup_sampled_oracle() -> str:
     """DuckDB oracle for semdedup_prune_sampled: the shared sampled
     training / two-level assignment chain, then the same pair scan /
     prune decision as `_semdedup_oracle` — the full sampled pipeline is
     value-level differential-checked."""
     return _semdedup_prune_sql(
-        _sampled_assignment_parts(iters, cells, mod, n_super), tau
+        _sampled_assignment_parts(
+            _KM_ITERS, _KM_CELLS, _SD_SAMPLE_MOD, _KM_CELLS // _SD_BRANCH
+        ),
+        _SEMDEDUP_TAU,
     )
 
 
@@ -2436,10 +2427,7 @@ def semdedup_prune_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 def semdedup_pairs_sampled(
     v: DataFrame,
     n_cells: int = _KM_CELLS,
-    iters: int = _KM_ITERS,
-    tau: float = _SEMDEDUP_TAU,
     sample_mod: int = _SD_SAMPLE_MOD,
-    branch: int = _SD_BRANCH,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """The sampled/hierarchical SemDeDup pipeline over a (vec_id, v)
@@ -2452,17 +2440,12 @@ def semdedup_pairs_sampled(
     automatically, keeping per-vector assignment work O(branch ·
     log_branch cells) instead of a fixed two-level quantizer's
     O(n_super + cells/n_super) = O(√cells)."""
-    cells = _sampled_cells(v, n_cells, iters, sample_mod, branch, seeds)
-    return _semdedup_prune_from_cells(cells, tau)
+    cells = _sampled_cells(v, n_cells, sample_mod, seeds)
+    return _semdedup_prune_from_cells(cells, _SEMDEDUP_TAU)
 
 
 def _sampled_cells(
-    v: DataFrame,
-    n_cells: int,
-    iters: int,
-    mod: int,
-    branch: int,
-    seeds: DataFrame | None,
+    v: DataFrame, n_cells: int, mod: int, seeds: DataFrame | None
 ) -> DataFrame:
     """(vec_id, cell, v): k-means trained on the modular sample
     vec_id % mod == 0 (seeds: its n_cells lowest ids, unless `seeds` is
@@ -2471,9 +2454,9 @@ def _sampled_cells(
     samp = v.filter(F.col("vec_id") % mod == 0)
     # no persist: the trained quantizer is a checkpointed one-row leaf
     cands = kmeans_train(
-        samp, iters, n_cells=n_cells, seed_below=n_cells * mod, seeds=seeds
+        samp, _KM_ITERS, n_cells=n_cells, seed_below=n_cells * mod, seeds=seeds
     )
-    return hier_assign(v, cands, n_cells=n_cells, branch=branch)
+    return hier_assign(v, cands, n_cells=n_cells)
 
 
 def hier_assign(
@@ -2614,13 +2597,7 @@ def hier_assign(
 _INCR_SD_K = _SD_SAMPLE_MOD  # 4: batch 0 doubles as the training snapshot
 
 
-def _incr_semdedup_oracle(
-    iters: int = _KM_ITERS,
-    cells: int = _KM_CELLS,
-    tau: float = _SEMDEDUP_TAU,
-    k: int = _INCR_SD_K,
-    n_super: int = _KM_CELLS // _SD_BRANCH,
-) -> str:
+def _incr_semdedup_oracle() -> str:
     """DuckDB oracle for incremental_semdedup_rounds — deliberately a
     FROM-SCRATCH recompute, not a replay of the rounds: the shared
     sampled-training / two-level-assignment chain, then ONE global pair
@@ -2632,7 +2609,10 @@ def _incr_semdedup_oracle(
     assignment CTEs are byte-identical to `_semdedup_sampled_oracle`'s
     at the registered sizing."""
     cos = _COS6
-    parts = _sampled_assignment_parts(iters, cells, mod=k, n_super=n_super)
+    k = _INCR_SD_K
+    parts = _sampled_assignment_parts(
+        _KM_ITERS, _KM_CELLS, mod=k, n_super=_KM_CELLS // _SD_BRANCH
+    )
     return f"""
     WITH {", ".join(parts)},
     pairs AS (
@@ -2650,7 +2630,7 @@ def _incr_semdedup_oracle(
            CAST(MIN(cell) AS INT) AS cell,
            CAST(MIN(ida) AS BIGINT) AS keeper_id,
            MAX(cos6) AS max_cos6
-    FROM pairs WHERE cos6 >= {tau}
+    FROM pairs WHERE cos6 >= {_SEMDEDUP_TAU}
     GROUP BY idb
     ORDER BY vec_id
     """
@@ -2701,10 +2681,7 @@ def incremental_semdedup_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 def semdedup_rounds(
     v: DataFrame,
     n_cells: int = _KM_CELLS,
-    iters: int = _KM_ITERS,
-    tau: float = _SEMDEDUP_TAU,
     k_batches: int = _INCR_SD_K,
-    branch: int = _SD_BRANCH,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """The incremental SemDeDup pipeline over a (vec_id, v) frame with
@@ -2720,7 +2697,7 @@ def semdedup_rounds(
     recompute because a vector's verdict is final the round it arrives
     (its pairs are all in-batch or vs strictly-earlier arrivals)."""
     m = persist_tracked(
-        _sampled_cells(v, n_cells, iters, k_batches, branch, seeds)
+        _sampled_cells(v, n_cells, k_batches, seeds)
         .withColumn("nrm", V.l2_norm(F.col("v")))
         .withColumn("batch_id", (F.col("vec_id") % k_batches).cast("int"))
     )
@@ -2735,7 +2712,7 @@ def semdedup_rounds(
         # a union holds; the streaming face's store is the parquet
         # read, which is already one relation.
         store = m.filter(F.col("batch_id") < k) if k else None
-        rounds.append(semdedup_pair_scan(arr, store, tau))
+        rounds.append(semdedup_pair_scan(arr, store, _SEMDEDUP_TAU))
     allp = rounds[0]
     for r in rounds[1:]:
         allp = allp.unionByName(r)
@@ -2788,7 +2765,7 @@ def _pca_power_sql_parts(mat: str, pref: str, iters: int) -> list[str]:
     return parts
 
 
-def _pca2_oracle(iters: int = _PCA_ITERS) -> str:
+def _pca2_oracle() -> str:
     """Oracle for pca_top2_projections: component 1 exactly as
     _pca_oracle, then Rayleigh-quotient deflation (C2 = C - l1*v1*v1^T)
     and a second unrolled power iteration — every step decimal-exact."""
@@ -2813,8 +2790,8 @@ def _pca2_oracle(iters: int = _PCA_ITERS) -> str:
       GROUP BY 1, 2
     )""",
     ]
-    parts = base + _pca_power_sql_parts("cov", "v", iters)
-    v1 = f"v{iters}"
+    parts = base + _pca_power_sql_parts("cov", "v", _PCA_ITERS)
+    v1 = f"v{_PCA_ITERS}"
     parts += [
         f"""wf AS (
       SELECT c.i, CAST(SUM(CAST(c.cij * p.vv AS DECIMAL(25,15))) AS DOUBLE) AS w
@@ -2831,8 +2808,8 @@ def _pca2_oracle(iters: int = _PCA_ITERS) -> str:
       FROM cov c JOIN {v1} a ON a.i = c.i JOIN {v1} b ON b.i = c.j
     )""",
     ]
-    parts += _pca_power_sql_parts("cov2", "u", iters)
-    u1 = f"u{iters}"
+    parts += _pca_power_sql_parts("cov2", "u", _PCA_ITERS)
+    u1 = f"u{_PCA_ITERS}"
     return f"""
     WITH {", ".join(parts)},
     proj1 AS (
@@ -2940,13 +2917,13 @@ def _pca_matvec(cov: DataFrame, varr: DataFrame) -> DataFrame:
     )
 
 
-def _pca_power(cov: DataFrame, iters: int = _PCA_ITERS) -> DataFrame:
-    """Power iteration over a d^2-row matrix relation; returns the
-    1-row unit-vector array frame."""
+def _pca_power(cov: DataFrame) -> DataFrame:
+    """`_PCA_ITERS` rounds of power iteration over a d^2-row matrix
+    relation; returns the 1-row unit-vector array frame."""
     varr = cov.sparkSession.range(1).select(
         F.array(*[F.lit(1.0)] * EMB_DIM).alias("vv")
     )
-    for _ in range(iters):
+    for _ in range(_PCA_ITERS):
         w = _pca_matvec(cov, varr)
         nrm = w.agg(
             F.sqrt(

@@ -55,10 +55,8 @@ from transit_feed_etl_spark.io import table, table_par
 from transit_feed_etl_spark.registry import register
 
 
-def _rev(scale: int = 4) -> F.Column:
-    return (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        f"decimal(18,{scale})"
-    )
+def _rev() -> F.Column:
+    return (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
 
 
 # --------------------------------------------------------------------------

@@ -38,6 +38,7 @@ batch unit), never per row of the flattened output.
 from __future__ import annotations
 
 import struct
+from datetime import datetime, timezone
 from typing import Iterator
 
 WT_VARINT, WT_I64, WT_LEN, WT_SGROUP, WT_EGROUP, WT_I32 = 0, 1, 2, 3, 4, 5
@@ -177,6 +178,22 @@ def decode_feed_message(payload: bytes) -> dict:
     return {"header": header, "entity": entities}
 
 
+def parse_feed_message(payload: bytes, feed_id: str, fetch_ts: datetime) -> dict:
+    """FeedMessage bytes -> one spool record in the RAW_FEED_SCHEMA shape
+    (feed_id, fetch_ts, entity[]). `fetch_ts` is written as its UTC
+    instant with a `Z` suffix, so Spark's JSON reader parses the same
+    instant in any session time zone; a naive datetime is taken as UTC.
+    NULL-guarding of absent sub-messages happens downstream in
+    `flatten_feed`."""
+    if fetch_ts.tzinfo is not None:
+        fetch_ts = fetch_ts.astimezone(timezone.utc)
+    return {
+        "feed_id": feed_id,
+        "fetch_ts": fetch_ts.strftime("%Y-%m-%dT%H:%M:%SZ"),
+        "entity": decode_feed_message(payload)["entity"],
+    }
+
+
 # --- encoder (test/fixture support: build real wire bytes without any
 # protobuf dependency; same public wire spec, written not read) ---------
 
@@ -264,7 +281,7 @@ def encode_feed_message(entities: bytes, header_ts: int = 0) -> bytes:
 # --- distributed decode ------------------------------------------------
 
 
-def decode_feed_files(spark, path: str, feed_id_from_stem: bool = True):
+def decode_feed_files(spark, path: str):
     """binaryFile scan -> mapInPandas decode -> RAW_FEED_SCHEMA rows.
 
     One decoded row per .pb FILE (feed_id from the filename stem,
@@ -288,7 +305,7 @@ def decode_feed_files(spark, path: str, feed_id_from_stem: bool = True):
                 msg = decode_feed_message(bytes(content))
                 rows.append(
                     {
-                        "feed_id": stem if feed_id_from_stem else p,
+                        "feed_id": stem,
                         "fetch_ts": mtime,
                         "entity": msg["entity"],
                     }

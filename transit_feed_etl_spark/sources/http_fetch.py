@@ -17,6 +17,8 @@ import urllib.error
 import urllib.request
 from datetime import datetime, timezone
 
+from transit_feed_etl_spark.sources.gtfs_wire import parse_feed_message
+
 
 def fetch_feed(feed: dict, timeout: float = 30.0) -> bytes:
     """GET one feed's payload. Bearer auth + custom headers parity."""
@@ -57,9 +59,10 @@ def spool_all_feeds(
     (RAW_FEED_SCHEMA-shaped), isolating per-feed failures (A8).
 
     `parser(payload: bytes, feed_id: str) -> dict` converts the raw
-    payload to the {feed_id, fetch_ts, entity: [...]} shape; defaults to
-    the protobuf adapter when available (sources/protobuf_feed.py).
-    Returns success/error counters (A22 metadata parity)."""
+    payload to the {feed_id, fetch_ts, entity: [...]} shape; by default
+    `gtfs_wire.parse_feed_message` decodes the protobuf FeedMessage and
+    stamps every record with `now` (default: the current UTC time) as a
+    UTC instant. Returns success/error counters (A22 metadata parity)."""
     os.makedirs(spool_dir, exist_ok=True)
     now = now or datetime.now(timezone.utc)
     stamp = now.strftime("%Y%m%d_%H%M%S")
@@ -68,10 +71,6 @@ def spool_all_feeds(
         try:
             payload = fetch_with_retry(feed)
             if parser is None:
-                from transit_feed_etl_spark.sources.protobuf_feed import (
-                    parse_feed_message,
-                )
-
                 record = parse_feed_message(payload, feed["id"], now)
             else:
                 record = parser(payload, feed["id"])

@@ -2,8 +2,15 @@
 (A23, reference gtfs_rt_assets.py:248-257) as ONE streaming query:
 
   spool dir (fetched feed files) -> flatten -> validate/quarantine ->
-  partitioned parquet sink + catalog commit + quality check, all inside
-  foreachBatch.
+  time-partitioned GeoParquet sink + catalog commit + quality check, all
+  inside foreachBatch.
+
+The sink has one format, GeoParquet, as the reference writes
+(gtfs_rt_assets.py:122-141): a WKB `geometry` column and a `geo` footer
+on every sink file. The quarantine holds the same columns. The
+`geoparquet` keyword of `make_batch_processor` and `start_ingest`
+remains only so existing callers that pass ``geoparquet=True`` keep
+working; any other value raises `ValueError`.
 
 Each tick is one Spark job, which collects the flattened batch to the
 driver as Arrow, and one driver pass that writes the hour files, the
@@ -37,14 +44,15 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from transit_feed_etl_spark.pipeline.catalog import FileCatalog, table_catalog_row
 from transit_feed_etl_spark.pipeline.geoparquet import geo_footer, wkb_point
 from transit_feed_etl_spark.pipeline.gtfs import (
+    CRS,
     PARTITION_COLS,
     RAW_FEED_SCHEMA,
     flatten_feed,
-    geometry_columns,
     out_of_range,
     time_partition_columns,
     write_partitioned,  # noqa: F401  kept as a module attribute: perfbench's tracer wraps it
@@ -92,25 +100,30 @@ def _hours(t: pa.Table) -> list[tuple[str, pa.Table]]:
     return out
 
 
+def _check_sink_format(geoparquet: bool) -> None:
+    if geoparquet is not True:
+        raise ValueError("the ingest sink writes GeoParquet only: geoparquet must be True")
+
+
 def make_batch_processor(
     out_root: str,
     catalog: FileCatalog,
     quarantine_root: str | None = None,
-    geoparquet: bool = False,
+    geoparquet: bool = True,
 ):
-    """foreachBatch sink implementing A8/A10/A12/A14-A16/A21.
+    """foreachBatch sink implementing A8/A10-A12/A14-A16/A21.
 
-    Spark flattens the batch in one projection, adding the point
-    `geometry`, `crs`, the out-of-range flag `_q`, the hour partition
-    columns and, for GeoParquet, the WKB point `_wkb`, and hands it to
-    the driver as one Arrow table: the batch's only Spark job, with no
-    exchange and nothing written to disk. The driver then writes:
+    Spark flattens the batch in one projection, adding the WKB point
+    `geometry`, `crs`, the out-of-range flag `_q` and the hour partition
+    columns, and hands it to the driver as one Arrow table: the batch's
+    only Spark job, with no exchange and nothing written to disk. The
+    driver then writes:
       - each hour's good rows to `<hour>/part-<batch>-<call>.parquet` in
         the sink, in hour order, with the `geo` footer (per-file bbox,
-        EPSG:4326) when ``geoparquet=True`` (full A12 GeoParquet parity in
-        the live pipeline, reference gtfs_rt_assets.py:122-141; the WKB
-        column replaces the struct geometry);
-      - the batch's out-of-range rows to one quarantine file (A8);
+        EPSG:4326): A12 GeoParquet parity, reference
+        gtfs_rt_assets.py:122-141;
+      - the batch's out-of-range rows, with the same columns, to one
+        quarantine file (A8);
       - one catalog row per hour partition with good rows: count, bbox
         and latest ts over those rows, as `catalog_aggs` computes them
         (the reference's one-file-per-run template adapted to a
@@ -129,13 +142,18 @@ def make_batch_processor(
     empty-batch guard, gtfs_rt_assets.py:114-116). The driver holds the
     whole batch (`start_ingest` caps its size) and writes the sink and
     the quarantine, so they are local (or locally mounted) paths, as the
-    catalog already is."""
+    catalog already is. `geoparquet` accepts only True (module
+    docstring)."""
+    _check_sink_format(geoparquet)
     metrics = IngestMetrics()
     # the columns the batch gains in its one projection, built once: each
     # Column costs the driver a round trip to the JVM per node
-    cols = {**geometry_columns(), "_q": out_of_range(), **time_partition_columns()}
-    if geoparquet:
-        cols["_wkb"] = wkb_point("longitude", "latitude")
+    cols = {
+        "geometry": wkb_point("longitude", "latitude"),
+        "crs": F.lit(CRS),
+        "_q": out_of_range(),
+        **time_partition_columns(),
+    }
     version = catalog.spark.version.encode()
 
     def process(batch: DataFrame, batch_id: int) -> None:
@@ -145,35 +163,36 @@ def make_batch_processor(
         # Spark's TimestampType arrives tz-aware; Spark's own parquet files
         # hold the same UTC instants as naive microseconds
         t = t.set_column(t.schema.get_field_index("ts"), "ts", t["ts"].cast(pa.timestamp("us")))
-        spark_fields = {f.name: f.jsonValue() for f in df.schema}
-        keep = [c for c in df.columns if c not in (*PARTITION_COLS, "_q", "_wkb")]
-        wkb = "_wkb" if geoparquet else "geometry"
-        good_src = {c: wkb if c == "geometry" else c for c in keep}
+        fields = [f for f in df.schema if f.name not in (*PARTITION_COLS, "_q")]
+        keep = [f.name for f in fields]
+        spark_meta = {
+            _SPARK_VERSION: version,
+            _SPARK_SCHEMA: json.dumps(
+                {"type": "struct", "fields": [f.jsonValue() for f in fields]}
+            ).encode(),
+        }
         moves: list[tuple[str, str]] = []  # (temp name, final name)
 
-        def write(t: pa.Table, src: dict[str, str], final: str) -> None:
-            """Write the columns `src` maps (output name -> batch column)
-            under a temp name for `final`, with Spark's schema for them."""
-            meta = {**(t.schema.metadata or {}), _SPARK_VERSION: version}
-            meta[_SPARK_SCHEMA] = json.dumps(
-                {"type": "struct", "fields": [{**spark_fields[s], "name": o} for o, s in src.items()]}
-            ).encode()
-            out = pa.table([t[s] for s in src.values()], names=list(src))
+        def write(t: pa.Table, final: str) -> None:
+            """Write the kept columns of `t` under a temp name for `final`,
+            with Spark's schema for them."""
+            # built from the columns, so every field is optional, as in
+            # the files Spark writes
+            out = pa.table([t[c] for c in keep], names=keep)
             head, tail = os.path.split(final)
             os.makedirs(head, exist_ok=True)
             moves.append((os.path.join(head, f".{tail}.tmp"), final))
+            meta = {**(t.schema.metadata or {}), **spark_meta}
             pq.write_table(out.replace_schema_metadata(meta), moves[-1][0])
 
         bad = t.filter(t["_q"])
         rows = []
         try:
             for rel, good in _hours(t.filter(pc.invert(t["_q"]))):
-                if geoparquet:
-                    good = geo_footer(good)
-                write(good, good_src, os.path.join(out_root, rel, name))
+                write(geo_footer(good), os.path.join(out_root, rel, name))
                 rows.append({**table_catalog_row(good), "file_path": f"{out_root}/{rel}"})
             if bad.num_rows and quarantine_root:
-                write(bad, {c: c for c in keep}, os.path.join(quarantine_root, name))
+                write(bad, os.path.join(quarantine_root, name))
             for tmp, final in moves:
                 os.replace(tmp, final)
             catalog.commit_rows(batch_id, rows)
@@ -203,17 +222,18 @@ def start_ingest(
     quarantine_root: str | None = None,
     processing_time: str | None = "60 seconds",
     available_now: bool = False,
-    geoparquet: bool = False,
+    geoparquet: bool = True,
 ):
-    """Start the ingestion stream. `available_now=True` drains the spool
+    """Start the ingestion stream into the GeoParquet sink
+    (`make_batch_processor`). `available_now=True` drains the spool
     and stops (catch-up/backfill mode); otherwise a 60 s trigger matches
     the reference's cron cadence (gtfs_rt_assets.py:255). A micro-batch
     reads at most `MAX_BYTES_PER_TRIGGER` bytes of spool (at least one
-    file), so a backlog drains in several batches."""
+    file), so a backlog drains in several batches. `geoparquet` accepts
+    only True and is checked before any Spark work (module docstring)."""
+    _check_sink_format(geoparquet)
     catalog = FileCatalog(spark, catalog_path)
-    process, metrics = make_batch_processor(
-        out_root, catalog, quarantine_root, geoparquet=geoparquet
-    )
+    process, metrics = make_batch_processor(out_root, catalog, quarantine_root)
     raw = (
         spark.readStream.schema(RAW_FEED_SCHEMA)
         .option("maxBytesPerTrigger", MAX_BYTES_PER_TRIGGER)
